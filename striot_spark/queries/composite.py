@@ -10,7 +10,6 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from striot_spark.tempdirs import striot_mkdtemp
 from striot_spark.functions.analytics import cents, ts_str
 from striot_spark.operators import ChopTime, Complete, SlidingTime
 from striot_spark.operators.windows import Chop
@@ -83,20 +82,15 @@ def q31_joinw(spark: SparkSession, sf_dir: str) -> DataFrame:
     "drain form",
 )
 def q87_joinw_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from striot_spark.functions.analytics import sum_money
     from striot_spark.queries.flagship import _stage_events
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    tag = uuid.uuid4().hex[:8]
-
-    purchases = RT.file_stream(spark, src, schema).filter(
+    purchases = RT.file_stream(spark, src).filter(
         F.col("event_type") == "purchase"
     )
-    clicks = RT.file_stream(spark, src, schema).filter(
+    clicks = RT.file_stream(spark, src).filter(
         F.col("event_type") == "click"
     )
     lw = RT.window_agg_stream(
@@ -113,18 +107,8 @@ def q87_joinw_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         {"n_clicks": F.count(F.lit(1))},
         watermark="1 minute",
     )
-    ld = RT.run_available_now(
-        lw,
-        f"q87_l_{tag}",
-        striot_mkdtemp(prefix="striot_q87_lck_"),
-        mode="complete",
-    )
-    rd = RT.run_available_now(
-        rw,
-        f"q87_r_{tag}",
-        striot_mkdtemp(prefix="striot_q87_rck_"),
-        mode="complete",
-    )
+    ld = RT.run_available_now(lw, mode="complete", source_path=src)
+    rd = RT.run_available_now(rw, mode="complete", source_path=src)
     # finalize tier: left-start containment alignment (join_w's rule)
     l = ld.select(
         F.col("window_start").cast("long").alias("left_window"), "revenue"
@@ -186,18 +170,15 @@ def q87_joinw_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q93_joinw_stream_non_nesting(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import uuid
-
     from striot_spark.queries.flagship import _stage_events
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events(spark, sf_dir)
     ev = spark.read.parquet(src)
-    schema = ev.schema
-    purchases = RT.file_stream(spark, src, schema).filter(
+    purchases = RT.file_stream(spark, src).filter(
         F.col("event_type") == "purchase"
     )
-    clicks = RT.file_stream(spark, src, schema).filter(
+    clicks = RT.file_stream(spark, src).filter(
         F.col("event_type") == "click"
     )
     out = RT.join_w_stream(
@@ -213,10 +194,9 @@ def q93_joinw_stream_non_nesting(
     )
     drained = RT.run_available_now(
         out,
-        f"q93_joinw_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q93_ck_"),
         mode="append",
         expect_data_batches=1,
+        source_path=src,
     )
     # final watermark in exact integer microseconds: min over sides of
     # the side's max event time, minus the 60s watermark delay

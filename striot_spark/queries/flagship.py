@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from striot_spark.tempdirs import striot_mkdtemp
+from striot_spark.tempdirs import staged, striot_mkdtemp
 from striot_spark.functions.analytics import day_str, topk
 from striot_spark.queries.registry import register
 from striot_spark.sources.batch import load_table
@@ -80,8 +80,8 @@ def q30_frequent_routes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def frequent_routes_stream(
     spark: SparkSession,
     events_path: str,
-    schema,
-    checkpoint_dir: str,
+    schema=None,
+    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Streaming lowering of the flagship frequentRoutes pipeline.
 
@@ -102,7 +102,8 @@ def frequent_routes_stream(
     """
     from striot_spark.streaming import runtime as RT
 
-    sdf = RT.file_stream(spark, events_path, schema).filter(F.col("value") >= 0)
+    sdf = RT.file_stream(spark, events_path, schema)
+    sdf = sdf.filter(F.col("value") >= 0)
     counts = RT.window_agg_stream(
         sdf,
         "ts",
@@ -112,7 +113,10 @@ def frequent_routes_stream(
         watermark="1 minute",
     )
     drained = RT.run_available_now(
-        counts, "fr_stream_counts", checkpoint_dir, mode="complete"
+        counts,
+        checkpoint_dir=checkpoint_dir,
+        mode="complete",
+        source_path=events_path,
     )
     ranked = (
         drained.withColumn("day", day_str(F.col("window_start")))
@@ -145,14 +149,11 @@ def frequent_routes_stream(
 
 # -- streaming flagship under the correctness gate ---------------------------
 
-_STAGED: dict[str, str] = {}
-
-
 def _stage_events(spark: SparkSession, sf_dir: str) -> str:
     """Stage the events table as a streaming-source directory (the file
     source lists a directory; the testdata dir mixes all tables, and its
-    TIMESTAMP(NANOS) encoding needs the load_table shim anyway). Cached
-    per sf_dir for the process lifetime.
+    TIMESTAMP(NANOS) encoding needs the load_table shim anyway). Staged
+    once per sf_dir for the process lifetime.
 
     Written as EXACTLY ONE parquet file, globally sorted by
     (ts, event_id). The file source's offsets are file-granular — a
@@ -169,15 +170,13 @@ def _stage_events(spark: SparkSession, sf_dir: str) -> str:
     (ts, event_id) order, so even order-sensitive operators that do NOT
     re-sort see the canonical sequence."""
 
-    path = _STAGED.get(sf_dir)
-    if path is not None:
-        return path
-    out = striot_mkdtemp(prefix="striot_fr_stream_src_")
-    load_table(spark, sf_dir, "events").repartition(1).sortWithinPartitions(
-        "ts", "event_id"
-    ).write.mode("overwrite").parquet(out)
-    _STAGED[sf_dir] = out
-    return out
+    def write(out: str):
+        ev = load_table(spark, sf_dir, "events").repartition(1)
+        ev = ev.sortWithinPartitions("ts", "event_id")
+        ev.write.mode("overwrite").parquet(out)
+        return ev.schema
+
+    return staged(sf_dir, "striot_fr_stream_src_", write)
 
 
 # barrier sentinel ids: real event_id/user_id are non-negative bigints
@@ -189,6 +188,24 @@ from striot_spark.queries.events_ops import (  # noqa: E402
     BURST_ORACLE,
     DEBOUNCE_ORACLE_CTE,
 )
+
+
+def _barrier_row(base: DataFrame, ts) -> DataFrame:
+    """One fabricated event shaped like ``base``, at ``ts`` under its
+    own key (``BARRIER_USER``): the row a replay stages last to push
+    its final watermark past every real event."""
+    special = {
+        "event_id": F.lit(-1).cast("long"),
+        "user_id": F.lit(BARRIER_USER).cast("long"),
+        "event_type": F.lit("__barrier__"),
+        "ts": F.lit(ts),
+    }
+    return base.limit(1).select(
+        *[
+            special.get(f.name, F.lit(None).cast(f.dataType)).alias(f.name)
+            for f in base.schema.fields
+        ]
+    )
 
 
 def _stage_events_barrier(
@@ -208,30 +225,20 @@ def _stage_events_barrier(
     is invisible in any output by construction."""
     import datetime as _dt
 
-    ck = (sf_dir, "barrier", int(barrier_hours))
-    path = _STAGED.get(ck)
-    if path is not None:
-        return path
-    base = load_table(spark, sf_dir, "events")
-    mx = base.agg(F.max("ts")).first()[0]
-    special = {
-        "event_id": F.lit(-1).cast("long"),
-        "user_id": F.lit(BARRIER_USER).cast("long"),
-        "event_type": F.lit("__barrier__"),
-        "ts": F.lit(mx + _dt.timedelta(hours=int(barrier_hours))),
-    }
-    barrier = base.limit(1).select(
-        *[
-            special.get(f.name, F.lit(None).cast(f.dataType)).alias(f.name)
-            for f in base.schema.fields
-        ]
+    def write(out: str):
+        base = load_table(spark, sf_dir, "events")
+        mx = base.agg(F.max("ts")).first()[0]
+        barrier = _barrier_row(
+            base, mx + _dt.timedelta(hours=int(barrier_hours))
+        )
+        ev = base.unionByName(barrier).repartition(1)
+        ev = ev.sortWithinPartitions("ts", "event_id")
+        ev.write.mode("overwrite").parquet(out)
+        return ev.schema
+
+    return staged(
+        (sf_dir, int(barrier_hours)), "striot_fr_stream_srcb_", write
     )
-    out = striot_mkdtemp(prefix="striot_fr_stream_srcb_")
-    base.unionByName(barrier).repartition(1).sortWithinPartitions(
-        "ts", "event_id"
-    ).write.mode("overwrite").parquet(out)
-    _STAGED[ck] = out
-    return out
 
 
 def _stage_events_ooo(spark: SparkSession, sf_dir: str) -> str:
@@ -255,38 +262,24 @@ def _stage_events_ooo(spark: SparkSession, sf_dir: str) -> str:
 
     from striot_spark.streaming.runtime import stage_ordered_files
 
-    ck = (sf_dir, "ooo")
-    path = _STAGED.get(ck)
-    if path is not None:
-        return path
-    base = load_table(spark, sf_dir, "events")
-    n = base.count()
-    evr = base.withColumn(
-        "rn", F.row_number().over(Window.orderBy("ts", "event_id"))
-    )
-    third = n // 3
-    a = evr.filter(F.col("rn") <= third).drop("rn")
-    b = evr.filter((F.col("rn") > third) & (F.col("rn") <= 2 * third)).drop(
-        "rn"
-    )
-    c = evr.filter(F.col("rn") > 2 * third).drop("rn")
-    mx = base.agg(F.max("ts")).first()[0]
-    special = {
-        "event_id": F.lit(-1).cast("long"),
-        "user_id": F.lit(BARRIER_USER).cast("long"),
-        "event_type": F.lit("__barrier__"),
-        "ts": F.lit(mx + _dt.timedelta(days=365, hours=1)),
-    }
-    barrier = base.limit(1).select(
-        *[
-            special.get(f.name, F.lit(None).cast(f.dataType)).alias(f.name)
-            for f in base.schema.fields
-        ]
-    )
-    out = striot_mkdtemp(prefix="striot_fr_stream_srco_") + "/data"
-    stage_ordered_files([b, a, c, barrier], out)
-    _STAGED[ck] = out
-    return out
+    def write(out: str):
+        base = load_table(spark, sf_dir, "events")
+        n = base.count()
+        evr = base.withColumn(
+            "rn", F.row_number().over(Window.orderBy("ts", "event_id"))
+        )
+        third = n // 3
+        a = evr.filter(F.col("rn") <= third).drop("rn")
+        b = evr.filter(
+            (F.col("rn") > third) & (F.col("rn") <= 2 * third)
+        ).drop("rn")
+        c = evr.filter(F.col("rn") > 2 * third).drop("rn")
+        mx = base.agg(F.max("ts")).first()[0]
+        barrier = _barrier_row(base, mx + _dt.timedelta(days=365, hours=1))
+        stage_ordered_files([b, a, c, barrier], out)
+        return base.schema
+
+    return staged(sf_dir, "striot_fr_stream_srco_", write)
 
 
 @register(
@@ -299,11 +292,7 @@ def _stage_events_ooo(spark: SparkSession, sf_dir: str) -> str:
     "DuckDB oracle as batch q30 (Taxi.hs:173-178)",
 )
 def q65_frequent_routes_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-
-    src = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    ck = striot_mkdtemp(prefix="striot_fr_stream_ck_")
-    return frequent_routes_stream(spark, src, schema, ck)
+    return frequent_routes_stream(spark, _stage_events(spark, sf_dir))
 
 
 from striot_spark.queries.events_ops import CENTS_SQL as _Q78_CENTS
@@ -324,14 +313,11 @@ from striot_spark.queries.events_ops import CENTS_SQL as _Q78_CENTS
     "semantics parity is driver-visible, not only locally tested",
 )
 def q78_window_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from striot_spark.functions.analytics import avg_money, sum_money
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema)
+    sdf = RT.file_stream(spark, src)
     counts = RT.window_agg_stream(
         sdf,
         "ts",
@@ -343,12 +329,7 @@ def q78_window_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
         watermark="1 minute",
     )
-    drained = RT.run_available_now(
-        counts,
-        f"q78_winagg_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q78_ck_"),
-        mode="complete",
-    )
+    drained = RT.run_available_now(counts, mode="complete", source_path=src)
     return drained.select(
         day_str(F.col("window_start")).alias("day"),
         "n",
@@ -388,14 +369,11 @@ from striot_spark.queries.events_ops import TS_FMT as _TS_FMT
     "session_start, n) — third driver-visible streaming parity row",
 )
 def q86_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from striot_spark.functions.analytics import ts_str
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema)
+    sdf = RT.file_stream(spark, src)
     agg = RT.session_agg_stream(
         sdf,
         "ts",
@@ -404,12 +382,7 @@ def q86_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         key=["user_id"],
         watermark="1 minute",
     )
-    drained = RT.run_available_now(
-        agg,
-        f"q86_sess_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q86_ck_"),
-        mode="complete",
-    )
+    drained = RT.run_available_now(agg, mode="complete", source_path=src)
     return drained.select(
         "user_id",
         ts_str(F.col("session_start")).alias("session_start"),
@@ -419,9 +392,6 @@ def q86_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- taxi CSV dead-letter entry path under the correctness gate --------------
 
-_STAGED_CSV: dict[str, str] = {}
-
-
 def _stage_taxi_csv(spark: SparkSession, sf_dir: str) -> str:
     """Render the events table as DEBS-taxi-format CSV text
     (``sources/csv.py`` F2 schema, 17 fields) with DETERMINISTIC damage
@@ -430,49 +400,49 @@ def _stage_taxi_csv(spark: SparkSession, sf_dir: str) -> str:
     blank line — the two malformed-line shapes the dead-letter split
     must route to rejects. Because the damage rule is arithmetic on
     event_id, the DuckDB oracle can state the expected good/reject
-    partition directly over the events view. Cached per sf_dir."""
+    partition directly over the events view. Staged once per sf_dir."""
 
     from striot_spark.functions.analytics import cents
 
-    path = _STAGED_CSV.get(sf_dir)
-    if path is not None:
-        return path
-    ev = load_table(spark, sf_dir, "events")
-    ts_s = F.date_format(F.col("ts"), "yyyy-MM-dd HH:mm:ss")
-    fields = [
-        F.concat(F.lit("M"), F.col("user_id").cast("string")),
-        F.concat(F.lit("H"), F.col("user_id").cast("string")),
-        ts_s,
-        ts_s,
-        F.pmod(F.col("event_id"), F.lit(3600)).cast("int").cast("string"),
-        F.lit("1.5"),
-        # constant coords well inside the valid Q1 grid (cell math is
-        # float32; boundary-dependent values would make in_range flaky)
-        F.lit("-73.98"),
-        F.lit("40.75"),
-        F.lit("-73.97"),
-        F.lit("40.74"),
-        F.col("event_type"),
-        F.lit("10.0"),
-        F.lit("0.5"),
-        F.lit("0.5"),
-        F.lit("1.0"),
-        F.lit("0.0"),
-        # integer cents as the float field's text: exact in float32 and
-        # recoverable exactly with a long cast (no float-text round-trip)
-        cents(F.col("value")).cast("string"),
-    ]
-    line = (
-        F.when(F.col("event_id") % 101 == 0, F.lit("CORRUPT"))
-        .when(F.col("event_id") % 103 == 0, F.lit(""))
-        .otherwise(F.concat_ws(",", *fields))
-    )
-    out = striot_mkdtemp(prefix="striot_taxi_csv_")
-    ev.select(line.alias("value")).repartition(2).write.mode(
-        "overwrite"
-    ).text(out)
-    _STAGED_CSV[sf_dir] = out
-    return out
+    def write(out: str) -> None:
+        ev = load_table(spark, sf_dir, "events")
+        ts_s = F.date_format(F.col("ts"), "yyyy-MM-dd HH:mm:ss")
+        fields = [
+            F.concat(F.lit("M"), F.col("user_id").cast("string")),
+            F.concat(F.lit("H"), F.col("user_id").cast("string")),
+            ts_s,
+            ts_s,
+            F.pmod(F.col("event_id"), F.lit(3600))
+            .cast("int")
+            .cast("string"),
+            F.lit("1.5"),
+            # constant coords well inside the valid Q1 grid (cell math is
+            # float32; boundary-dependent values would make in_range flaky)
+            F.lit("-73.98"),
+            F.lit("40.75"),
+            F.lit("-73.97"),
+            F.lit("40.74"),
+            F.col("event_type"),
+            F.lit("10.0"),
+            F.lit("0.5"),
+            F.lit("0.5"),
+            F.lit("1.0"),
+            F.lit("0.0"),
+            # integer cents as the float field's text: exact in float32
+            # and recoverable exactly with a long cast (no float-text
+            # round-trip)
+            cents(F.col("value")).cast("string"),
+        ]
+        line = (
+            F.when(F.col("event_id") % 101 == 0, F.lit("CORRUPT"))
+            .when(F.col("event_id") % 103 == 0, F.lit(""))
+            .otherwise(F.concat_ws(",", *fields))
+        )
+        ev.select(line.alias("value")).repartition(2).write.mode(
+            "overwrite"
+        ).text(out)
+
+    return staged(sf_dir, "striot_taxi_csv_", write)
 
 
 @register(
@@ -520,33 +490,27 @@ def q88_taxi_csv_dead_letter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.unionByName(rej)
 
 
-_STAGED_JSONL: dict[str, str] = {}
-
-
 def _stage_docs_jsonl(spark: SparkSession, sf_dir: str) -> str:
     """Render the documents table as JSONL text with DETERMINISTIC
     damage (q88's recipe on the LLM-data interchange format): every doc
     with ``doc_id % 101 == 0`` becomes a malformed JSON line, every
     remaining ``% 103 == 0`` a blank line. Arithmetic damage rule →
     the DuckDB oracle states the good/reject partition directly over
-    the documents view. Cached per sf_dir."""
+    the documents view. Staged once per sf_dir."""
 
-    path = _STAGED_JSONL.get(sf_dir)
-    if path is not None:
-        return path
-    docs = load_table(spark, sf_dir, "documents")
-    payload = F.to_json(F.struct("doc_id", "lang", "n_chars"))
-    line = (
-        F.when(F.col("doc_id") % 101 == 0, F.lit('{"doc_id": CORRUPT'))
-        .when(F.col("doc_id") % 103 == 0, F.lit(""))
-        .otherwise(payload)
-    )
-    out = striot_mkdtemp(prefix="striot_docs_jsonl_")
-    docs.select(line.alias("value")).repartition(2).write.mode(
-        "overwrite"
-    ).text(out)
-    _STAGED_JSONL[sf_dir] = out
-    return out
+    def write(out: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        payload = F.to_json(F.struct("doc_id", "lang", "n_chars"))
+        line = (
+            F.when(F.col("doc_id") % 101 == 0, F.lit('{"doc_id": CORRUPT'))
+            .when(F.col("doc_id") % 103 == 0, F.lit(""))
+            .otherwise(payload)
+        )
+        docs.select(line.alias("value")).repartition(2).write.mode(
+            "overwrite"
+        ).text(out)
+
+    return staged(sf_dir, "striot_docs_jsonl_", write)
 
 
 @register(
@@ -631,16 +595,11 @@ from striot_spark.queries.events_ops import TS_FMT as _TS_FMT_Q89
     "accumulator adds exact integers (no cross-engine float rounding)",
 )
 def q89_scan_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from striot_spark.functions.analytics import cents, ts_str
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema).withColumn(
-        "cents", cents(F.col("value"))
-    )
+    sdf = RT.file_stream(spark, src).withColumn("cents", cents(F.col("value")))
     out = RT.scan_stream(
         sdf,
         step=lambda acc, row: acc + row["cents"],
@@ -651,12 +610,7 @@ def q89_scan_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         time_col="ts",
         state_type="acc bigint",
     )
-    drained = RT.run_available_now(
-        out,
-        f"q89_scan_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q89_ck_"),
-        mode="append",
-    )
+    drained = RT.run_available_now(out, mode="append", source_path=src)
     # finalize: (user_id, ts) is unique in this data, but the grouped
     # form stays exact even under timestamp ties (max running == total
     # through that instant, independent of within-tie order)
@@ -683,13 +637,10 @@ def q89_scan_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hash-checked against the batch lag oracle",
 )
 def q90_filteracc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema)
+    sdf = RT.file_stream(spark, src)
     out = RT.filter_acc_stream(
         sdf,
         step=lambda acc, row: (row["event_type"],),
@@ -704,12 +655,7 @@ def q90_filteracc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # instead of relying on (user_id, ts) uniqueness in the data
         tiebreak="event_id",
     )
-    drained = RT.run_available_now(
-        out,
-        f"q90_facc_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q90_ck_"),
-        mode="append",
-    )
+    drained = RT.run_available_now(out, mode="append", source_path=src)
     return drained.select("user_id", "event_id")
 
 
@@ -735,16 +681,11 @@ def q90_filteracc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sliding-count q91) are now correctness-gate-verified",
 )
 def q91_sliding_count_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from striot_spark.functions.analytics import cents, ts_str
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema).withColumn(
-        "cents", cents(F.col("value"))
-    )
+    sdf = RT.file_stream(spark, src).withColumn("cents", cents(F.col("value")))
     out = RT.sliding_count_stream(
         sdf,
         n=3,
@@ -758,12 +699,7 @@ def q91_sliding_count_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # deterministic under timestamp ties, not data-uniqueness luck
         tiebreak="event_id",
     )
-    drained = RT.run_available_now(
-        out,
-        f"q91_slide_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q91_ck_"),
-        mode="append",
-    )
+    drained = RT.run_available_now(out, mode="append", source_path=src)
     return drained.select(
         "user_id",
         ts_str(F.col("ts")).alias("ts"),
@@ -792,15 +728,12 @@ def q91_sliding_count_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the call-site note in streaming/runtime.py:scan_stream",
 )
 def q92_scan_stream_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from striot_spark.functions.analytics import cents, ts_str
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
     sdf = (
-        RT.file_stream(spark, src, schema)
+        RT.file_stream(spark, src)
         .withColumn("cents", cents(F.col("value")))
         # the constant key = the reference's single total order; any
         # literal works, the state store holds exactly one accumulator
@@ -820,10 +753,9 @@ def q92_scan_stream_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     drained = RT.run_available_now(
         out,
-        f"q92_gscan_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q92_ck_"),
         mode="append",
         expect_data_batches=1,
+        source_path=src,
     )
     # finalize with the LAST row per tied instant in (ts, event_id)
     # order: its accumulator is the total through that instant by
@@ -867,16 +799,11 @@ def q92_scan_stream_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     "where an unfilled window never materializes",
 )
 def q100_chop_count_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from striot_spark.functions.analytics import cents, ts_str
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events_barrier(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema).withColumn(
-        "cents", cents(F.col("value"))
-    )
+    sdf = RT.file_stream(spark, src).withColumn("cents", cents(F.col("value")))
     out = RT.chop_count_stream(
         sdf,
         n=5,
@@ -893,10 +820,9 @@ def q100_chop_count_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     drained = RT.run_available_now(
         out,
-        f"q100_chop_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q100_ck_"),
         mode="append",
         expect_data_batches=1,
+        source_path=src,
     )
     return drained.filter(F.col("user_id") != BARRIER_USER).select(
         "user_id", "window_ordinal", ts_str(F.col("ts")).alias("ts"), "sum_c"
@@ -924,13 +850,10 @@ def q100_chop_count_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q97_filteracc_stream_global(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import uuid
-
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema).withColumn("g", F.lit(0))
+    sdf = RT.file_stream(spark, src).withColumn("g", F.lit(0))
     out = RT.filter_acc_stream(
         sdf,
         step=lambda acc, row: (row["event_type"],),
@@ -942,12 +865,7 @@ def q97_filteracc_stream_global(
         state_type="prev string",
         tiebreak="event_id",
     )
-    drained = RT.run_available_now(
-        out,
-        f"q97_gfacc_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q97_ck_"),
-        mode="append",
-    )
+    drained = RT.run_available_now(out, mode="append", source_path=src)
     return drained.select("event_id")
 
 
@@ -980,15 +898,12 @@ def q97_filteracc_stream_global(
 def q101_sliding_stream_ooo_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import uuid
-
     from striot_spark.functions.analytics import cents, ts_str
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events_ooo(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
     sdf = RT.file_stream(
-        spark, src, schema, max_files_per_trigger=1
+        spark, src, max_files_per_trigger=1
     ).withColumn("cents", cents(F.col("value")))
     out = RT.sliding_count_stream(
         sdf,
@@ -1005,10 +920,9 @@ def q101_sliding_stream_ooo_replay(
     )
     drained = RT.run_available_now(
         out,
-        f"q101_ooo_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q101_ck_"),
         mode="append",
         expect_data_batches=4,
+        source_path=src,
     )
     return drained.filter(F.col("user_id") != BARRIER_USER).select(
         "user_id", ts_str(F.col("ts")).alias("ts"), "s3c"
@@ -1074,24 +988,16 @@ from striot_spark.queries.events_ops import CENTS_SQL as _CENTS_SQL_Q108
 def q108_stream_static_enrich(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import uuid
-
     from striot_spark.functions.analytics import sum_money
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema)
+    sdf = RT.file_stream(spark, src)
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     joined = RT.enrich_stream(sdf, dim, on="user_id", how="left")
-    drained = RT.run_available_now(
-        joined,
-        f"q108_enrich_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q108_ck_"),
-        mode="append",
-    )
+    drained = RT.run_available_now(joined, mode="append", source_path=src)
     return drained.groupBy(
         F.coalesce(F.col("c_mktsegment"), F.lit("unknown")).alias("segment")
     ).agg(
@@ -1124,14 +1030,11 @@ def q108_stream_static_enrich(
     "its two covering windows and aggregates — exact cents",
 )
 def q111_sliding_time_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from striot_spark.functions.analytics import sum_money
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema)
+    sdf = RT.file_stream(spark, src)
     counts = RT.window_agg_stream(
         sdf,
         "ts",
@@ -1143,12 +1046,7 @@ def q111_sliding_time_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="1 minute",
         slide="1 day",
     )
-    drained = RT.run_available_now(
-        counts,
-        f"q111_slidet_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q111_ck_"),
-        mode="complete",
-    )
+    drained = RT.run_available_now(counts, mode="complete", source_path=src)
     return drained.select(
         day_str(F.col("window_start")).alias("window_start"),
         day_str(F.col("window_end")).alias("window_end"),
@@ -1178,13 +1076,10 @@ def q111_sliding_time_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q115_daily_distinct_stream(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import uuid
-
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events_barrier(spark, sf_dir, barrier_hours=48)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema)
+    sdf = RT.file_stream(spark, src)
     s1 = (
         sdf.withWatermark("ts", "0 seconds")
         .groupBy(F.window("ts", "1 day"), F.col("user_id"))
@@ -1196,10 +1091,9 @@ def q115_daily_distinct_stream(
     )
     drained = RT.run_available_now(
         s2,
-        f"q115_ddistinct_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q115_ck_"),
         mode="append",
         expect_data_batches=1,
+        source_path=src,
     )
     return drained.select(
         day_str(F.col("window.start")).alias("day"),
@@ -1237,15 +1131,12 @@ def q115_daily_distinct_stream(
 def q116_interval_join_stream(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import uuid
-
     from striot_spark.functions.analytics import cents
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
     clicks = (
-        RT.file_stream(spark, src, schema)
+        RT.file_stream(spark, src)
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -1254,7 +1145,7 @@ def q116_interval_join_stream(
         )
     )
     purchases = (
-        RT.file_stream(spark, src, schema)
+        RT.file_stream(spark, src)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -1273,12 +1164,7 @@ def q116_interval_join_stream(
         3600.0,
         watermark="1 minute",
     )
-    drained = RT.run_available_now(
-        out,
-        f"q116_ij_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q116_ck_"),
-        mode="append",
-    )
+    drained = RT.run_available_now(out, mode="append", source_path=src)
     return drained.select(
         "click_id",
         "purchase_id",
@@ -1314,16 +1200,13 @@ _EPOCH_S_Q117 = "(epoch_us(ts) // 1000000)"
     "Inner join emits on arrival — single-batch drain, no barrier",
 )
 def q117_joine_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    purchases = RT.file_stream(spark, src, schema).filter(
+    purchases = RT.file_stream(spark, src).filter(
         F.col("event_type") == "purchase"
     ).select("event_id", "ts", "value")
-    errors = RT.file_stream(spark, src, schema).filter(
+    errors = RT.file_stream(spark, src).filter(
         F.col("event_type") == "error"
     ).select("event_id", "ts", "value")
     out = RT.join_e_stream(
@@ -1337,12 +1220,7 @@ def q117_joine_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the pre-sink projection prunes ts_l/ts_r: a stream must reach the
     # sink with at most ONE event-time lineage (__win), or the join's
     # watermark-propagation rule refuses the plan
-    drained = RT.run_available_now(
-        out,
-        f"q117_je_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q117_ck_"),
-        mode="append",
-    )
+    drained = RT.run_available_now(out, mode="append", source_path=src)
     return drained.select(
         "window_id",
         F.col("event_id_l").alias("purchase_id"),
@@ -1372,15 +1250,12 @@ from striot_spark.queries.events_ops import TS_FMT as _TS_FMT_Q120
     "as in the batch lowering (the gate is order-insensitive)",
 )
 def q120_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from striot_spark.functions.analytics import ts_str
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
     clicks = (
-        RT.file_stream(spark, src, schema)
+        RT.file_stream(spark, src)
         .filter(F.col("event_type") == "click")
         .select(
             "event_id",
@@ -1390,7 +1265,7 @@ def q120_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     views = (
-        RT.file_stream(spark, src, schema)
+        RT.file_stream(spark, src)
         .filter(F.col("event_type") == "view")
         .select(
             "event_id",
@@ -1400,12 +1275,7 @@ def q120_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     merged = clicks.unionByName(views)
-    return RT.run_available_now(
-        merged,
-        f"q120_merge_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q120_ck_"),
-        mode="append",
-    )
+    return RT.run_available_now(merged, mode="append", source_path=src)
 
 
 def _stage_documents(spark: SparkSession, sf_dir: str) -> str:
@@ -1413,16 +1283,13 @@ def _stage_documents(spark: SparkSession, sf_dir: str) -> str:
     (same single-data-batch determinism argument as ``_stage_events``,
     sorted by doc_id)."""
 
-    ck = (sf_dir, "docs")
-    path = _STAGED.get(ck)
-    if path is not None:
-        return path
-    out = striot_mkdtemp(prefix="striot_doc_stream_src_")
-    load_table(spark, sf_dir, "documents").repartition(
-        1
-    ).sortWithinPartitions("doc_id").write.mode("overwrite").parquet(out)
-    _STAGED[ck] = out
-    return out
+    def write(out: str):
+        docs = load_table(spark, sf_dir, "documents").repartition(1)
+        docs = docs.sortWithinPartitions("doc_id")
+        docs.write.mode("overwrite").parquet(out)
+        return docs.schema
+
+    return staged(sf_dir, "striot_doc_stream_src_", write)
 
 
 @register(
@@ -1439,23 +1306,15 @@ def _stage_documents(spark: SparkSession, sf_dir: str) -> str:
     "the vocabulary-sized aggregation is the only stateful tier",
 )
 def q121_expand_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from striot_spark.streaming import runtime as RT
 
     src = _stage_documents(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema)
+    sdf = RT.file_stream(spark, src)
     toks = sdf.select(
         F.explode(F.split(F.col("text"), " ")).alias("token")
     ).filter(F.col("token") != "")
     counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
-    return RT.run_available_now(
-        counts,
-        f"q121_expand_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q121_ck_"),
-        mode="complete",
-    )
+    return RT.run_available_now(counts, mode="complete", source_path=src)
 
 
 _NTOK_Q122 = "len(list_filter(string_split(text, ' '), x -> x <> ''))"
@@ -1492,8 +1351,6 @@ _STOP_Q122 = "('the','a','of','and','to','in','is','it','for','on')"
 def q122_corpus_ingest_stream(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import uuid
-
     from striot_spark.functions.text import (
         blocklist_filter,
         linear_quality_filter,
@@ -1501,8 +1358,7 @@ def q122_corpus_ingest_stream(
     from striot_spark.streaming import runtime as RT
 
     src = _stage_documents(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema)
+    sdf = RT.file_stream(spark, src)
     gated = blocklist_filter(sdf, "text", ("vector", "stream", "hash"))
     gated = linear_quality_filter(
         gated, "text", "n_chars", threshold=700
@@ -1512,12 +1368,7 @@ def q122_corpus_ingest_stream(
     deduped = exact_dedup(gated, "doc_id", "text").select(
         F.col("keep_id").alias("doc_id"), "n_dupes"
     )
-    drained = RT.run_available_now(
-        deduped,
-        f"q122_ingest_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q122_ck_"),
-        mode="complete",
-    )
+    drained = RT.run_available_now(deduped, mode="complete", source_path=src)
     return drained.select("doc_id", "n_dupes")
 
 
@@ -1546,25 +1397,21 @@ def q122_corpus_ingest_stream(
     "staging + expect_data_batches=1 pin the drain deterministic",
 )
 def q123_zip_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    clicks = RT.file_stream(spark, src, schema).filter(
+    clicks = RT.file_stream(spark, src).filter(
         F.col("event_type") == "click"
     )
-    views = RT.file_stream(spark, src, schema).filter(
+    views = RT.file_stream(spark, src).filter(
         F.col("event_type") == "view"
     )
     out = RT.zip_join_stream(clicks, views, "ts", "event_id", "value")
     drained = RT.run_available_now(
         out,
-        f"q123_zip_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q123_ck_"),
         mode="append",
         expect_data_batches=1,
+        source_path=src,
     )
     return drained.select(
         "zip_pos",
@@ -1606,9 +1453,8 @@ def q125_upsert_snapshot_stream(
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events_ooo(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
     sdf = RT.file_stream(
-        spark, src, schema, max_files_per_trigger=1
+        spark, src, max_files_per_trigger=1
     ).withColumn("value_c", cents(F.col("value")))
     path = striot_mkdtemp(prefix="striot_q125_snap_")
     q = RT.upsert_snapshot_sink(
@@ -1668,15 +1514,12 @@ def q125_upsert_snapshot_stream(
     "sketch-on-batch bit-for-bit",
 )
 def q130_cms_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from striot_spark.functions.text import md5_hash64, nonempty_tokens
     from striot_spark.streaming import runtime as RT
 
     depth, width, top_k = 3, 512, 20
     src = _stage_documents(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema)
+    sdf = RT.file_stream(spark, src)
     toks_s = sdf.select(
         F.explode(nonempty_tokens(F.col("text"))).alias("tok")
     )
@@ -1699,12 +1542,7 @@ def q130_cms_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("rp.row").alias("row"), F.col("rp.pos").alias("pos"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    drained = RT.run_available_now(
-        sketch_s,
-        f"q130_cms_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q130_ck_"),
-        mode="complete",
-    )
+    drained = RT.run_available_now(sketch_s, mode="complete", source_path=src)
     table = {(r["row"], r["pos"]): r["c"] for r in drained.collect()}
     maps = [
         F.create_map(
@@ -1761,9 +1599,8 @@ def q138_incremental_agg_stream(
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events_ooo(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
     sdf = RT.file_stream(
-        spark, src, schema, max_files_per_trigger=1
+        spark, src, max_files_per_trigger=1
     ).withColumn("value_c", cents(F.col("value")))
     path = striot_mkdtemp(prefix="striot_q138_mv_")
     q = RT.incremental_agg_sink(
@@ -1824,25 +1661,17 @@ def q138_incremental_agg_stream(
     "count-min sketch",
 )
 def q141_hll_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from striot_spark.functions.analytics import hll_estimate, hll_registers
     from striot_spark.functions.text import nonempty_tokens
     from striot_spark.streaming import runtime as RT
 
     src = _stage_documents(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema)
+    sdf = RT.file_stream(spark, src)
     toks_s = sdf.select(
         "lang", F.explode(nonempty_tokens(F.col("text"))).alias("tok")
     )
     regs_s = hll_registers(toks_s, ["lang"], "tok")
-    drained = RT.run_available_now(
-        regs_s,
-        f"q141_hll_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q141_ck_"),
-        mode="complete",
-    )
+    drained = RT.run_available_now(regs_s, mode="complete", source_path=src)
     est = hll_estimate(drained, ["lang"])
     docs = load_table(spark, sf_dir, "documents")
     exact = (
@@ -1921,16 +1750,13 @@ def q143_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SAME oracle as batch q148",
 )
 def q150_table_digest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from striot_spark.functions.analytics import cents
     from striot_spark.functions.text import md5_hash64
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events_ooo(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
     sdf = (
-        RT.file_stream(spark, src, schema, max_files_per_trigger=1)
+        RT.file_stream(spark, src, max_files_per_trigger=1)
         .filter(F.col("user_id") != BARRIER_USER)
         .withColumn("value_c", cents(F.col("value")))
     )
@@ -1955,12 +1781,7 @@ def q150_table_digest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long").alias("digest"),
         )
     )
-    return RT.run_available_now(
-        digest_s,
-        f"q150_digest_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q150_ck_"),
-        mode="complete",
-    )
+    return RT.run_available_now(digest_s, mode="complete", source_path=src)
 
 
 @register(
@@ -2016,9 +1837,8 @@ def q152_pit_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     hist = track_persist(hist)
     src = _stage_events_ooo(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
     sdf = (
-        RT.file_stream(spark, src, schema, max_files_per_trigger=1)
+        RT.file_stream(spark, src, max_files_per_trigger=1)
         .filter(F.col("user_id") != BARRIER_USER)
         .filter(F.col("event_id") % 2 == 0)
     )
@@ -2034,13 +1854,7 @@ def q152_pit_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts_str(F.col("ts")).alias("ts_s"),
         "state_type",
     )
-    import uuid
-
-    return RT.run_available_now(
-        joined,
-        f"q152_pit_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q152_ck_"),
-    )
+    return RT.run_available_now(joined, source_path=src)
 
 
 @register(
@@ -2074,15 +1888,12 @@ def q152_pit_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the batch form",
 )
 def q164_ohlc_bars_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from striot_spark.functions.analytics import cents, day_str, ohlc_bars
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events_ooo(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
     sdf = (
-        RT.file_stream(spark, src, schema, max_files_per_trigger=1)
+        RT.file_stream(spark, src, max_files_per_trigger=1)
         .filter(F.col("user_id") != BARRIER_USER)
         .select(
             day_str(F.col("ts")).alias("day"),
@@ -2091,12 +1902,7 @@ def q164_ohlc_bars_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     bars_s = ohlc_bars(sdf, "day", "c", "o")
-    return RT.run_available_now(
-        bars_s,
-        f"q164_ohlc_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q164_ck_"),
-        mode="complete",
-    )
+    return RT.run_available_now(bars_s, mode="complete", source_path=src)
 
 
 @register(
@@ -2127,9 +1933,8 @@ def q174_rollup_serve_stream(
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events_ooo(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
     sdf = (
-        RT.file_stream(spark, src, schema, max_files_per_trigger=1)
+        RT.file_stream(spark, src, max_files_per_trigger=1)
         .filter(F.col("user_id") != BARRIER_USER)
         .select(
             F.date_trunc("minute", F.col("ts")).alias("minute"),
@@ -2188,9 +1993,8 @@ def q179_cdc_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events_ooo(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
     sdf = (
-        RT.file_stream(spark, src, schema, max_files_per_trigger=1)
+        RT.file_stream(spark, src, max_files_per_trigger=1)
         .filter(F.col("user_id") != BARRIER_USER)
         .select(
             "user_id",
@@ -2243,9 +2047,8 @@ def q189_freshness_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events_ooo(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
     sdf = (
-        RT.file_stream(spark, src, schema, max_files_per_trigger=1)
+        RT.file_stream(spark, src, max_files_per_trigger=1)
         .filter(F.col("user_id") != BARRIER_USER)
         .select("event_type", "ts", "event_id")
     )
@@ -2287,13 +2090,10 @@ def q189_freshness_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sequential recurrence exactly",
 )
 def q198_debounce_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema)
+    sdf = RT.file_stream(spark, src)
     gap_us = 43_200_000_000
 
     def pred(row: dict, acc) -> bool:
@@ -2314,12 +2114,7 @@ def q198_debounce_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_type="last_us long",
         tiebreak="event_id",
     )
-    drained = RT.run_available_now(
-        out,
-        f"q198_deb_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q198_ck_"),
-        mode="append",
-    )
+    drained = RT.run_available_now(out, mode="append", source_path=src)
     return drained.select("user_id", "event_id")
 
 
@@ -2338,15 +2133,12 @@ def q198_debounce_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q206_burst_detection_stream(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import uuid
-
     from striot_spark.functions.analytics import burst_flags
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events_ooo(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
     sdf = (
-        RT.file_stream(spark, src, schema, max_files_per_trigger=1)
+        RT.file_stream(spark, src, max_files_per_trigger=1)
         .filter(F.col("user_id") != BARRIER_USER)
         .groupBy(
             "event_type",
@@ -2354,12 +2146,7 @@ def q206_burst_detection_stream(
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    m = RT.run_available_now(
-        sdf,
-        f"q206_burst_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q206_ck_"),
-        mode="complete",
-    )
+    m = RT.run_available_now(sdf, mode="complete", source_path=src)
     return burst_flags(m, "event_type", "b")
 
 
@@ -2387,21 +2174,16 @@ def q206_burst_detection_stream(
 def q220_stream_exact_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import uuid
-
     from striot_spark.functions.analytics import cents
-    from striot_spark.sources.batch import load_table as _lt
     from striot_spark.streaming import runtime as RT
 
-    ck = (sf_dir, "dup2x")
-    path = _STAGED.get(ck)
-    if path is None:
-        base = _lt(spark, sf_dir, "events")
-        path = striot_mkdtemp(prefix="striot_q220_dup_src_")
-        RT.stage_ordered_files([base, base], path)
-        _STAGED[ck] = path
-    schema = spark.read.parquet(path).schema
-    sdf = RT.file_stream(spark, path, schema, max_files_per_trigger=1)
+    def write(out: str):
+        base = load_table(spark, sf_dir, "events")
+        RT.stage_ordered_files([base, base], out)
+        return base.schema
+
+    src = staged(sf_dir, "striot_q220_dup_src_", write)
+    sdf = RT.file_stream(spark, src, max_files_per_trigger=1)
     deduped = (
         sdf.withWatermark("ts", "365 days")
         .dropDuplicatesWithinWatermark(["event_id"])
@@ -2411,12 +2193,7 @@ def q220_stream_exact_dedup(
             F.sum(cents(F.col("value"))).alias("sum_c"),
         )
     )
-    return RT.run_available_now(
-        deduped,
-        f"q220_dedup_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q220_ck_"),
-        mode="complete",
-    )
+    return RT.run_available_now(deduped, mode="complete", source_path=src)
 
 
 _NEAR_DUP_SQL = """
@@ -2480,9 +2257,7 @@ def q225_stream_near_dup_filter(
     from striot_spark.functions import dedup as D
     from striot_spark.streaming import runtime as RT
 
-    ck = (sf_dir, "neardup_src")
-    path = _STAGED.get(ck)
-    if path is None:
+    def write(out: str):
         docs = load_table(spark, sf_dir, "documents")
         hi = int(docs.agg(F.max("doc_id")).collect()[0][0]) + 1
         step = (hi + 4) // 5
@@ -2493,11 +2268,11 @@ def q225_stream_near_dup_filter(
             )
             for i in range(5)
         ]
-        path = striot_mkdtemp(prefix="striot_q225_src_")
-        RT.stage_ordered_files(chunks, path, order_cols=["doc_id"])
-        _STAGED[ck] = path
-    schema = spark.read.parquet(path).schema
-    sdf = RT.file_stream(spark, path, schema, max_files_per_trigger=1)
+        RT.stage_ordered_files(chunks, out, order_cols=["doc_id"])
+        return docs.schema
+
+    src = staged(sf_dir, "striot_q225_src_", write)
+    sdf = RT.file_stream(spark, src, max_files_per_trigger=1)
     out = striot_mkdtemp(prefix="striot_q225_out_")
     snap = striot_mkdtemp(prefix="striot_q225_snap_")
     q = D.near_dup_filter_stream(
@@ -2508,7 +2283,7 @@ def q225_stream_near_dup_filter(
         "doc_id",
         "text",
         ["doc_id", "lang"],
-        drain_shuffle_partitions=RT.derive_drain_width(spark, path),
+        drain_shuffle_partitions=RT.derive_drain_width(spark, src),
     )
     q.awaitTermination()
     return D.read_kept(spark, out)
@@ -2557,9 +2332,8 @@ def q229_stream_quantile_bins(
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events_ooo(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
     sdf = (
-        RT.file_stream(spark, src, schema, max_files_per_trigger=1)
+        RT.file_stream(spark, src, max_files_per_trigger=1)
         .filter(F.col("user_id") != BARRIER_USER)
         .select(cents(F.col("value")).alias("vc"))
         .select(F.expr("vc DIV 1000").alias("bin"))
@@ -2597,42 +2371,36 @@ def _stage_pair_events(spark: SparkSession, sf_dir: str) -> str:
 
     from striot_spark.streaming.runtime import stage_ordered_files
 
-    ck = (sf_dir, "pair_events")
-    path = _STAGED.get(ck)
-    if path is not None:
-        return path
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    a = li.alias("a")
-    b = li.alias("b")
-    pe = (
-        a.join(
+    def write(out: str):
+        li = load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_partkey"
+        )
+        a = li.alias("a")
+        b = li.alias("b")
+        pe = a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
             & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
+        ).select(
             F.col("a.l_partkey").alias("u"),
             F.col("b.l_partkey").alias("v"),
         )
-    )
-    n = pe.count()
-    r = pe.withColumn(
-        "rn", F.row_number().over(Window.orderBy("u", "v"))
-    )
-    third = n // 3
-    chunks = [
-        r.filter(F.col("rn") <= third).drop("rn"),
-        r.filter(
-            (F.col("rn") > third) & (F.col("rn") <= 2 * third)
-        ).drop("rn"),
-        r.filter(F.col("rn") > 2 * third).drop("rn"),
-    ]
-    out = striot_mkdtemp(prefix="striot_fr_stream_pairs_") + "/data"
-    stage_ordered_files(chunks, out, order_cols=["u", "v"])
-    _STAGED[ck] = out
-    return out
+        n = pe.count()
+        r = pe.withColumn(
+            "rn", F.row_number().over(Window.orderBy("u", "v"))
+        )
+        third = n // 3
+        chunks = [
+            r.filter(F.col("rn") <= third).drop("rn"),
+            r.filter(
+                (F.col("rn") > third) & (F.col("rn") <= 2 * third)
+            ).drop("rn"),
+            r.filter(F.col("rn") > 2 * third).drop("rn"),
+        ]
+        stage_ordered_files(chunks, out, order_cols=["u", "v"])
+        return pe.schema
+
+    return staged(sf_dir, "striot_fr_stream_pairs_", write)
 
 
 def _q239_oracle(rounds: int) -> str:
@@ -2692,8 +2460,7 @@ def q239_lpa_stream_weighted(
     from striot_spark.streaming import runtime as RT
 
     src = _stage_pair_events(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema, max_files_per_trigger=1)
+    sdf = RT.file_stream(spark, src, max_files_per_trigger=1)
     path = striot_mkdtemp(prefix="striot_q239_mv_")
     q = RT.incremental_agg_sink(
         sdf,
@@ -2746,9 +2513,8 @@ def q240_incremental_extents_stream(
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events_ooo(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
     sdf = RT.file_stream(
-        spark, src, schema, max_files_per_trigger=1
+        spark, src, max_files_per_trigger=1
     ).withColumn("value_c", cents(F.col("value")))
     path = striot_mkdtemp(prefix="striot_q240_mv_")
     q = RT.incremental_agg_sink(
@@ -2813,8 +2579,6 @@ def q240_incremental_extents_stream(
     "the vocabulary is executor-memory-bounded (64k BPE vocabs are)",
 )
 def q273_surprisal_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from striot_spark.functions.text import nonempty_tokens
     from striot_spark.streaming import runtime as RT
 
@@ -2843,8 +2607,7 @@ def q273_surprisal_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         bmap = F.create_map().cast("map<string,bigint>")
 
     src = _stage_documents(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema)
+    sdf = RT.file_stream(spark, src)
     tk = nonempty_tokens(F.col("text"))
     scored = sdf.select(
         "doc_id",
@@ -2855,12 +2618,7 @@ def q273_surprisal_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, t: acc + F.coalesce(bmap[t], F.lit(0)),
         ).cast("long").alias("surprisal_bits"),
     )
-    drained = RT.run_available_now(
-        scored,
-        f"q273_surprisal_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q273_ck_"),
-        mode="append",
-    )
+    drained = RT.run_available_now(scored, mode="append", source_path=src)
     return drained.filter(F.col("n_tokens") > 0).select(
         "doc_id",
         "n_tokens",
@@ -2934,8 +2692,6 @@ def _q282_oracle() -> str:
 def q282_bm25_stream_serve(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import uuid
-
     from striot_spark.functions.text import (
         bm25_corpus_stats,
         bm25_score_sql,
@@ -2956,19 +2712,13 @@ def q282_bm25_stream_serve(
         _BM25_K1_M, _BM25_B_M,
     )
     src = _stage_documents(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema)
+    sdf = RT.file_stream(spark, src)
     scored = sdf.select(
         "doc_id",
         F.expr(dl_sql).alias("dl"),
         F.expr(score_sql).alias("score"),
     )
-    drained = RT.run_available_now(
-        scored,
-        f"q282_bm25_{uuid.uuid4().hex[:8]}",
-        striot_mkdtemp(prefix="striot_q282_ck_"),
-        mode="append",
-    )
+    drained = RT.run_available_now(scored, mode="append", source_path=src)
     return drained
 
 
@@ -3014,9 +2764,8 @@ def q286_exp_histogram_stream_serve(
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events_ooo(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
     sdf = (
-        RT.file_stream(spark, src, schema, max_files_per_trigger=1)
+        RT.file_stream(spark, src, max_files_per_trigger=1)
         .filter(F.col("user_id") != BARRIER_USER)
         .select(
             "event_type", cents(F.col("value")).alias("v")

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from striot_spark.tempdirs import striot_mkdtemp
+from striot_spark.tempdirs import staged, striot_mkdtemp
 from striot_spark.functions.analytics import day_str
 from striot_spark.functions.graph import same_key_pairs
 from striot_spark.queries.registry import register
@@ -1995,9 +1995,6 @@ def q243_khop_reach_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     return khop_reach_hll(edges, hops=2, src="u", dst="v")
 
 
-_STAGED_QPAIRS: dict = {}
-
-
 def _stage_quarter_pair_events(spark: SparkSession, sf_dir: str) -> str:
     """Stage the QUARTER-window co-purchase pair observations (one row
     per same-order partkey pair occurrence, duplicates kept) as three
@@ -2012,46 +2009,43 @@ def _stage_quarter_pair_events(spark: SparkSession, sf_dir: str) -> str:
 
     from striot_spark.streaming.runtime import stage_ordered_files
 
-    ck = (sf_dir, "quarter_pair_events")
-    path = _STAGED_QPAIRS.get(ck)
-    if path is not None:
-        return path
-    import datetime as dt
+    def write(out: str):
+        import datetime as dt
 
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(
-            (F.col("l_shipdate") >= F.lit(dt.datetime(1995, 1, 1)))
-            & (F.col("l_shipdate") < F.lit(dt.datetime(1995, 4, 1)))
+        li = (
+            load_table(spark, sf_dir, "lineitem")
+            .filter(
+                (F.col("l_shipdate") >= F.lit(dt.datetime(1995, 1, 1)))
+                & (F.col("l_shipdate") < F.lit(dt.datetime(1995, 4, 1)))
+            )
+            .select("l_orderkey", "l_partkey")
         )
-        .select("l_orderkey", "l_partkey")
-    )
-    a = li.alias("a")
-    b = li.alias("b")
-    pe = a.join(
-        b,
-        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-        & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-    ).select(
-        F.col("a.l_partkey").alias("u"),
-        F.col("b.l_partkey").alias("v"),
-    )
-    n = pe.count()
-    r = pe.withColumn(
-        "rn", F.row_number().over(Window.orderBy("u", "v"))
-    )
-    third = n // 3
-    chunks = [
-        r.filter(F.col("rn") <= third).drop("rn"),
-        r.filter(
-            (F.col("rn") > third) & (F.col("rn") <= 2 * third)
-        ).drop("rn"),
-        r.filter(F.col("rn") > 2 * third).drop("rn"),
-    ]
-    out = striot_mkdtemp(prefix="striot_q245_pairs_") + "/data"
-    stage_ordered_files(chunks, out, order_cols=["u", "v"])
-    _STAGED_QPAIRS[ck] = out
-    return out
+        a = li.alias("a")
+        b = li.alias("b")
+        pe = a.join(
+            b,
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        ).select(
+            F.col("a.l_partkey").alias("u"),
+            F.col("b.l_partkey").alias("v"),
+        )
+        n = pe.count()
+        r = pe.withColumn(
+            "rn", F.row_number().over(Window.orderBy("u", "v"))
+        )
+        third = n // 3
+        chunks = [
+            r.filter(F.col("rn") <= third).drop("rn"),
+            r.filter(
+                (F.col("rn") > third) & (F.col("rn") <= 2 * third)
+            ).drop("rn"),
+            r.filter(F.col("rn") > 2 * third).drop("rn"),
+        ]
+        stage_ordered_files(chunks, out, order_cols=["u", "v"])
+        return chunks[0].schema
+
+    return staged(sf_dir, "striot_q245_pairs_", write)
 
 
 @register(
@@ -2078,8 +2072,7 @@ def q245_khop_hll_stream_serve(
     from striot_spark.streaming import runtime as RT
 
     src = _stage_quarter_pair_events(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema, max_files_per_trigger=1)
+    sdf = RT.file_stream(spark, src, max_files_per_trigger=1)
     path = striot_mkdtemp(prefix="striot_q245_mv_")
     q = RT.incremental_agg_sink(
         sdf,
@@ -2422,9 +2415,6 @@ def q249_sssp_trade_proximity(
     return sssp(edges, ["c1"], rounds=3, src="a", dst="b", cost="cost")
 
 
-_STAGED_TRADE_OBS: dict = {}
-
-
 def _stage_trade_observations(spark: SparkSession, sf_dir: str) -> str:
     """Stage the customer-supplier trade OBSERVATIONS (one row per
     orders⋈lineitem hit, duplicates kept — the multiplicities arrive
@@ -2441,36 +2431,33 @@ def _stage_trade_observations(spark: SparkSession, sf_dir: str) -> str:
 
     from striot_spark.streaming.runtime import stage_ordered_files
 
-    ck = (sf_dir, "trade_observations")
-    path = _STAGED_TRADE_OBS.get(ck)
-    if path is not None:
-        return path
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    obs = o.join(li, F.col("o_orderkey") == F.col("l_orderkey")).select(
-        F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("a"),
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("b"),
-    )
-    n = obs.count()
-    r = obs.withColumn(
-        "rn", F.row_number().over(Window.orderBy("a", "b"))
-    )
-    third = n // 3
-    chunks = [
-        r.filter(F.col("rn") <= third).drop("rn"),
-        r.filter(
-            (F.col("rn") > third) & (F.col("rn") <= 2 * third)
-        ).drop("rn"),
-        r.filter(F.col("rn") > 2 * third).drop("rn"),
-    ]
-    out = striot_mkdtemp(prefix="striot_q250_obs_") + "/data"
-    stage_ordered_files(chunks, out, order_cols=["a", "b"])
-    _STAGED_TRADE_OBS[ck] = out
-    return out
+    def write(out: str):
+        o = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey"
+        )
+        li = load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_suppkey"
+        )
+        obs = o.join(li, F.col("o_orderkey") == F.col("l_orderkey")).select(
+            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("a"),
+            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("b"),
+        )
+        n = obs.count()
+        r = obs.withColumn(
+            "rn", F.row_number().over(Window.orderBy("a", "b"))
+        )
+        third = n // 3
+        chunks = [
+            r.filter(F.col("rn") <= third).drop("rn"),
+            r.filter(
+                (F.col("rn") > third) & (F.col("rn") <= 2 * third)
+            ).drop("rn"),
+            r.filter(F.col("rn") > 2 * third).drop("rn"),
+        ]
+        stage_ordered_files(chunks, out, order_cols=["a", "b"])
+        return chunks[0].schema
+
+    return staged(sf_dir, "striot_q250_obs_", write)
 
 
 @register(
@@ -2497,8 +2484,7 @@ def q250_pagerank_stream_serve(
     from striot_spark.streaming import runtime as RT
 
     src = _stage_trade_observations(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema, max_files_per_trigger=1)
+    sdf = RT.file_stream(spark, src, max_files_per_trigger=1)
     path = striot_mkdtemp(prefix="striot_q250_mv_")
     q = RT.incremental_agg_sink(
         sdf,
@@ -3431,8 +3417,7 @@ def q267_sssp_stream_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from striot_spark.streaming import runtime as RT
 
     src = _stage_trade_observations(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema, max_files_per_trigger=1)
+    sdf = RT.file_stream(spark, src, max_files_per_trigger=1)
     path = striot_mkdtemp(prefix="striot_q267_mv_")
     q = RT.incremental_agg_sink(
         sdf,
@@ -3572,9 +3557,6 @@ def q268_betweenness_pivots(
     )
 
 
-_STAGED_COPURCHASE_OBS: dict = {}
-
-
 def _stage_copurchase_observations(
     spark: SparkSession, sf_dir: str
 ) -> str:
@@ -3594,29 +3576,26 @@ def _stage_copurchase_observations(
 
     from striot_spark.streaming.runtime import stage_ordered_files
 
-    ck = (sf_dir, "copurchase_observations")
-    path = _STAGED_COPURCHASE_OBS.get(ck)
-    if path is not None:
-        return path
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("p")
-    )
-    n = li.count()
-    r = li.withColumn(
-        "rn", F.row_number().over(Window.orderBy("k", "p"))
-    )
-    third = n // 3
-    chunks = [
-        r.filter(F.col("rn") <= third).drop("rn"),
-        r.filter(
-            (F.col("rn") > third) & (F.col("rn") <= 2 * third)
-        ).drop("rn"),
-        r.filter(F.col("rn") > 2 * third).drop("rn"),
-    ]
-    out = striot_mkdtemp(prefix="striot_q269_obs_") + "/data"
-    stage_ordered_files(chunks, out, order_cols=["k", "p"])
-    _STAGED_COPURCHASE_OBS[ck] = out
-    return out
+    def write(out: str):
+        li = load_table(spark, sf_dir, "lineitem").select(
+            F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("p")
+        )
+        n = li.count()
+        r = li.withColumn(
+            "rn", F.row_number().over(Window.orderBy("k", "p"))
+        )
+        third = n // 3
+        chunks = [
+            r.filter(F.col("rn") <= third).drop("rn"),
+            r.filter(
+                (F.col("rn") > third) & (F.col("rn") <= 2 * third)
+            ).drop("rn"),
+            r.filter(F.col("rn") > 2 * third).drop("rn"),
+        ]
+        stage_ordered_files(chunks, out, order_cols=["k", "p"])
+        return chunks[0].schema
+
+    return staged(sf_dir, "striot_q269_obs_", write)
 
 
 @register(
@@ -3643,8 +3622,7 @@ def q269_coreness_stream_serve(
     from striot_spark.streaming import runtime as RT
 
     src = _stage_copurchase_observations(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema, max_files_per_trigger=1)
+    sdf = RT.file_stream(spark, src, max_files_per_trigger=1)
     path = striot_mkdtemp(prefix="striot_q269_mv_")
     q = RT.incremental_agg_sink(
         sdf,

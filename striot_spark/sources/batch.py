@@ -114,10 +114,7 @@ def _set_session_confs(spark: SparkSession) -> None:
         # — with the session pinned to UTC the two readings are identical.
         ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
     ]
-    skip_ntz = os.environ.get("STRIOT_SKIP_NTZ_CONF")  # bench A/B hook
     for key, value in confs:
-        if skip_ntz and key == "spark.sql.parquet.inferTimestampNTZ.enabled":
-            continue
         try:  # runtime-settable; set here so caller-provided sessions work
             spark.conf.set(key, value)
         except Exception as exc:
@@ -136,8 +133,11 @@ def _set_session_confs(spark: SparkSession) -> None:
 #: testdata tables are immutable within a process, so infer once per
 #: (dir, table) and pass the schema to the reader thereafter — what
 #: any long-lived Spark app does by defining its tables once.
-#: ``STRIOT_NO_SCHEMA_MEMO`` disables it (A/B hook, like
-#: ``STRIOT_SKIP_NTZ_CONF`` above).
+#: Failure mode if a table IS rewritten in-process with a different
+#: schema: the reader trusts the memoized schema, so a column the new
+#: files no longer carry (renamed or dropped) reads back as silent
+#: NULLs, not an error.
+#: ``STRIOT_NO_SCHEMA_MEMO`` disables it (A/B hook).
 _SCHEMA_MEMO: dict[tuple[str, str], "object"] = {}
 
 

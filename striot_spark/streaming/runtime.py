@@ -24,6 +24,8 @@ The same Stream operators lower as follows in streaming mode:
 
 from __future__ import annotations
 
+import contextlib
+import uuid
 from typing import Any, Callable, Iterator, Sequence
 
 import pandas as pd
@@ -31,6 +33,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from striot_spark.tempdirs import staged_schema, striot_mkdtemp
 
 # -- sources -----------------------------------------------------------------
 
@@ -48,13 +52,17 @@ def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
 def file_stream(
     spark: SparkSession,
     path: str,
-    schema: StructType,
+    schema: StructType | None = None,
     fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-replay source: new files in ``path`` become micro-batches.
     ``max_files_per_trigger`` splits a backlog into multiple batches
-    (deterministic multi-batch replay for watermark/late-data tests)."""
+    (deterministic multi-batch replay for watermark/late-data tests).
+    ``schema`` defaults to the one recorded when ``path`` was staged
+    with ``tempdirs.staged``."""
+    if schema is None:
+        schema = staged_schema(path)
     reader = spark.readStream.schema(schema).format(fmt)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -85,7 +93,9 @@ def stage_ordered_files(
     os.makedirs(base_dir, exist_ok=True)
     t0 = time.time() - 3600 - 10 * len(dfs)
     for i, df in enumerate(dfs):
-        tmp = f"{base_dir}__part{i}"
+        # inside base_dir, so a crash leaves it under the caller's dir;
+        # the "_" prefix hides it from file listings until it is removed
+        tmp = os.path.join(base_dir, f"_part{i}")
         df.repartition(1).sortWithinPartitions(*order_cols).write.mode(
             "overwrite"
         ).parquet(tmp)
@@ -764,8 +774,10 @@ def zip_join_stream(
 #: explicit override for the bounded-drain width pin (int; <= 0 means
 #: "do not pin", i.e. keep the session width); unset = derive
 DRAIN_WIDTH_CONF = "striot.stream.drainWidth"
-#: target staged-input bytes per shuffle partition for a bounded drain:
-#: the derived width is ceil(staged_bytes / this), floored at
+#: target staged-input bytes per shuffle partition for a bounded drain,
+#: counted as the staged files' COMPRESSED on-disk size (what
+#: ``_staged_bytes`` sums; parquet decodes to several times this in
+#: memory): the derived width is ceil(staged_bytes / this), floored at
 #: DRAIN_WIDTH_FLOOR and capped at the SESSION width. Every stateful
 #: operator (and every foreachBatch merge) pays per-partition
 #: commit/scheduling cost per micro-batch, so tiny replays should not
@@ -819,14 +831,18 @@ def derive_drain_width(
     cluster-scale backlog derives up to the session width and the pin
     degenerates to a no-op (a production stream's width stays the
     cluster operator's choice). ``DRAIN_WIDTH_CONF`` overrides the
-    derivation (<= 0 disables the pin entirely)."""
+    derivation (<= 0 disables the pin entirely); a value that is not an
+    integer is ignored, so a mistyped conf never fails a query."""
     try:
         raw = spark.conf.get(DRAIN_WIDTH_CONF, "")
     except Exception:
         raw = ""
-    if raw:
-        v = int(raw)
-        return v if v > 0 else None
+    try:
+        override = int(raw)
+    except ValueError:  # unset, empty or not an integer: derive
+        override = None
+    if override is not None:
+        return override if override > 0 else None
     try:
         session = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (ValueError, TypeError):
@@ -835,6 +851,7 @@ def derive_drain_width(
     return min(session, max(DRAIN_WIDTH_FLOOR, need))
 
 
+@contextlib.contextmanager
 def drain_width(spark: SparkSession, parts: int | None):
     """Context manager pinning ``spark.sql.shuffle.partitions`` while a
     bounded drain STARTS (restored on exit; streaming clones the
@@ -851,27 +868,21 @@ def drain_width(spark: SparkSession, parts: int | None):
 
     Same non-reentrancy contract as ``run_available_now``: not safe for
     two concurrent pinned starts on one session."""
-    import contextlib
-
-    @contextlib.contextmanager
-    def _cm():
-        if parts is None:
-            yield
-            return
-        restore = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", restore)
-
-    return _cm()
+    if parts is None:
+        yield
+        return
+    restore = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", restore)
 
 
 def run_available_now(
     sdf: DataFrame,
-    query_name: str,
-    checkpoint_dir: str,
+    query_name: str | None = None,
+    checkpoint_dir: str | None = None,
     mode: str = "append",
     expect_data_batches: int | None = None,
     drain_shuffle_partitions: int | None | str = "derive",
@@ -879,6 +890,9 @@ def run_available_now(
 ) -> DataFrame:
     """Drain everything currently available into an in-memory table and
     return it (batch-equivalence testing harness for streaming plans).
+    ``query_name`` (the in-memory table's name) and ``checkpoint_dir``
+    default to a unique name and a fresh ``striot_mkdtemp`` dir, which is
+    what a bounded replay wants: nothing outlives the process.
 
     For windowed aggregations use ``mode='complete'``: in append mode a
     window only emits once the watermark passes its end, so the trailing
@@ -919,15 +933,13 @@ def run_available_now(
     Every caller in this package drains sequentially; a concurrent
     harness should pass None and set the conf once at session build."""
     spark = sdf.sparkSession
+    if query_name is None:
+        query_name = f"striot_drain_{uuid.uuid4().hex[:12]}"
+    if checkpoint_dir is None:
+        checkpoint_dir = striot_mkdtemp(prefix="striot_drain_ck_")
     if drain_shuffle_partitions == "derive":
         drain_shuffle_partitions = derive_drain_width(spark, source_path)
-    restore: str | None = None
-    if drain_shuffle_partitions is not None:
-        restore = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(drain_shuffle_partitions)
-        )
-    try:
+    with drain_width(spark, drain_shuffle_partitions):
         q = (
             sdf.writeStream.format("memory")
             .queryName(query_name)
@@ -937,9 +949,6 @@ def run_available_now(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if restore is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", restore)
     if expect_data_batches is not None:
 
         def _field(p, name):

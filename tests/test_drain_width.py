@@ -38,7 +38,9 @@ def clean_conf(spark):
 
 
 def _stage(tmp_path, n_bytes: int) -> str:
-    (tmp_path / "part-00000.parquet").write_bytes(b"\0" * n_bytes)
+    # a sparse file: its size counts, but no bytes are held or written
+    with open(tmp_path / "part-00000.parquet", "wb") as fh:
+        fh.truncate(n_bytes)
     (tmp_path / "_SUCCESS").write_bytes(b"")  # markers must not count
     return str(tmp_path)
 
@@ -88,6 +90,67 @@ def test_override_conf_wins(clean_conf, tmp_path):
     # empty string = unset = derive
     spark.conf.set(DRAIN_WIDTH_CONF, "")
     assert derive_drain_width(spark, src) == 23
+    # not an integer = ignored = derive (conf parsing never fails a query)
+    spark.conf.set(DRAIN_WIDTH_CONF, "eight")
+    assert derive_drain_width(spark, src) == 23
+
+
+def test_real_drain_runs_at_the_derived_width(
+    clean_conf, tmp_path, monkeypatch
+):
+    """Above the floor, on a real availableNow drain: the state
+    operator's shuffle partitions in the drain's progress are the
+    derived width, and the session width is back afterwards."""
+    import json
+    import threading
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from striot_spark.streaming import runtime as RT
+
+    spark = clean_conf
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    src = str(tmp_path / "stage")
+    spark.range(4000).select(
+        (F.col("id") % 50).alias("k"), F.col("id").alias("v")
+    ).write.parquet(src)
+    monkeypatch.setattr(
+        RT, "DRAIN_TARGET_BYTES", RT._staged_bytes(src) // 12
+    )
+    width = derive_drain_width(spark, src)
+    assert DRAIN_WIDTH_FLOOR < width < 16
+
+    class Progress(StreamingQueryListener):
+        def __init__(self):
+            self.reports, self.done = [], threading.Event()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.reports.append(json.loads(event.progress.json))
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.done.set()
+
+    listener = Progress()
+    spark.streams.addListener(listener)
+    try:
+        sdf = RT.file_stream(spark, src, spark.read.parquet(src).schema)
+        out = RT.run_available_now(
+            sdf.groupBy("k").count(), mode="complete", source_path=src
+        )
+        assert out.count() == 50
+        assert listener.done.wait(30)
+    finally:
+        spark.streams.removeListener(listener)
+    ops = [op for p in listener.reports for op in p["stateOperators"]]
+    assert ops and {op["numShufflePartitions"] for op in ops} == {width}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "16"
 
 
 def test_staged_bytes_skips_markers_and_file_prefix(tmp_path):

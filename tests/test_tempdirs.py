@@ -1,14 +1,16 @@
 """striot_mkdtemp staging-dir lifecycle (VERDICT r12 task 6): the
 serve/streaming queries' staging, snapshot, and checkpoint dirs must
 not accumulate across repeated fresh-process sweeps — each process
-removes everything it minted at exit.
+removes everything it minted at exit. ``staged`` memoizes the source
+stagings on top of that, and ``cleanup_tempdirs()`` forgets the memo
+together with the dirs, so a memoized path never outlives its dir.
 
-The in-process tests monkeypatch ``_CREATED`` to a fresh list before
-calling ``cleanup_tempdirs()``: the real list holds THIS test
-session's memoized staging dirs (flagship/tpch ``_STAGED``,
-``bucketing._LOCATION`` caches still point at them), and a mid-session
-cleanup of the real list would delete dirs those caches rely on —
-failing any later test that touches a staged query (ADVICE r13).
+The in-process tests monkeypatch ``_CREATED`` (and ``_STAGED``) to
+fresh containers before calling ``cleanup_tempdirs()``: the real list
+holds THIS test session's dirs, which the ``bucketing._LOCATION``
+cache still points at, and a mid-session cleanup of the real list
+would delete dirs that cache relies on — failing any later test that
+touches a bucketed query (ADVICE r13).
 """
 
 from __future__ import annotations
@@ -17,10 +19,14 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 import striot_spark.tempdirs as tempdirs
 from striot_spark.tempdirs import (
     cleanup_tempdirs,
     register_tempfile,
+    staged,
+    staged_schema,
     striot_mkdtemp,
 )
 
@@ -70,6 +76,40 @@ def test_cleanup_leaves_other_sessions_entries_alone(monkeypatch):
         import shutil
 
         shutil.rmtree(survivor, ignore_errors=True)
+
+
+def test_staged_writes_once_per_key_and_restages_after_cleanup(monkeypatch):
+    monkeypatch.setattr(tempdirs, "_CREATED", [])
+    monkeypatch.setattr(tempdirs, "_STAGED", {})
+    calls = []
+
+    def write(path):
+        calls.append(path)
+        open(os.path.join(path, "f.parquet"), "w").close()
+        return f"schema-{len(calls)}"
+
+    p1 = staged("sf_a", "striot_test_staged_", write)
+    assert calls == [p1] and os.path.isdir(p1)
+    assert staged("sf_a", "striot_test_staged_", write) == p1  # memo hit
+    assert calls == [p1]  # the writer ran once for this key
+    assert staged_schema(p1) == "schema-1"
+    # another key, or another kind of staging over the same key, is
+    # its own dir
+    p2 = staged("sf_b", "striot_test_staged_", write)
+    p3 = staged("sf_a", "striot_test_other_", write)
+    assert len({p1, p2, p3}) == 3 and len(calls) == 3
+
+    cleanup_tempdirs()
+    assert not os.path.exists(p1)
+    p4 = staged("sf_a", "striot_test_staged_", write)  # stages again
+    assert p4 != p1 and calls[-1] == p4 and os.path.isdir(p4)
+    assert staged_schema(p4) == "schema-4"
+    # a forgotten path, or a staging that recorded no schema, has none
+    text = staged("sf_a", "striot_test_text_", lambda path: None)
+    for path in (p1, text):
+        with pytest.raises(KeyError):
+            staged_schema(path)
+    cleanup_tempdirs()
 
 
 def test_fresh_process_removes_its_staging_at_exit():
