@@ -197,7 +197,11 @@ def compact_files(
     The rewrite is a ``coalesce`` (narrow dependency — each output
     task concatenates whole input files, NO shuffle and no
     re-sorting), so compaction cost is one sequential read+write of
-    the data. Size comes from the Hadoop FS listing of the actual
+    the data. ``coalesce`` can only merge the read's splits, and the
+    reader already packs small files into few splits (as few as the
+    core count), so a budget asking for MORE files than the read has
+    splits falls back to ``repartition(n)`` — one shuffle to ``n``
+    files. Size comes from the Hadoop FS listing of the actual
     directory (not Catalyst estimates — compaction cares about bytes
     on disk). Returns the compacted DataFrame re-read from
     ``out_dir``.
@@ -210,9 +214,12 @@ def compact_files(
     fs = p.getFileSystem(conf)
     size = fs.getContentSummary(p).getLength()
     n = max(1, math.ceil(size / target_bytes))
-    spark.read.parquet(src_dir).coalesce(n).write.mode(
-        "overwrite"
-    ).parquet(out_dir)
+    df = spark.read.parquet(src_dir)
+    if n <= df.rdd.getNumPartitions():
+        df = df.coalesce(n)
+    else:
+        df = df.repartition(n)
+    df.write.mode("overwrite").parquet(out_dir)
     return spark.read.parquet(out_dir)
 
 

@@ -22,14 +22,15 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from striot_spark.functions.caching import track_persist, untrack
+
 #: graphs with at most this many edges pin iteration exchanges to
-#: a size-derived width (see pagerank's small-graph gate)
+#: a size-derived width (see pagerank's small-graph gate); the one
+#: knob of the round rule — 0 sends every non-empty graph down the
+#: ungated path the 100 TB plan takes
 SMALL_GRAPH_CONF = "striot.graph.smallEdgeRows"
 SMALL_GRAPH_DEFAULT = 5_000_000
 
-#: explicit override for the gated width (int); unset = derive from
-#: the edge count
-GATE_WIDTH_CONF = "striot.graph.smallGraphWidth"
 #: target edge rows per task under the gate: the pinned width is
 #: ceil(edge_rows / this), floored at 8 tasks and capped at
 #: defaultParallelism — derived from the DATA, not a machine constant
@@ -48,8 +49,7 @@ def _gate_width(spark, edge_rows: int) -> int | None:
     ``defaultParallelism``: a 16k-node state table iterated for R
     rounds at a machine-sized width is R x width near-empty tasks of
     pure scheduling (guide: derive partitioning from input size, not
-    a constant tuned for the machine). ``GATE_WIDTH_CONF`` overrides
-    the derivation for A/B probes and tuning.
+    a constant tuned for the machine).
     """
     try:
         small_edges = int(
@@ -60,46 +60,43 @@ def _gate_width(spark, edge_rows: int) -> int | None:
     rows = int(edge_rows or 0)
     if rows > small_edges:
         return None
-    try:
-        override = spark.conf.get(GATE_WIDTH_CONF, "")
-    except ValueError:
-        override = ""
-    if override:
-        return max(1, int(override))
     dp = spark.sparkContext.defaultParallelism
     return min(dp, max(8, -(-rows // GATE_TARGET_ROWS)))
 
 
-#: lineage-cut cadence override under the small-graph gate (int
-#: rounds; 0 = keep the caller's cadence, i.e. the pre-r16 behavior)
-GATE_CKPT_CONF = "striot.graph.gatedCheckpointEvery"
+def _part(df: DataFrame, n: int | None, key: str) -> DataFrame:
+    """Pin ``df`` to the gated width ``n`` on ``key``; ungated
+    (``n`` is None) it keeps the session/AQE width."""
+    return df.repartition(n, key) if n else df
 
 
-def _cut_every(spark, gate_width: int | None, caller: int) -> int:
-    """Lineage-cut cadence for the iterative loops.
+def _end_round(
+    df: DataFrame, done: int, every: int, persist: bool
+) -> DataFrame:
+    """Materialize an iterative loop's round state — the one round
+    rule of this module. After ``done`` rounds, cut lineage with an
+    eager ``localCheckpoint`` when ``done % every == 0`` (``every ==
+    0``: never); a cut round is already stored, so it is not also
+    persisted (that would cache a dead second copy). Otherwise
+    ``track_persist`` when ``persist``, else return ``df`` as is.
 
-    Above the small-graph gate (``gate_width is None``) the caller's
-    ``checkpoint_every`` stands — at scale the rounds are
-    compute-bound and an eager per-round materialization of the state
-    table is real I/O. UNDER the gate the dominant cost is the
-    DRIVER, not the executors: the round tree compounds in the
-    logical plan (persists do not truncate lineage), and AQE
-    re-optimizes the remaining plan at every query-stage boundary, so
-    per-stage planning grows with the number of uncut rounds —
-    measured 2.0x on hits/q277 (11.0s -> 5.5s min, interleaved
-    in-session) from cutting every round. ``localCheckpoint`` is pure
-    materialization: results are bit-identical, partitioning is
-    preserved, and the extra per-round job is a few hundred tiny
-    rows. ``GATE_CKPT_CONF`` overrides the gated cadence for A/B
-    probes (0 restores the caller's cadence).
+    Each loop states its cadence as ``every = <gated> if n else
+    <ungated>`` (one constant where the two agree), sized by how many
+    times a round references the previous state: a state read k times
+    per round grows the analyzed plan ~k^rounds between cuts. Under
+    the small-graph gate the dominant cost is the DRIVER, not the
+    executors: the round tree compounds in the logical plan (persists
+    do not truncate lineage) and AQE re-optimizes the remaining plan
+    at every query-stage boundary — measured 2.0x on hits/q277 from
+    cutting every round — so the loops where an A/B measured a win
+    cut every round under the gate. Above the gate the rounds are
+    compute-bound and an eager per-round materialization is real I/O,
+    so the ungated cadence stays wide. ``localCheckpoint`` is pure
+    materialization: results are bit-identical at any cadence.
     """
-    if not gate_width:
-        return caller
-    try:
-        v = int(spark.conf.get(GATE_CKPT_CONF, "1"))
-    except ValueError:
-        v = 1
-    return max(1, v) if v else caller
+    if every and done % every == 0:
+        return df.localCheckpoint(eager=True)
+    return track_persist(df) if persist else df
 
 
 #: hub-degree guard for the wedge/sort operator family
@@ -165,7 +162,6 @@ def pagerank(
     damp_num: int = 85,
     damp_den: int = 100,
     scale: int = 10**9,
-    checkpoint_every: int = 8,
     seeds: list | None = None,
     dangling: str = "ignore",
     weight: str | None = None,
@@ -201,9 +197,9 @@ def pagerank(
       seeds instead (random-walk-with-restart sends dangling mass back
       to the restart distribution). Costs one scalar aggregate +
       broadcast cross-join per round, and the rank plan references
-      itself twice per round, so lineage is cut at
-      ``min(checkpoint_every, 4)`` to keep the analyzed plan bounded
-      (~2^4 nodes between cuts; cf. ``k_core``'s 3-reference note).
+      itself twice per round, so lineage is cut every 4 rounds
+      instead of 8 to keep the analyzed plan bounded (~2^4 nodes
+      between cuts; cf. ``k_core``'s 3-reference note).
 
     Initial rank is ``scale`` per node; each round
 
@@ -241,12 +237,10 @@ def pagerank(
     with map-side partials — two key shuffles, both fully parallel.
     The edge list is degree-annotated and persisted ONCE; ranks (one
     row per vertex, two columns) are the only per-iteration traffic.
-    Lineage is truncated with ``localCheckpoint`` every
-    ``checkpoint_every`` rounds so deep iteration counts do not grow
-    the plan unboundedly.
+    Lineage is truncated with ``localCheckpoint`` every 8 rounds
+    (``_end_round``) so deep iteration counts do not grow the plan
+    unboundedly.
     """
-    from striot_spark.functions.caching import track_persist, untrack
-
     if iterations < 0:
         raise ValueError("iterations must be >= 0")
     if dangling not in ("ignore", "self", "redistribute"):
@@ -288,10 +282,6 @@ def pagerank(
     else:
         edge_rows, max_w = e.count(), 0
     n = _gate_width(spark, edge_rows)
-
-    def part(df: DataFrame, key: str) -> DataFrame:
-        return df.repartition(n, key) if n else df
-
     if n:
         # LPA's r15 idiom, extended here for the same reason it won
         # there: a cached plan's output partitioning is frozen at
@@ -309,7 +299,7 @@ def pagerank(
         # (two wide serialized jobs, 1.24x); this narrows the source
         # so everything downstream is n-wide by construction.
         raw = e
-        e = track_persist(part(e, "src"))
+        e = track_persist(_part(e, n, "src"))
         e.count()
         untrack(raw)
 
@@ -319,13 +309,14 @@ def pagerank(
         # exchange-free at width n — part-after-distinct paid the
         # session-width distinct exchange AND the n-wide repartition
         nodes = track_persist(
-            part(e.select(F.col("src").alias("node")), "node").distinct()
+            _part(e.select(F.col("src").alias("node")), n, "node").distinct()
         )
     else:
         nodes = track_persist(
-            part(
+            _part(
                 e.select(F.col("src").alias("node"))
                 .unionByName(e.select(F.col("dst").alias("node"))),
+                n,
                 "node",
             ).distinct()
         )
@@ -339,7 +330,7 @@ def pagerank(
             # gate so e_deg's build stays n-wide
             prev = e
             e = track_persist(
-                part(
+                _part(
                     e.unionByName(
                         dang.select(
                             F.col("node").alias("src"),
@@ -347,6 +338,7 @@ def pagerank(
                             F.lit(1).cast("long").alias("w"),
                         )
                     ),
+                    n,
                     "src",
                 )
             )
@@ -355,7 +347,7 @@ def pagerank(
                 untrack(prev)
     # out-strength: Σw per src (== out-degree when unweighted, w=1)
     deg = e.groupBy("src").agg(F.sum("w").alias("outdeg"))
-    e_deg = track_persist(part(e.join(deg, "src"), "src"))
+    e_deg = track_persist(_part(e.join(deg, "src"), n, "src"))
     # the documented headroom is ENFORCED (modularity precedent —
     # PERF.md §32's 10× probe proved a silent 2^63 wrap is a real
     # failure mode, not a doc footnote): total rank mass is ~N*scale
@@ -430,17 +422,21 @@ def pagerank(
             .otherwise(F.lit(0))
             .cast("long")
         )
+    # ranks are referenced once per round; redistribute references
+    # them twice (scalar agg + correction), doubling the plan between
+    # cuts — tighten there
+    every = 4 if dangling == "redistribute" else 8
     ranks = nodes.withColumn("rank", init_col)
     for i in range(iterations):
         contribs = (
-            e_deg.join(part(ranks, "node"), e_deg["src"] == ranks["node"])
+            e_deg.join(_part(ranks, n, "node"), e_deg["src"] == ranks["node"])
             .select(
                 F.col("dst").alias("node"),
                 F.expr("(rank * w) DIV outdeg").alias("c"),
             )
         )
         contribs = (
-            part(contribs, "node")
+            _part(contribs, n, "node")
             .groupBy("node")
             .agg(F.sum("c").alias("s"))
         )
@@ -479,15 +475,7 @@ def pagerank(
                     .cast("long")
                     .alias("rank"),
                 )
-        # redistribute references ranks twice per round (scalar agg +
-        # correction), doubling the plan between cuts — tighten there
-        cut = (
-            checkpoint_every
-            if dangling != "redistribute"
-            else min(checkpoint_every, 4)
-        )
-        if (i + 1) % cut == 0:
-            ranks = ranks.localCheckpoint(eager=True)
+        ranks = _end_round(ranks, i + 1, every, False)
     return ranks
 
 
@@ -614,7 +602,6 @@ def triangle_count(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("hu") < F.col("hv"))
     )
-    from striot_spark.functions.caching import track_persist
 
     oriented = track_persist(
         ann.select(
@@ -744,8 +731,6 @@ def _edge_triangle_support(p: DataFrame) -> DataFrame:
     """Per-edge triangle support over a CANONICAL undirected pair set:
     ``_orient_pairs`` + ``_support_from_oriented`` for one-shot
     callers (persists the oriented layout it builds)."""
-    from striot_spark.functions.caching import track_persist
-
     return _support_from_oriented(track_persist(_orient_pairs(p)))
 
 
@@ -789,8 +774,6 @@ def k_truss(
     references it ~3× (two wedge sides + closing probe), the k_core
     cadence rule (PERF.md §30) at its tightest.
     """
-    from striot_spark.functions.caching import track_persist
-
     if k < 2:
         raise ValueError("k must be >= 2 (k-2 is the support threshold)")
     if rounds < 0:
@@ -835,7 +818,6 @@ def label_propagation(
     rounds: int = 3,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 8,
     weight: str | None = None,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et
@@ -884,8 +866,6 @@ def label_propagation(
     node) are the only per-round traffic. Same small-graph width gate
     and ``localCheckpoint`` lineage cuts as ``pagerank``.
     """
-    from striot_spark.functions.caching import track_persist, untrack
-
     if rounds < 0:
         raise ValueError("rounds must be >= 0")
     spark = edges.sparkSession
@@ -903,9 +883,6 @@ def label_propagation(
     )
     n = _gate_width(spark, e.count())
 
-    def part(df: DataFrame, key: str) -> DataFrame:
-        return df.repartition(n, key) if n else df
-
     if n:
         # mirror pagerank's e_deg persist: co-partition the persisted
         # edge list by the per-round join key, so the label join is
@@ -916,7 +893,7 @@ def label_propagation(
         # exists to remove (big graphs keep the session width and the
         # per-round exchange is the real data term).
         raw = e
-        e = track_persist(part(e, "src"))
+        e = track_persist(_part(e, n, "src"))
         # materialize the copy from the still-cached raw layout, then
         # drop the raw persist — keeping both would double cached edge
         # memory for the rest of the job (ADVICE r15); the loop only
@@ -924,20 +901,24 @@ def label_propagation(
         e.count()
         untrack(raw)
     nodes = track_persist(
-        part(
+        _part(
             e.select(F.col("src").alias("node"))
             .unionByName(e.select(F.col("dst").alias("node")))
             .distinct(),
+            n,
             "node",
         )
     )
+    # labels are referenced once per round: cut every 8 rounds, and
+    # every round under the gate (``_end_round``'s driver-cost note)
+    every = 1 if n else 8
     labels = nodes.withColumn("label", F.col("node"))
     for i in range(rounds):
         nbr = e.join(
-            part(labels, "node"), e["src"] == labels["node"]
+            _part(labels, n, "node"), e["src"] == labels["node"]
         ).select(F.col("dst").alias("node"), "label", "w")
         votes = (
-            part(nbr, "node")
+            _part(nbr, n, "node")
             .groupBy("node", "label")
             .agg(F.sum("w").alias("c"))
         )
@@ -975,8 +956,7 @@ def label_propagation(
                 F.coalesce(F.col("__pl"), F.col("node")).alias("label"),
             )
         )
-        if (i + 1) % _cut_every(spark, n, checkpoint_every) == 0:
-            labels = labels.localCheckpoint(eager=True)
+        labels = _end_round(labels, i + 1, every, False)
     return labels
 
 
@@ -986,7 +966,6 @@ def k_core(
     rounds: int,
     src: str = "a",
     dst: str = "b",
-    checkpoint_every: int = 2,
     weight: str | None = None,
 ) -> DataFrame:
     """Fixed-round k-core peeling over a SYMMETRIC edge list (pass both
@@ -1016,28 +995,24 @@ def k_core(
     Plan shape per round: one degree groupBy with map-side partials
     (shuffle carries #nodes partials) + two survivor semi-joins on the
     endpoint keys — all key equi-joins, nothing buffers a node's
-    neighborhood. The surviving edge set is materialized per round —
-    persisted on plain rounds, and on every ``checkpoint_every``-th
-    round lineage is instead truncated with an eager
-    ``localCheckpoint`` (which already stores the rows; persisting
-    under it would cache a dead second copy) — the same mechanism as
-    ``pagerank`` but a much TIGHTER
-    default (2, not 8): each k-core round references the previous
-    edge set THREE times (degree groupBy + two semi-joins), so the
-    analyzed plan grows ~3^rounds between cuts — exponential, unlike
+    neighborhood. The surviving edge set is materialized per round by
+    ``_end_round``: persisted on plain rounds, and every 2nd round
+    lineage is instead truncated with an eager ``localCheckpoint`` —
+    the same mechanism as ``pagerank`` but a much TIGHTER cadence
+    (2, not 8): each k-core round references the previous edge set
+    THREE times (degree groupBy + two semi-joins), so the analyzed
+    plan grows ~3^rounds between cuts — exponential, unlike
     pagerank's once-per-round (linear) self-reference — and a cadence
     of 8 would hand Catalyst a ~3^8-node tree per cut (driver OOM in
     plan-string generation well before rounds=16; measured, not
     hypothetical). Every 2 rounds caps the factor at 9×. Small graphs
     pin exchanges to defaultParallelism via the same gate as pagerank.
-    k_core deliberately does NOT route through ``_cut_every`` (the
-    gated cut-every-round override LPA/hits/betweenness use): the r16
-    cadence A/B measured parity for k_core — the default cadence of 2
-    already caps the 3-reference compounding at 9×, so cutting every
-    round buys nothing and costs an extra eager job per round.
+    The gated cadence is also 2, not the cut-every-round of
+    LPA/hits/betweenness: the r16 cadence A/B measured parity for
+    k_core — 2 already caps the 3-reference compounding at 9×, so
+    cutting every round buys nothing and costs an extra eager job per
+    round.
     """
-    from striot_spark.functions.caching import track_persist
-
     if k < 1:
         raise ValueError("k must be >= 1")
     if rounds < 0:
@@ -1061,32 +1036,26 @@ def k_core(
     )
     n = _gate_width(spark, e.count())
 
-    def part(df: DataFrame, key: str) -> DataFrame:
-        return df.repartition(n, key) if n else df
-
     for r in range(rounds):
-        deg = part(e, "s").groupBy("s").agg(
+        deg = _part(e, n, "s").groupBy("s").agg(
             F.sum("w").alias("deg")
         )
         ok = deg.filter(F.col("deg") >= k).select("s")
         e = (
-            part(e, "s")
-            .join(part(ok, "s"), "s", "left_semi")
+            _part(e, n, "s")
+            .join(_part(ok, n, "s"), "s", "left_semi")
             .withColumnRenamed("s", "_s")
             .withColumnRenamed("d", "s")
-            .join(part(ok, "s"), "s", "left_semi")
+            .join(_part(ok, n, "s"), "s", "left_semi")
             .select(
                 F.col("_s").alias("s"), F.col("s").alias("d"), "w"
             )
         )
-        # a checkpointed round is already materialized — skip the
-        # persist there (it would cache a dead second copy)
-        if (r + 1) % checkpoint_every == 0:
-            e = e.localCheckpoint(eager=True)
-        else:
-            e = track_persist(e)
+        # the edge set is referenced three times per round: cut
+        # every 2 rounds, gated or not
+        e = _end_round(e, r + 1, 2, True)
     return (
-        part(e, "s")
+        _part(e, n, "s")
         .groupBy("s")
         .agg(F.sum("w").cast("long").alias("deg"))
         .select(F.col("s").alias("node"), "deg")
@@ -1139,8 +1108,6 @@ def modularity(
     three aggregations. Returns one row
     (q_ppm, n_communities, e_directed).
     """
-    from striot_spark.functions.caching import track_persist
-
     lab = track_persist(
         labels.select(F.col(node).alias("__n"), F.col(label).alias("__l"))
     )
@@ -1232,8 +1199,6 @@ def khop_reach(
     expansion with fixed-width register state) once |reach| stops
     fitting. Returns (node, reach_1, ..., reach_{hops}).
     """
-    from striot_spark.functions.caching import track_persist
-
     if hops < 1:
         raise ValueError("hops must be >= 1")
     e = track_persist(
@@ -1321,7 +1286,6 @@ def khop_reach_hll(
     DuckDB oracle (md5(CAST(x AS VARCHAR))) agrees for integer keys.
     """
     from striot_spark.functions.analytics import hll_estimate, hll_registers
-    from striot_spark.functions.caching import track_persist
 
     if hops < 1:
         raise ValueError("hops must be >= 1")
@@ -1352,6 +1316,7 @@ def khop_reach_hll(
     out = hll_estimate(regs, ["node"], m, max_rho).withColumnRenamed(
         "hll_est", "est_1"
     )
+    every = 1 if n else 0
     for h in range(2, hops + 1):
         prop = e.join(regs, regs["node"] == e["dst"]).select(
             e["src"].alias("node"), "bucket", "reg"
@@ -1371,10 +1336,7 @@ def khop_reach_hll(
         # results); above the gate keep the persist: at 100 TB an
         # eager per-level materialization of the N x m register table
         # is real I/O and the plan is only hops deep.
-        if n:
-            regs = merged.localCheckpoint(eager=True)
-        else:
-            regs = track_persist(merged)
+        regs = _end_round(merged, h - 1, every, True)
         out = out.join(
             hll_estimate(regs, ["node"], m, max_rho).withColumnRenamed(
                 "hll_est", f"est_{h}"
@@ -1508,8 +1470,6 @@ def edge_neighborhood_jaccard(
     Σ deg² worst case; hub-skewed graphs cap the probe by degree
     upstream). Returns (a, b, common_nbrs, union_nbrs, j_ppm).
     """
-    from striot_spark.functions.caching import track_persist
-
     p = track_persist(
         pairs.select(F.col(a).alias("a"), F.col(b).alias("b")).distinct()
     )
@@ -1554,6 +1514,85 @@ def edge_neighborhood_jaccard(
     )
 
 
+def _min_cost_arcs(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    cost: str | None,
+    rounds: int,
+    op: str,
+) -> tuple[DataFrame, int]:
+    """Bellman-Ford arc setup shared by ``sssp`` and
+    ``harmonic_centrality_pivots``: the persisted min-cost-reduced arc
+    list (src, dst, cost) and its row count.
+
+    Parallel arcs are reduced to the cheapest: only it can ever be on
+    a shortest path, and the reduce bounds the relax join at one row
+    per distinct arc. ONE setup action covers all three probes — the
+    small-graph gate's arc count plus (cost given) the sign check and
+    the ``rounds * max_cost`` 2^63 headroom bound — the same fold
+    pagerank's weighted guard uses, so a guarded run costs zero extra
+    jobs over an unguarded one. Unit costs (``cost=None``) skip both
+    guards.
+    """
+    if cost is not None:
+        _require_integral(edges, cost, op)
+    cost_col = (
+        F.lit(1).cast("long") if cost is None else F.col(cost).cast("long")
+    )
+    e = track_persist(
+        edges.select(
+            F.col(src).alias("src"),
+            F.col(dst).alias("dst"),
+            cost_col.alias("cost"),
+        )
+        .groupBy("src", "dst")
+        .agg(F.min("cost").alias("cost"))
+    )
+    edge_rows, lo, hi = e.agg(
+        F.count(F.lit(1)), F.min("cost"), F.max("cost")
+    ).collect()[0]
+    if cost is not None:
+        if lo is not None and lo < 0:
+            raise ValueError(
+                f"{op}: negative cost {lo} — fixed-round relaxation "
+                "over negative arcs has no shortest-path reading "
+                "(no negative-cycle detection); rescale costs to >= 0"
+            )
+        if hi is not None and rounds * hi > 2**63 - 1:
+            raise ValueError(
+                f"{op}: rounds * max_cost = {rounds} * {hi} exceeds "
+                "2^63-1 — the exact long distance would silently "
+                "wrap; rescale the cost column"
+            )
+    return e, edge_rows
+
+
+def _seed_state(
+    e: DataFrame, ids: list, op: str, what: str, *cols
+) -> DataFrame:
+    """Persisted initial state of the source/pivot BFS loops
+    (``sssp``, ``harmonic_centrality_pivots``, ``betweenness_pivots``):
+    the nodes of arc list ``e`` that are in ``ids``, projected to
+    ``cols``. Presence is validated by counting this PERSISTED state —
+    the same scan warms the cache the first round reads, where a
+    separate distinct+filter probe was a full extra pass over the arc
+    list. An absent id would silently contribute nothing, so it
+    raises.
+    """
+    nodes = e.select("src").union(e.select("dst")).distinct().select(
+        F.col("src").alias("node")
+    )
+    state = track_persist(nodes.filter(F.col("node").isin(ids)).select(*cols))
+    hits = state.count()
+    if hits != len(ids):
+        raise ValueError(
+            f"{op}: {len(ids) - hits} {what}(s) absent from the edge "
+            "list; check the id namespace"
+        )
+    return state
+
+
 def sssp(
     edges: DataFrame,
     sources: list,
@@ -1561,7 +1600,6 @@ def sssp(
     src: str = "src",
     dst: str = "dst",
     cost: str | None = None,
-    checkpoint_every: int = 4,
     return_parents: bool = False,
 ) -> DataFrame:
     """Single-source (multi-source) shortest-path distances by fixed
@@ -1593,8 +1631,8 @@ def sssp(
     previous distances — all keyed on ``node``, state is
     |reached| ≤ |V| rows however long the paths get. The distance
     table is referenced twice per round (re-reduce + improvement
-    check), so lineage is cut at ``min(checkpoint_every, 4)`` like
-    pagerank's redistribute arm. Returns (node, dist) for every node
+    check), so lineage is cut every 4 rounds like pagerank's
+    redistribute arm. Returns (node, dist) for every node
     reached within R rounds, sources included at 0.
 
     ``return_parents=True`` adds a deterministic PARENT pointer (path
@@ -1613,78 +1651,20 @@ def sssp(
     offering ``(final dist + cost, id)`` exactly once. Returns
     (node, dist, parent).
     """
-    from striot_spark.functions.caching import track_persist
-
     if rounds < 1:
         raise ValueError("sssp: rounds must be >= 1")
     if not sources:
         raise ValueError("sssp: sources must be non-empty")
     sources = sorted(set(sources))
-    if cost is not None:
-        _require_integral(edges, cost, "sssp")
-    cost_col = (
-        F.lit(1).cast("long") if cost is None else F.col(cost).cast("long")
-    )
-    # min-cost reduce parallel edges: only the cheapest (src,dst) arc
-    # can ever be on a shortest path, and the reduce bounds the relax
-    # join at one row per distinct arc
-    e = track_persist(
-        edges.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            cost_col.alias("cost"),
-        )
-        .groupBy("src", "dst")
-        .agg(F.min("cost").alias("cost"))
-    )
-    # ONE setup action covers all three probes — the small-graph
-    # gate's edge count plus (cost given) the sign check and the
-    # 2^63 headroom bound — the same fold pagerank's weighted guard
-    # uses, so guarded sssp runs zero extra jobs over unguarded
-    limit = 2**63 - 1
-    edge_rows, lo, hi = e.agg(
-        F.count(F.lit(1)), F.min("cost"), F.max("cost")
-    ).collect()[0]
-    if cost is not None:
-        if lo is not None and lo < 0:
-            raise ValueError(
-                f"sssp: negative cost {lo} — fixed-round relaxation "
-                "over negative arcs has no shortest-path reading "
-                "(no negative-cycle detection); rescale costs to >= 0"
-            )
-        if hi is not None and rounds * hi > limit:
-            raise ValueError(
-                f"sssp: rounds * max_cost = {rounds} * {hi} exceeds "
-                "2^63-1 — the exact long distance would silently "
-                "wrap; rescale the cost column"
-            )
+    e, edge_rows = _min_cost_arcs(edges, src, dst, cost, rounds, "sssp")
     # small-graph gate, same conf and rationale as pagerank's: pin the
     # per-round exchanges to a size-derived width below the row
     # threshold
-    spark = edges.sparkSession
-    n = _gate_width(spark, edge_rows)
-
-    def part(df: DataFrame) -> DataFrame:
-        return df.repartition(n, "node") if n else df
-
-    nodes = e.select("src").union(e.select("dst")).distinct().select(
-        F.col("src").alias("node")
+    n = _gate_width(edges.sparkSession, edge_rows)
+    init = _seed_state(
+        e, sources, "sssp", "source",
+        "node", F.lit(0).cast("long").alias("dist"),
     )
-    init = nodes.filter(F.col("node").isin(sources)).select(
-        "node", F.lit(0).cast("long").alias("dist")
-    )
-    init = track_persist(init)
-    # source presence validated by counting the PERSISTED initial
-    # state — the same scan warms the cache the first round reads
-    # (betweenness' fold); the separate distinct+filter probe job
-    # this replaces was a full extra pass over the arc list
-    hits = init.count()
-    if hits != len(sources):
-        raise ValueError(
-            f"sssp: {len(sources) - hits} source(s) absent from the "
-            "edge list — a missing source silently contributes no "
-            "distances; check the id namespace"
-        )
     # parents ride OUTSIDE the per-round fold: min(struct(dist,
     # parent)) lands in SortAggregate (struct/string buffers are not
     # HashAggregate-able), measured 3.6× the dist-only rounds at
@@ -1699,10 +1679,13 @@ def sssp(
         if return_parents
         else None
     )
+    # the distance table is referenced twice per round (re-reduce +
+    # improvement check)
+    every = (1 if n else 4) if return_parents else 4
     dist = init
     frontier = dist
     for r in range(rounds):
-        fr = part(frontier)
+        fr = _part(frontier, n, "node")
         cand = fr.join(e, fr["node"] == e["src"]).select(
             F.col("dst").alias("node"),
             (F.col("dist") + F.col("cost")).alias("dist"),
@@ -1717,7 +1700,7 @@ def sssp(
             cand = track_persist(cand)
             offers.append(cand)
         new_dist = (
-            part(dist.unionByName(cand.drop("parent")))
+            _part(dist.unionByName(cand.drop("parent")), n, "node")
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
@@ -1734,16 +1717,8 @@ def sssp(
         # regression under it (q249 0.97x / q267 1.06x, the
         # harmonic/coreness pattern: linear single-reference chains
         # don't pay the replanning cost the cut removes), so it keeps
-        # the caller's cadence.
-        cut = (
-            _cut_every(spark, n, min(checkpoint_every, 4))
-            if return_parents
-            else min(checkpoint_every, 4)
-        )
-        if (r + 1) % cut == 0:
-            new_dist = new_dist.localCheckpoint(eager=True)
-        else:
-            new_dist = track_persist(new_dist)
+        # the ungated cadence.
+        new_dist = _end_round(new_dist, r + 1, every, True)
         if r + 1 < rounds:  # the last frontier is never expanded
             frontier = track_persist(
                 new_dist.join(
@@ -1865,7 +1840,6 @@ def harmonic_centrality_pivots(
     dst: str = "dst",
     cost: str | None = None,
     scale: int = 1_000_000,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Pivot-sampled WEIGHTED harmonic centrality — the Eppstein-Wang
     (2001) estimator: run exact shortest paths from a small pivot set
@@ -1887,8 +1861,6 @@ def harmonic_centrality_pivots(
     Returns (node, n_reached, hc_est) — exact longs; an oracle
     unrolling the same per-pivot recurrence reproduces every row.
     """
-    from striot_spark.functions.caching import track_persist
-
     if rounds < 1:
         raise ValueError("harmonic_centrality_pivots: rounds must be >= 1")
     if not pivots:
@@ -1896,75 +1868,34 @@ def harmonic_centrality_pivots(
             "harmonic_centrality_pivots: pivots must be non-empty"
         )
     pivots = sorted(set(pivots))
-    if cost is not None:
-        _require_integral(edges, cost, "harmonic_centrality_pivots")
-    cost_col = (
-        F.lit(1).cast("long") if cost is None else F.col(cost).cast("long")
+    e, edge_rows = _min_cost_arcs(
+        edges, src, dst, cost, rounds, "harmonic_centrality_pivots"
     )
-    e = track_persist(
-        edges.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            cost_col.alias("cost"),
-        )
-        .groupBy("src", "dst")
-        .agg(F.min("cost").alias("cost"))
+    n = _gate_width(edges.sparkSession, edge_rows)
+    dist = _seed_state(
+        e, pivots, "harmonic_centrality_pivots", "pivot",
+        F.col("node").alias("pivot"),
+        "node",
+        F.lit(0).cast("long").alias("dist"),
     )
-    limit = 2**63 - 1
-    edge_rows, lo, hi = e.agg(
-        F.count(F.lit(1)), F.min("cost"), F.max("cost")
-    ).collect()[0]
-    if cost is not None:
-        if lo is not None and lo < 0:
-            raise ValueError(
-                f"harmonic_centrality_pivots: negative cost {lo}; "
-                "rescale costs to >= 0"
-            )
-        if hi is not None and rounds * hi > limit:
-            raise ValueError(
-                f"harmonic_centrality_pivots: rounds * max_cost = "
-                f"{rounds} * {hi} exceeds 2^63-1; rescale the cost "
-                "column"
-            )
-    spark = edges.sparkSession
-    n = _gate_width(spark, edge_rows)
-
-    def part(df: DataFrame) -> DataFrame:
-        return df.repartition(n, "node") if n else df
-
-    nodes = e.select("src").union(e.select("dst")).distinct().select(
-        F.col("src").alias("node")
-    )
-    dist = track_persist(
-        nodes.filter(F.col("node").isin(pivots)).select(
-            F.col("node").alias("pivot"),
-            "node",
-            F.lit(0).cast("long").alias("dist"),
-        )
-    )
-    # pivot presence validated by counting the PERSISTED initial
-    # state — the same scan warms the cache the first round reads
-    # (betweenness' fold); the separate distinct+filter probe job
-    # this replaces was a full extra pass over the arc list
-    hits = dist.count()
-    if hits != len(pivots):
-        raise ValueError(
-            f"harmonic_centrality_pivots: {len(pivots) - hits} "
-            "pivot(s) absent from the edge list; check the id "
-            "namespace"
-        )
     frontier = dist
     for r in range(rounds):
-        fr = part(frontier)
+        fr = _part(frontier, n, "node")
         cand = fr.join(e, fr["node"] == e["src"]).select(
             "pivot",
             F.col("dst").alias("node"),
             (F.col("dist") + F.col("cost")).alias("dist"),
         )
-        new_dist = track_persist(
-            part(dist.unionByName(cand))
+        # sssp's order: the distance table (referenced twice per
+        # round, re-reduce + improvement check) is cut every 4 rounds
+        # or persisted BEFORE the next frontier is derived from it
+        new_dist = _end_round(
+            _part(dist.unionByName(cand), n, "node")
             .groupBy("pivot", "node")
-            .agg(F.min("dist").alias("dist"))
+            .agg(F.min("dist").alias("dist")),
+            r + 1,
+            4,
+            True,
         )
         if r + 1 < rounds:
             frontier = track_persist(
@@ -1978,8 +1909,6 @@ def harmonic_centrality_pivots(
                 ).select("pivot", "node", "dist")
             )
         dist = new_dist
-        if (r + 1) % min(checkpoint_every, 4) == 0:
-            dist = dist.localCheckpoint(eager=True)
     return (
         dist.filter(F.col("dist") > 0)
         .groupBy("node")
@@ -2029,7 +1958,6 @@ def local_clustering(
     Returns (node, degree, n_tri, lcc_ppm) for every node, degree-1
     nodes at lcc 0.
     """
-    from striot_spark.functions.caching import track_persist
     from striot_spark.functions.text import md5_hash64
 
     if max_degree is not None and max_degree < 1:
@@ -2177,8 +2105,6 @@ def link_prediction_ra(
     Returns (u, v, common_nbrs, ra_ppm) for every distance-2
     non-edge.
     """
-    from striot_spark.functions.caching import track_persist
-
     if max_degree is not None and max_degree < 1:
         raise ValueError("link_prediction_ra: max_degree must be >= 1")
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -2233,7 +2159,6 @@ def coreness(
     rounds: int = 3,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 4,
     max_degree: int | None = None,
 ) -> DataFrame:
     """Per-node CORENESS (core number) by the h-index iteration (Lü,
@@ -2273,8 +2198,6 @@ def coreness(
     """
     from pyspark.sql import Window
 
-    from striot_spark.functions.caching import track_persist
-
     if rounds < 0:
         raise ValueError("coreness: rounds must be >= 0")
     if max_degree is not None and max_degree < 1:
@@ -2301,9 +2224,6 @@ def coreness(
         )
     n = _gate_width(spark, arc_rows or 0)
 
-    def part(df: DataFrame, key: str) -> DataFrame:
-        return df.repartition(n, key) if n else df
-
     if max_degree is not None:
         c = track_persist(
             c.select("node", F.least(F.col("c"), F.lit(max_degree).cast("long")).alias("c"))
@@ -2320,7 +2240,7 @@ def coreness(
         )
         if max_degree is None:
             c = (
-                part(x, "node")
+                _part(x, n, "node")
                 .withColumn("rk", F.row_number().over(w))
                 .groupBy("node")
                 .agg(
@@ -2333,7 +2253,7 @@ def coreness(
             # counting H-index: per (node, clipped value) count, then
             # cum-count descending — ≤ max_degree rows per node sort
             counts = (
-                part(x, "node")
+                _part(x, n, "node")
                 .groupBy("node", "cn")
                 .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
             )
@@ -2346,14 +2266,9 @@ def coreness(
                     .alias("c")
                 )
             )
-        # materialize once per round: an eager checkpoint on cut
-        # rounds (which already stores the rows — persisting under it
-        # would pay a cache-write pass for a dead second copy), a
-        # persist otherwise — the same shape as k_core/betweenness
-        if (r + 1) % checkpoint_every == 0:
-            c = c.localCheckpoint(eager=True)
-        else:
-            c = track_persist(c)
+        # the value table is referenced once per round (the neighbor
+        # join): cut every 4 rounds, gated or not
+        c = _end_round(c, r + 1, 4, True)
     return c.select("node", F.col("c").alias("coreness"))
 
 
@@ -2364,7 +2279,6 @@ def betweenness_pivots(
     src: str = "src",
     dst: str = "dst",
     scale: int = 1_000_000,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Pivot-sampled BETWEENNESS centrality — Brandes (2001) run from
     a small pivot set (the Brandes-Pich 2007 estimator), the last
@@ -2415,8 +2329,6 @@ def betweenness_pivots(
     in the final union), so a caller that runs multiple actions on the
     result (count then collect, say) should persist it first.
     """
-    from striot_spark.functions.caching import track_persist
-
     if rounds < 1:
         raise ValueError("betweenness_pivots: rounds must be >= 1")
     if not pivots:
@@ -2441,37 +2353,18 @@ def betweenness_pivots(
                 "shortest-path count sigma could wrap; reduce rounds "
                 "or cap hub in-degree upstream"
             )
-    spark = edges.sparkSession
-    n = _gate_width(spark, arc_rows or 0)
-
-    def part(df: DataFrame) -> DataFrame:
-        return df.repartition(n, "node") if n else df
-
-    nodes = e.select("src").union(e.select("dst")).distinct().select(
-        F.col("src").alias("node")
+    n = _gate_width(edges.sparkSession, arc_rows or 0)
+    state = _seed_state(
+        e, pivots, "betweenness_pivots", "pivot",
+        F.col("node").alias("pivot"),
+        "node",
+        F.lit(0).cast("long").alias("dist"),
+        F.lit(1).cast("long").alias("sigma"),
     )
-    state = track_persist(
-        nodes.filter(F.col("node").isin(pivots)).select(
-            F.col("node").alias("pivot"),
-            "node",
-            F.lit(0).cast("long").alias("dist"),
-            F.lit(1).cast("long").alias("sigma"),
-        )
-    )
-    # pivot presence validated by counting the PERSISTED initial
-    # state — the same scan warms the cache the first round reads,
-    # one job instead of a separate probe (the sssp probe predates
-    # this fold; here validation is free)
-    hits = state.count()
-    if hits != len(pivots):
-        raise ValueError(
-            f"betweenness_pivots: {len(pivots) - hits} pivot(s) "
-            "absent from the edge list; check the id namespace"
-        )
     frontier = state
     for k in range(1, rounds + 1):
         offers = (
-            part(frontier)
+            _part(frontier, n, "node")
             .join(e, frontier["node"] == e["src"])
             .select(
                 "pivot",
@@ -2508,14 +2401,9 @@ def betweenness_pivots(
         # growth OOMed the driver in plan-STRING generation, measured
         # not hypothetical — and so did this operator at rounds=3 on
         # a 3k-arc fixture before this cut): cap the factor with a
-        # tight cadence. A checkpointed round is already materialized,
-        # so it skips the persist (the sssp precedent — persisting the
-        # same union the eager checkpoint stores would hold a dead
-        # cached copy per round until release_persisted).
-        if k % _cut_every(spark, n, min(checkpoint_every, 2)) == 0:
-            state = state.localCheckpoint(eager=True)
-        else:
-            state = track_persist(state)
+        # tight cadence: every 2 rounds, and every round under the
+        # gate.
+        state = _end_round(state, k, 1 if n else 2, True)
     # shortest-path DAG: per pivot, arcs one level apart, built once.
     # Only levels the backward phase READS survive the build: u rows
     # outside [lo, hi] produce arcs no backward level filters to (the
@@ -2616,7 +2504,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     scale: int = 10**9,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Fixed-iteration integer HITS (Kleinberg 1999, public
     methodology) over a DIRECTED edge list — the mutual-reinforcement
@@ -2643,16 +2530,14 @@ def hits(
     one-row-per-node score frame + one groupBy with map-side partials
     + one scalar agg broadcast back — the pagerank shape, twice per
     round. The edge list is persisted ONCE; per-iteration traffic is
-    two (node, score) tables. Lineage cut every ``checkpoint_every``
-    rounds on both vectors (each round references each vector twice:
-    the raw sum and the normalizer).
+    two (node, score) tables. Lineage cut every 2 rounds (every round
+    under the small-graph gate) on both vectors (each round references
+    each vector twice: the raw sum and the normalizer).
 
     Returns (node, auth, hub) for every vertex of src ∪ dst —
     source-only nodes end with auth = 0, sink-only nodes with
     hub = 0.
     """
-    from striot_spark.functions.caching import track_persist
-
     if iterations < 1:
         raise ValueError("hits: iterations must be >= 1")
     spark = edges.sparkSession
@@ -2695,20 +2580,18 @@ def hits(
             f"hits: max_deg * (N * scale)^2 exceeds decimal(38,0) — "
             "the normalization product would overflow; lower scale"
         )
-    npart = _gate_width(spark, edge_rows)
-
-    def part(df: DataFrame, key: str) -> DataFrame:
-        return df.repartition(npart, key) if npart else df
+    n = _gate_width(spark, edge_rows)
 
     nodes = track_persist(
-        part(
+        _part(
             e.select(F.col("src").alias("node"))
             .unionByName(e.select(F.col("dst").alias("node")))
             .distinct(),
+            n,
             "node",
         )
     )
-    e_p = track_persist(part(e, "src"))
+    e_p = track_persist(_part(e, n, "src"))
 
     def _normalized(raw: DataFrame, out_col: str) -> DataFrame:
         # the normalizer references `raw` twice (scalar total + the
@@ -2726,34 +2609,34 @@ def hits(
             ).alias(out_col),
         )
 
+    every = 1 if n else 2
     h = nodes.withColumn("hub", F.lit(scale).cast("long"))
     a = None
     for i in range(iterations):
         raw_a = (
-            e_p.join(part(h, "node"), e_p["src"] == F.col("node"))
+            e_p.join(_part(h, n, "node"), e_p["src"] == F.col("node"))
             .select(F.col("dst").alias("node"), F.col("hub").alias("c"))
         )
         raw_a = (
-            part(raw_a, "node").groupBy("node").agg(F.sum("c").alias("s"))
+            _part(raw_a, n, "node").groupBy("node").agg(F.sum("c").alias("s"))
         )
         raw_a = nodes.join(raw_a, "node", "left").select(
             "node", F.coalesce(F.col("s"), F.lit(0)).alias("raw")
         )
         a = _normalized(raw_a, "auth")
         raw_h = (
-            e_p.join(part(a, "node"), e_p["dst"] == F.col("node"))
+            e_p.join(_part(a, n, "node"), e_p["dst"] == F.col("node"))
             .select(F.col("src").alias("node"), F.col("auth").alias("c"))
         )
         raw_h = (
-            part(raw_h, "node").groupBy("node").agg(F.sum("c").alias("s"))
+            _part(raw_h, n, "node").groupBy("node").agg(F.sum("c").alias("s"))
         )
         raw_h = nodes.join(raw_h, "node", "left").select(
             "node", F.coalesce(F.col("s"), F.lit(0)).alias("raw")
         )
         h = _normalized(raw_h, "hub")
-        if (i + 1) % _cut_every(spark, npart, checkpoint_every) == 0:
-            a = a.localCheckpoint(eager=True)
-            h = h.localCheckpoint(eager=True)
+        a = _end_round(a, i + 1, every, False)
+        h = _end_round(h, i + 1, every, False)
     return nodes.join(a, "node", "left").join(h, "node", "left").select(
         "node",
         F.coalesce(F.col("auth"), F.lit(0)).cast("long").alias("auth"),
@@ -2766,7 +2649,6 @@ def katz_centrality(
     rounds: int = 3,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Fixed-horizon Katz centrality (Katz 1953, public methodology)
     with attenuation factor 1/2, EXACT: katz(v) = Σ_{r=1..R} w_r(v)/2^r
@@ -2790,12 +2672,10 @@ def katz_centrality(
 
     Plan per round: one dst-key join of the walk table with the
     persisted edge list + one keyed groupBy sum — pagerank's shape
-    minus the scalar normalizer; lineage cut every
-    ``checkpoint_every`` rounds. Returns (node, katz_scaled) for
+    minus the scalar normalizer; lineage cut every 4 rounds on both
+    tables (each is referenced once per round). Returns (node, katz_scaled) for
     every vertex of src ∪ dst (nodes with no in-walks score 0).
     """
-    from striot_spark.functions.caching import track_persist
-
     if rounds < 1:
         raise ValueError("katz_centrality: rounds must be >= 1")
     spark = edges.sparkSession
@@ -2826,29 +2706,27 @@ def katz_centrality(
             "the exact-long walk-count headroom — lower rounds or "
             "pre-cap in-degree"
         )
-    npart = _gate_width(spark, arcs)
-
-    def part(df: DataFrame, key: str) -> DataFrame:
-        return df.repartition(npart, key) if npart else df
+    n = _gate_width(spark, arcs)
 
     nodes = track_persist(
-        part(
+        _part(
             e.select(F.col("src").alias("node"))
             .unionByName(e.select(F.col("dst").alias("node")))
             .distinct(),
+            n,
             "node",
         )
     )
-    e_p = track_persist(part(e, "src"))
+    e_p = track_persist(_part(e, n, "src"))
     walks = nodes.withColumn("w", F.lit(1).cast("long"))
     acc = nodes.withColumn("s", F.lit(0).cast("long"))
     for r in range(1, rounds + 1):
         nxt = (
-            e_p.join(part(walks, "node"), e_p["src"] == F.col("node"))
+            e_p.join(_part(walks, n, "node"), e_p["src"] == F.col("node"))
             .select(F.col("dst").alias("node"), F.col("w").alias("c"))
         )
         walks = (
-            part(nxt, "node")
+            _part(nxt, n, "node")
             .groupBy("node")
             .agg(F.sum("c").cast("long").alias("w"))
         )
@@ -2865,7 +2743,6 @@ def katz_centrality(
                 ).cast("long").alias("s"),
             )
         )
-        if r % checkpoint_every == 0:
-            walks = walks.localCheckpoint(eager=True)
-            acc = acc.localCheckpoint(eager=True)
+        walks = _end_round(walks, r, 4, False)
+        acc = _end_round(acc, r, 4, False)
     return acc.select("node", F.col("s").alias("katz_scaled"))

@@ -949,13 +949,24 @@ def test_quarter_window_graph_features_push_date_to_scan(spark, sf_dir):
         assert "BroadcastNestedLoopJoin" not in plan, q
     # q243 (r17) and q244's loops localCheckpoint under the small-graph
     # gate (khop_hll per-level cut / the k_core cadence rule at fan-out
-    # ~5), so the FINAL plan's lineage starts at the checkpoint — the
-    # date pushdown each inherits is q241's (same pair builder); gate
-    # only the join shapes here
+    # ~5), so the FINAL plan's lineage starts at the checkpoint — gate
+    # only the join shapes there
     for q in ("q243_khop_reach_hll", "q244_ktruss_edges"):
         plan = _executed(spark, q, sf_dir)
         assert "CartesianProduct" not in plan, q
         assert "BroadcastNestedLoopJoin" not in plan, q
+    # ungated, q243's levels persist instead of cutting, so its final
+    # plan still carries the lineitem scan: the date window must reach
+    # it there
+    from striot_spark.functions.graph import SMALL_GRAPH_CONF
+
+    spark.conf.set(SMALL_GRAPH_CONF, "0")
+    try:
+        fmt = _formatted(spark, "q243_khop_reach_hll", sf_dir)
+    finally:
+        spark.conf.unset(SMALL_GRAPH_CONF)
+    assert "GreaterThanOrEqual(l_shipdate," in fmt
+    assert "LessThan(l_shipdate," in fmt
 
 
 def test_sssp_rounds_are_keyed_joins_only(spark, sf_dir):
