@@ -1,7 +1,9 @@
 """Benchmark harness: runs the registered headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+local[$SPARK_GRAFT_CPUS] and prints JSON lines: the errors, the
+per-query parts, the top queries, and LAST the summary
+{"metric": ..., "value": total_sec, "unit": "sec", "sf": ..., ...}.
+The complete record goes to bench_full_latest.json.
 
 Each query is forced end-to-end with the noop sink (full computation, no
 driver-side collect skew).
@@ -12,13 +14,60 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
+
+
+def _local_dir_free_bytes() -> int | None:
+    """Free bytes on the first SPARK_LOCAL_DIRS entry (the temp dir when
+    unset), or None when it cannot be read."""
+    local = os.environ.get("SPARK_LOCAL_DIRS") or tempfile.gettempdir()
+    try:
+        return shutil.disk_usage(local.split(",")[0]).free
+    except OSError:
+        return None
+
+
+def time_queries(spark, queries: dict, sf_dir: str, repeats: int):
+    """Best-of-``repeats`` seconds per query, each forced end-to-end with
+    the noop sink. A query that raises does not stop the run: it lands
+    in ``errors`` (name -> exception text and free bytes on
+    SPARK_LOCAL_DIRS) instead of ``timings``. One progress line per
+    query goes to stderr. Returns (timings, errors)."""
+    timings: dict[str, float] = {}
+    errors: dict[str, dict] = {}
+    for name, fn in sorted(queries.items()):
+        try:
+            best = float("inf")
+            for _ in range(repeats):
+                # clearCache() drops any .persist() data from the
+                # previous repeat (Spark's CacheManager matches by plan
+                # equality, so the repeat would otherwise read cached
+                # intermediates)
+                spark.catalog.clearCache()
+                t0 = time.perf_counter()
+                fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+                best = min(best, time.perf_counter() - t0)
+            timings[name] = round(best, 4)
+        except Exception as e:  # one failing query must not blank the run
+            errors[name] = {
+                "error": f"{type(e).__name__}: {e}"[:500],
+                "free_bytes": _local_dir_free_bytes(),
+            }
+        took = f"{timings[name]:.3f}s" if name in timings else "ERROR"
+        print(
+            f"[bench] {name} {took} free_bytes={_local_dir_free_bytes()}",
+            file=sys.stderr,
+            flush=True,
+        )
+    return timings, errors
 
 
 def main() -> None:
@@ -47,12 +96,9 @@ def main() -> None:
     ):
         load_table(spark, sf_dir, t).count()
 
-    # best-of-2 per query: this box is shared and single-shot timings
+    # best-of-N per query: this box is shared and single-shot timings
     # swing up to ~70% under external load; the min is the stable
-    # compute-bound number. clearCache() between runs drops any
-    # .persist() data from the first run (Spark's CacheManager matches
-    # by plan equality, so the repeat would otherwise read cached
-    # intermediates) — only JVM/codegen/footer warmup carries over.
+    # compute-bound number.
     # streaming-drain queries are correctness-gated (q65 == q30's oracle)
     # but their wall time measures checkpoint replay, not engine
     # throughput — keep the bench a batch-compute signal
@@ -106,17 +152,8 @@ def main() -> None:
     # tightens the min at ~50% more wall time
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
 
-    timings: dict[str, float] = {}
-    for name, fn in sorted(all_queries().items()):
-        if name in skip:
-            continue
-        best = float("inf")
-        for _ in range(repeats):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 4)
+    queries = {n: fn for n, fn in all_queries().items() if n not in skip}
+    timings, errors = time_queries(spark, queries, sf_dir, repeats)
 
     total = round(sum(timings.values()), 4)
     # machine-speed calibration: a fixed CPU-bound JVM job, best-of-3.
@@ -138,10 +175,10 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "calib_sec": round(calib, 4),
+        "errors": errors,
     }
-    # the driver's artifact capture truncates long stdout tails (r04
-    # lost q01–q22); persist the complete per-query table in-repo so
-    # every round's full numbers survive regardless
+    # stdout captures keep only a tail (r04 lost q01–q22), so the
+    # complete per-query table is persisted in-repo
     out = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT", str(REPO / "bench_full_latest.json")
     )
@@ -150,19 +187,26 @@ def main() -> None:
             json.dump(payload, f, indent=1, sort_keys=True)
             f.write("\n")
     except OSError:
-        pass  # stdout line below is still the contract surface
-    print(json.dumps(payload))
-    # Per-query visibility for the driver (VERDICT r16 task 2): the
-    # driver's artifact capture stores only the last 2000 chars of
-    # stdout (every committed BENCH_r*.json tail is exactly 2000), so
-    # the full 250-key payload line above can never be visible whole.
-    # Emit the table again as SELF-CONTAINED chunk lines (parseable by
-    # any consumer that reads full stdout), then a "top" line with the
-    # most expensive queries — sized so that top line + summary line
-    # together fit inside the 2000-char window. Regression screening
-    # concentrates where the seconds are: the top ~40 rows cover the
-    # majority of total time. Additions only; the contract summary
-    # line stays LAST and unchanged.
+        pass  # the part lines below still carry every timing
+    print(
+        json.dumps(
+            {
+                "metric": "striot_spark_bench_errors",
+                "sf": sf,
+                "n_errors": len(errors),
+                "errors": errors,
+            }
+        )
+    )
+    # Per-query visibility (VERDICT r16 task 2): the artifact capture
+    # stores only the last 2000 chars of stdout (every committed
+    # BENCH_r*.json tail is exactly 2000), so the table is emitted as
+    # SELF-CONTAINED chunk lines (parseable by any consumer that reads
+    # full stdout), then a "top" line with the most expensive queries —
+    # sized so that top line + summary line together fit inside the
+    # 2000-char window. Regression screening concentrates where the
+    # seconds are: the top ~40 rows cover the majority of total time.
+    # The contract summary line stays LAST and unchanged.
     items = sorted(timings.items())
     chunk = 40
     parts = [items[i : i + chunk] for i in range(0, len(items), chunk)]

@@ -16,17 +16,19 @@ These are the operators Spark genuinely lacks an algebra for
    algebraic aggregate (sum/count/min/max/...), the scan is a cumulative
    analytic frame and the filter-acc predicate usually reduces to
    ``lag()``. Pure Catalyst plans, whole-stage codegen, parallel per key.
-2. **General path** — arbitrary Python ``step``/``pred`` callables via
-   Arrow-batched ``applyInPandas`` per key, rows sorted inside each key
-   group. Order-dependent state over the *whole* stream means a single
-   key — a deliberate throughput ceiling identical to the reference's
-   single lazy list (SURVEY.md §7.3 hard-point 1); shard by key wherever
-   semantics allow.
+2. **General path** — arbitrary Python ``step``/``pred`` callables: one
+   per-key fold per semantics (``scan_fold``, ``filter_fold``; the
+   stream lowerings in ``streaming/runtime.py`` call the same folds),
+   run on ordered key groups by ``keyed_apply``. Order-dependent state
+   over the *whole* stream means a single key — a deliberate throughput
+   ceiling identical to the reference's single lazy list (SURVEY.md
+   §7.3 hard-point 1); shard by key wherever semantics allow.
 """
 
 from __future__ import annotations
 
-from typing import Any, Callable
+from functools import partial
+from typing import Any, Callable, Iterable
 
 import pandas as pd
 
@@ -60,27 +62,77 @@ def _order_cols(time_col: str | None, seq_col: str | None) -> list[str]:
     return cols
 
 
-def _bucketed(df: DataFrame, key: list[str]):
-    """Group plan for the Arrow stateful paths: many small key groups
-    each paying Arrow + pandas-DataFrame setup (~ms per group) dominate
-    the runtime, so shuffle on a BUCKET of the key (defaultParallelism
-    buckets) and iterate the real key groups inside each pandas call.
-    State stays strictly per-key; only the batching changes."""
+def keyed_apply(
+    df: DataFrame, key: list[str], order: list[str], body: Callable, schema=lambda s: s
+) -> DataFrame:
+    """The batch driver: concatenate ``body`` over the key groups, each
+    sorted by ``order``. Arrow + pandas setup per group (~ms) would
+    dominate with many small keys, so the shuffle is on a BUCKET of the
+    key (defaultParallelism buckets) and one pandas call runs a bucket's
+    groups. ``schema`` maps the bucketed input schema to the output's; a
+    BUCKET column left in the output is dropped."""
     n = df.sparkSession.sparkContext.defaultParallelism
-    if key:
-        work = df.withColumn(BUCKET, F.pmod(F.hash(*key), F.lit(n)))
-    else:
-        work = df.withColumn(BUCKET, F.lit(0))
-    return work
+    work = df.withColumn(
+        BUCKET, F.pmod(F.hash(*key), F.lit(n)) if key else F.lit(0)
+    )
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        groups = (g for _, g in pdf.groupby(key, sort=False)) if key else [pdf]
+        # applyInPandas never calls with an empty group: one frame at least
+        return pd.concat(
+            [body(g.sort_values(order, kind="mergesort")) for g in groups]
+        )
+
+    res = work.groupBy(BUCKET).applyInPandas(fn, schema=schema(work.schema))
+    return res.drop(BUCKET) if BUCKET in res.columns else res
 
 
-def _per_key_groups(pdf: pd.DataFrame, key: list[str], order: list[str]):
-    """Yield per-key sub-frames sorted by the order columns."""
-    if key:
-        for _, g in pdf.groupby(key, sort=False):
-            yield g.sort_values(order, kind="mergesort")
-    else:
-        yield pdf.sort_values(order, kind="mergesort")
+def _ddl(fields, *extra: str) -> str:
+    """DDL of ``fields`` (never .add() onto a df.schema — it's a cached,
+    shared object) followed by the ``extra`` DDL columns."""
+    cols = [f"`{f.name}` {f.dataType.simpleString()}" for f in fields]
+    return ", ".join([*cols, *extra])
+
+
+def scan_fold(step: Callable, acc: Any, rows: Iterable[dict]) -> tuple[list, Any]:
+    """streamScan over one key's ordered rows, for both engines: emit
+    the accumulator after each update. Returns (outputs, accumulator)."""
+    out = []
+    for row in rows:
+        acc = step(acc, row)
+        out.append(acc)
+    return out, acc
+
+
+def filter_fold(
+    step: Callable, pred: Callable, acc: Any, rows: Iterable[dict], kept_only: bool
+) -> tuple[list[bool], Any]:
+    """Stateful filter over one key's ordered rows, for both engines:
+    ``pred(row, acc)`` sees the accumulator BEFORE this row's update,
+    which advances on every row (streamFilterAcc) or on kept rows only
+    (debounce); each operator fixes ``kept_only``. Returns (keep flags,
+    accumulator)."""
+    keep = []
+    for row in rows:
+        k = bool(pred(row, acc))
+        keep.append(k)
+        if k or not kept_only:
+            acc = step(acc, row)
+    return keep, acc
+
+
+def _fold_rows(fold, g: pd.DataFrame, nulls: str | None, fill) -> list:
+    """The outputs of ``fold(rows)`` over a key group's rows as dicts
+    (the ``row`` the callables see). ``nulls`` names the payload column
+    of the dataless-event rule (``FunctionalProcessing.hs:185,191``):
+    its NULL rows get ``fill`` and never reach the accumulator."""
+    cols = g.columns.tolist()
+    rows = [dict(zip(cols, t)) for t in g.itertuples(index=False, name=None)]
+    if nulls is None:
+        return fold(rows)[0]
+    live = [not _is_null_cell(r[nulls]) for r in rows]
+    out = iter(fold([r for r, ok in zip(rows, live) if ok])[0])
+    return [next(out) if ok else fill for ok in live]
 
 
 def cumulative_spec(
@@ -187,37 +239,23 @@ def scan_apply(
     column: NULL-payload rows emit NULL and skip the step
     (``FunctionalProcessing.hs:191``).
     """
-    key = key or []
-    order = _order_cols(time_col, seq_col)
-    work = _bucketed(df, key)
-    # never .add() onto df.schema — it's a cached, shared object
-    schema_out = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in work.schema.fields]
-        + [f"`{out_field}` {out_type}"]
+
+    def body(g: pd.DataFrame) -> pd.DataFrame:
+        fold = partial(scan_fold, step, init)
+        return g.assign(**{out_field: _fold_rows(fold, g, null_passthrough, None)})
+
+    return keyed_apply(
+        df, key or [], _order_cols(time_col, seq_col), body,
+        lambda s: _ddl(s.fields, f"`{out_field}` {out_type}"),
     )
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        for g in _per_key_groups(pdf, key, order):
-            cols = g.columns.tolist()
-            state = init
-            acc = []
-            for tup in g.itertuples(index=False, name=None):
-                row = dict(zip(cols, tup))
-                if null_passthrough is not None and _is_null_cell(
-                    row[null_passthrough]
-                ):
-                    acc.append(None)  # dataless event passes unchanged
-                    continue
-                state = step(state, row)
-                acc.append(state)
-            g = g.copy()
-            g[out_field] = acc
-            outs.append(g)
-        return pd.concat(outs) if outs else pdf.iloc[0:0]
 
-    res = work.groupBy(BUCKET).applyInPandas(fn, schema=schema_out)
-    return res.drop(BUCKET)
+def _filter_apply(df, step, init, pred, time_col, seq_col, key, nulls, kept_only):
+    def body(g: pd.DataFrame) -> pd.DataFrame:
+        fold = partial(filter_fold, step, pred, init, kept_only=kept_only)
+        return g[_fold_rows(fold, g, nulls, True)]
+
+    return keyed_apply(df, key or [], _order_cols(time_col, seq_col), body)
 
 
 def filter_acc_apply(
@@ -238,30 +276,10 @@ def filter_acc_apply(
     ``null_passthrough`` names the payload column: NULL-payload rows
     always pass and never touch the accumulator (``:185``).
     """
-    key = key or []
-    order = _order_cols(time_col, seq_col)
-    work = _bucketed(df, key)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        for g in _per_key_groups(pdf, key, order):
-            cols = g.columns.tolist()
-            state = init
-            keep = []
-            for tup in g.itertuples(index=False, name=None):
-                row = dict(zip(cols, tup))
-                if null_passthrough is not None and _is_null_cell(
-                    row[null_passthrough]
-                ):
-                    keep.append(True)  # dataless event passes
-                    continue
-                keep.append(bool(pred(row, state)))
-                state = step(state, row)
-            outs.append(g[pd.Series(keep, index=g.index)])
-        return pd.concat(outs) if outs else pdf.iloc[0:0]
-
-    res = work.groupBy(BUCKET).applyInPandas(fn, schema=work.schema)
-    return res.drop(BUCKET)
+    return _filter_apply(
+        df, step, init, pred, time_col, seq_col, key, null_passthrough,
+        kept_only=False,
+    )
 
 
 def filter_keep_acc(
@@ -279,35 +297,12 @@ def filter_keep_acc(
     rate-limit / min-spacing selection, which ``filter_acc_apply``
     (reference streamFilterAcc, accumulator updates on every row)
     cannot express: whether row i survives depends on which earlier
-    rows SURVIVED, a truly sequential recurrence.
-
-    Same per-key Arrow lowering as the other general forms: keys
-    shard across partitions (parallel at any key cardinality), each
-    key's history is replayed in (time, seq) order inside its Arrow
-    batch; keyless input degenerates to one sequential group, exactly
-    like the reference's single lazy list.
+    rows SURVIVED, a truly sequential recurrence. Keys shard across
+    partitions; keyless input is one sequential group.
     """
-    key = key or []
-    order = _order_cols(time_col, seq_col)
-    work = _bucketed(df, key)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        for g in _per_key_groups(pdf, key, order):
-            cols = g.columns.tolist()
-            state = init
-            keep = []
-            for tup in g.itertuples(index=False, name=None):
-                row = dict(zip(cols, tup))
-                k = bool(pred(row, state))
-                keep.append(k)
-                if k:
-                    state = step(state, row)
-            outs.append(g[pd.Series(keep, index=g.index)])
-        return pd.concat(outs) if outs else pdf.iloc[0:0]
-
-    res = work.groupBy(BUCKET).applyInPandas(fn, schema=work.schema)
-    return res.drop(BUCKET)
+    return _filter_apply(
+        df, step, init, pred, time_col, seq_col, key, None, kept_only=True
+    )
 
 
 def debounce(

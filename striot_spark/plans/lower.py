@@ -14,9 +14,8 @@ from typing import Any, Iterable, Sequence
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from striot_spark.operators.stateful import BUCKET, _bucketed, _per_key_groups
+from striot_spark.operators.stateful import _ddl, keyed_apply
 from striot_spark.plans.graph import Op, compile_fused
 from striot_spark.plans.rewrite import optimize
 
@@ -47,31 +46,23 @@ def apply_chain(
     if not order:
         raise ValueError("apply_chain needs a time or seq column for ordering")
     carry = [c for c in (*key, *order) if c]
-    # bucket the key space so each pandas call handles many key groups —
-    # per-group Arrow/pandas setup dominates with many small keys
-    # (operators/stateful.py:_bucketed)
-    work = _bucketed(df, key)
 
-    carry_fields = [work.schema[c] for c in carry]
-    schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in carry_fields]
-        + [f"`{value_col}` {out_type}"]
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+    def body(g: pd.DataFrame) -> pd.DataFrame:
+        cols = g.columns.tolist()
+        vi = cols.index(value_col)
         rows: list[dict[str, Any]] = []
-        for g in _per_key_groups(pdf, key, order):
-            cols = g.columns.tolist()
-            vi = cols.index(value_col)
-            state = inits
-            for tup in g.itertuples(index=False, name=None):
-                state, emitted = kernel(state, tup[vi])
-                if emitted:
-                    rec = dict(zip(cols, tup))
-                    for out in emitted:
-                        row = {c: rec[c] for c in carry}
-                        row[value_col] = out
-                        rows.append(row)
+        state = inits
+        for tup in g.itertuples(index=False, name=None):
+            state, emitted = kernel(state, tup[vi])
+            if emitted:
+                rec = dict(zip(cols, tup))
+                for out in emitted:
+                    row = {c: rec[c] for c in carry}
+                    row[value_col] = out
+                    rows.append(row)
         return pd.DataFrame(rows, columns=[*carry, value_col])
 
-    return work.groupBy(BUCKET).applyInPandas(fn, schema=schema)
+    return keyed_apply(
+        df, key, order, body,
+        lambda s: _ddl((s[c] for c in carry), f"`{value_col}` {out_type}"),
+    )

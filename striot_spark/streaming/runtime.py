@@ -15,17 +15,21 @@ The same Stream operators lower as follows in streaming mode:
 - filter/map/expand/merge: identical DataFrame ops (unbounded input);
 - chopTime/session windows: native ``window()`` / ``session_window()``
   with watermark;
-- scan/filterAcc (general): ``applyInPandasWithState`` per key — state
-  lives in the state store, sharded by key (the single-key form has the
-  same throughput ceiling as the reference's one lazy list);
-- count-based windows (chop n / sliding n): inherently order-dependent →
-  stateful operator per key; exposed only keyed in streaming.
+- scan/filterAcc (general), count-based windows (chop n / sliding n)
+  and the positional zip join: one per-key body each, run by one
+  driver, ``_keyed_stream`` (``applyInPandasWithState``). State lives
+  in the state store, sharded by key (the single-key form has the same
+  throughput ceiling as the reference's one lazy list). The scan and
+  filter bodies call the batch lowerings' folds
+  (``operators/stateful.py:scan_fold`` / ``filter_fold``), so each
+  semantics is written once for both engines.
 """
 
 from __future__ import annotations
 
 import contextlib
 import uuid
+from functools import partial
 from typing import Any, Callable, Iterator, Sequence
 
 import pandas as pd
@@ -34,6 +38,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from striot_spark.operators.stateful import _ddl, filter_fold, scan_fold
 from striot_spark.tempdirs import staged_schema, striot_mkdtemp
 
 # -- sources -----------------------------------------------------------------
@@ -469,32 +474,224 @@ def join_w_stream(
 
 # -- stateful operators ------------------------------------------------------
 #
-# Two lowerings exist for each stateful operator:
-# - transformWithStateInPandas (``tws.py``) — Spark 4's replacement API
-#   (named state vars, per-state TTL, timers); needs protobuf + RocksDB
-#   state store on the workers. EXPERIMENTAL: its engine behavior has
-#   never been executed in this image (no protobuf), so it must be
-#   requested explicitly with ``api="tws"``.
-# - applyInPandasWithState (below) — the legacy API, engine-exercised by
-#   every streaming test and driver query (no Python-side server
-#   dependency). This is what ``api="auto"`` resolves to.
-# Both share identical ordering/accumulator semantics, pinned by
-# tests/test_tws.py against the batch oracle; the TWS engine-parity test
-# (``test_scan_stream_tws_matches_batch``) is the promotion bar — when it
-# is green on a protobuf-equipped image, "auto" may prefer TWS again.
+# Every stateful stream operator is a per-key body run by one driver,
+# ``_keyed_stream`` (``applyInPandasWithState``). The scan and filter
+# bodies call the same folds as the batch lowerings
+# (``operators/stateful.py:scan_fold`` / ``filter_fold``), so one
+# definition of each semantics runs in both engines, as StrIoT's does
+# whether a program is evaluated in-process or deployed.
 
 
-def _resolve_api(api: str) -> str:
-    if api == "auto":
-        # Deliberately NOT tws_available()-gated: even where protobuf
-        # exists, TWS stays opt-in (api="tws") until the engine parity
-        # test has run somewhere reproducible (VERDICT r03 'weak'
-        # adjudication). Plan construction with api="tws" works without
-        # protobuf — only execution needs the state server.
-        return "legacy"
-    if api not in ("tws", "legacy"):
-        raise ValueError(f"api must be auto|tws|legacy, got {api!r}")
-    return api
+def _keyed_stream(
+    sdf: DataFrame,
+    key: Sequence[str],
+    time_col: str,
+    tiebreak: str | None,
+    body: Callable[[tuple, Any, tuple], tuple[pd.DataFrame | None, tuple]],
+    out_schema: str,
+    state_schema: str,
+    init: tuple,
+    pending: tuple[str, str] | None = None,
+) -> DataFrame:
+    """The driver of the per-key stateful stream operators: one
+    ``applyInPandasWithState`` whose per-key function (``_per_key``)
+    runs ``body(k, rows, st) -> (frame or None, st)`` on each key's
+    micro-batch, ``st`` being the decoded state tuple (``init`` for a
+    new key).
+
+    ``pending=(value_col, value_type)`` is the order-robust mode
+    (``_per_key_pending``; see the order-robust section comment; the
+    caller applies the watermark): the state gains three arrays of
+    pending (ts_us, tiebreak, value) rows and an event-time timeout.
+    """
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    if pending is None:
+        fn = _per_key(body, init, [c for c in (time_col, tiebreak) if c])
+        timeout = GroupStateTimeout.NoTimeout
+    else:
+        value_col, value_type = pending
+        fn = _per_key_pending(
+            body, init, time_col, tiebreak, value_col,
+            _STATE_CASTS.get(value_type),
+        )
+        tb_type = (
+            sdf.schema[tiebreak].dataType.simpleString() if tiebreak else "int"
+        )
+        state_schema += (
+            f", pts array<bigint>, ptb array<{tb_type}>, pv array<{value_type}>"
+        )
+        timeout = GroupStateTimeout.EventTimeTimeout
+    return sdf.groupBy(*key).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=timeout,
+    )
+
+
+def _per_key(body, init: tuple, sort_cols: list[str]):
+    """Plain mode: concatenate the key's chunks, mergesort them by
+    ``sort_cols`` and hand the frame to ``body``. Concat BEFORE sorting:
+    Spark chunks a large per-key batch into several frames, and a
+    per-chunk sort would only order within chunks (memory bound = one
+    key's one micro-batch). Cross-batch order is arrival order, the
+    guarantee the reference's distributed merge gives
+    (``Nodes/TCP.hs:52-59``)."""
+
+    def fn(k: tuple, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
+        st = tuple(state.get) if state.exists else init
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        if chunks:
+            pdf = pd.concat(chunks).sort_values(sort_cols, kind="mergesort")
+            out, st = body(k, pdf, st)
+            if out is not None:
+                yield out
+        state.update(st)
+
+    return fn
+
+
+def _per_key_pending(body, init: tuple, time_col, tiebreak, value_col, cast):
+    """Order-robust mode: the batch's (ts_us, tiebreak, value) rows join
+    the pending buffer kept in the last three state fields, and the rows
+    strictly below the watermark go to ``body`` as [(ts, value), ...] in
+    (ts, tiebreak) order."""
+
+    def fn(k: tuple, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
+        if state.exists:
+            row = tuple(state.get)
+            st, pend = row[:-3], _pend_arrays(row, len(row) - 3)
+        else:
+            st, pend = init, []
+        new_rows = [
+            r
+            for pdf in pdfs
+            if len(pdf)
+            for r in _batch_pend_rows(pdf, time_col, tiebreak, value_col, cast)
+        ]
+        wm_ms = state.getCurrentWatermarkMs()
+        fin, pend = _pend_merge(pend, new_rows, wm_ms * 1000)
+        if fin:
+            ts = pd.to_datetime([r[0] for r in fin], unit="us")
+            out, st = body(k, list(zip(ts, [r[2] for r in fin])), st)
+            if out is not None:
+                yield out
+        state.update((*st, *_pend_cols(pend)))
+        if pend:
+            # fire again when the watermark moves so buffered events
+            # drain on no-data batches too
+            state.setTimeoutTimestamp(wm_ms + 1)
+
+    return fn
+
+
+# -- order-robust mode -------------------------------------------------------
+#
+# The plain stream operators process events in (time_col, tiebreak) order
+# WITHIN a micro-batch, but cross-batch order is arrival order — the
+# reference's own distributed-merge guarantee (``Nodes/TCP.hs:52-59``),
+# and exactly the hole the driver's CORRECTNESS_r05 q100 red exposed: a
+# replay split into several out-of-order micro-batches assigns events to
+# different count windows than the oracle's global (ts, tiebreak) order,
+# at identical row counts (window COUNT per key is order-independent;
+# membership is not).
+#
+# ``order_robust=True`` on the count windows closes the hole with the
+# standard watermark discipline: new events are BUFFERED in per-key
+# state, and only events strictly below the current watermark are
+# released — sorted by (event-time, tiebreak) — into the window
+# machinery. The released prefix is final by the watermark contract
+# (anything older would be dropped as late on arrival), so window
+# membership equals the batch oracle's global order REGARDLESS of how
+# the replay batches or interleaves files. Cost: state holds the
+# out-of-orderness horizon (watermark delay) worth of events per key
+# instead of O(n) — the usual price of event-time correctness, same as
+# Spark's own windowed aggregation state. Emission uses event-time
+# timeouts so buffered events also drain on watermark-only (no-data)
+# batches; a bounded replay therefore needs one event beyond the last
+# window's span (e.g. a max-timestamp barrier row) to push the final
+# watermark past the real data — see queries/flagship.py:
+# _stage_events_barrier.
+
+
+def _pend_merge(
+    state_pend: list[tuple], new_rows: list[tuple], wm_us: int
+) -> tuple[list[tuple], list[tuple]]:
+    """Merge buffered pending rows with a batch's new rows, splitting at
+    the watermark: returns (finalized rows sorted by (ts_us, tiebreak),
+    rows still pending). A row finalizes only STRICTLY below the
+    watermark — a row AT the watermark could still have equal-timestamp
+    peers arrive later (Spark only drops arrivals strictly older)."""
+    allr = state_pend + new_rows
+    # key on (ts, tiebreak) only: the value must never be compared
+    # (it may be None, or a type without a total order)
+    fin = sorted(
+        (r for r in allr if r[0] < wm_us), key=lambda r: (r[0], r[1])
+    )
+    pend = [r for r in allr if r[0] >= wm_us]
+    return fin, pend
+
+
+def _pend_arrays(state_row: tuple, base: int) -> list[tuple]:
+    """Reassemble the pending-row list from its three state arrays
+    (stored column-wise: ts_us, tiebreak, value) starting at state
+    field index ``base``."""
+    pts, ptb, pv = state_row[base], state_row[base + 1], state_row[base + 2]
+    if pts is None:
+        return []
+    return list(zip(list(pts), list(ptb), list(pv)))
+
+
+def _pend_cols(pend: list[tuple]) -> tuple[list, list, list]:
+    return (
+        [r[0] for r in pend],
+        [r[1] for r in pend],
+        [r[2] for r in pend],
+    )
+
+
+def _batch_pend_rows(
+    pdf: pd.DataFrame,
+    time_col: str,
+    tiebreak: str | None,
+    value_col: str,
+    value_cast=None,
+) -> list[tuple]:
+    """``value_cast`` coerces values to the pending-state array's
+    element type BEFORE they are stored — state serialization nulls out
+    type-mismatched elements silently (an int in an ``array<double>``
+    field comes back None), so the cast must happen here, not at
+    emission."""
+    ts_us = (pdf[time_col].astype("int64") // 1000).tolist()
+    tb = (
+        pdf[tiebreak].tolist()
+        if tiebreak is not None
+        else [0] * len(pdf)
+    )
+    vals = pdf[value_col].tolist()
+    if value_cast is not None:
+        vals = [
+            None
+            if v is None or (isinstance(v, float) and v != v)  # null / NaN
+            else value_cast(v)
+            for v in vals
+        ]
+    return list(zip(ts_us, tb, vals))
+
+
+# pending-value coercion per state array element type (see
+# _batch_pend_rows: a mismatched element is silently nulled by state
+# serialization); non-numeric buf types store values as-is
+_STATE_CASTS = {
+    "double": float,
+    "float": float,
+    "bigint": int,
+    "int": int,
+    "smallint": int,
+    "tinyint": int,
+}
 
 
 def scan_stream(
@@ -506,13 +703,10 @@ def scan_stream(
     key: Sequence[str],
     time_col: str,
     state_type: str = "acc double",
-    api: str = "auto",
     tiebreak: str | None = None,
     carry_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Streaming streamScan via transformWithStateInPandas (Spark 4
-    API) with an applyInPandasWithState fallback — see the section
-    comment above.
+    """Streaming streamScan: ``scan_fold`` per key on ``_keyed_stream``.
 
     Per-key state (a single accumulator encoded in ``state_type``);
     events within a micro-batch are processed in event-time order
@@ -528,9 +722,7 @@ def scan_stream(
 
     State never times out by design (a running scan's accumulator lives
     for the stream's lifetime, like the reference's), so total state =
-    one tuple per DISTINCT KEY — bound the key domain, or (on the TWS
-    path) pass ``ttl_ms`` via ``tws.scan_stream_tws`` so abandoned
-    keys expire.
+    one tuple per DISTINCT KEY — bound the key domain.
 
     Keyed vs global: the reference's ``streamScan``
     (``FunctionalProcessing.hs:188-191``) folds ONE accumulator over
@@ -542,52 +734,37 @@ def scan_stream(
     accumulator should key on the entity (q89's form): same semantics
     per key, parallel state, the scale-safe default.
     """
-    if _resolve_api(api) == "tws":
-        if carry_cols:
-            raise ValueError("carry_cols is not supported on the TWS path")
-        from striot_spark.streaming.tws import scan_stream_tws
-
-        return scan_stream_tws(
-            sdf, step, init, out_field, out_type, key, time_col, state_type,
-            tiebreak=tiebreak,
-        )
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     key = list(key)
     carry = [*key, time_col, *carry_cols]
-    sort_cols = [time_col] if tiebreak is None else [time_col, tiebreak]
-    fields = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
-    out_schema = ", ".join(
-        [f"`{c}` {fields[c]}" for c in carry] + [f"`{out_field}` {out_type}"]
+    out_schema = _ddl((sdf.schema[c] for c in carry), f"`{out_field}` {out_type}")
+    return _keyed_stream(
+        sdf, key, time_col, tiebreak, partial(_scan_body, step, carry, out_field),
+        out_schema, state_type, (init,),
     )
 
-    def fn(
-        k: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        acc = state.get[0] if state.exists else init
-        # concat BEFORE sorting: Spark chunks a large per-key batch into
-        # several frames, and a per-chunk sort would only order within
-        # chunks — the whole batch must sort as one (memory bound = one
-        # key's one micro-batch, the operator's documented granularity)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks).sort_values(sort_cols, kind="mergesort")
-            out = []
-            for row in pdf.to_dict("records"):
-                acc = step(acc, row)
-                out.append(acc)
-            res = pdf[carry].copy()
-            res[out_field] = out
-            yield res
-        state.update((acc,))
 
-    return sdf.groupBy(*key).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_type,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+def _scan_body(step, carry: list[str], out_field: str, k: tuple, pdf, st: tuple):
+    out, acc = scan_fold(step, st[0], pdf.to_dict("records"))
+    res = pdf[carry].copy()
+    res[out_field] = out
+    return res, (acc,)
+
+
+def _filter_stream(
+    sdf, step, init, pred, key, time_col, state_type, tiebreak, kept_only
+) -> DataFrame:
+    return _keyed_stream(
+        sdf, list(key), time_col, tiebreak,
+        partial(_filter_body, step, pred, kept_only), _ddl(sdf.schema.fields),
+        state_type, tuple(init),
     )
+
+
+def _filter_body(step, pred, kept_only: bool, k: tuple, pdf, st: tuple):
+    """``filter_fold`` on a key's batch; the state tuple is the
+    accumulator itself."""
+    keep, acc = filter_fold(step, pred, st, pdf.to_dict("records"), kept_only)
+    return pdf[keep], tuple(acc)
 
 
 def filter_acc_stream(
@@ -598,12 +775,9 @@ def filter_acc_stream(
     key: Sequence[str],
     time_col: str,
     state_type: str = "acc double",
-    api: str = "auto",
     tiebreak: str | None = None,
 ) -> DataFrame:
-    """Streaming streamFilterAcc — TWS when available, else
-    applyInPandasWithState (see the stateful-operators section
-    comment).
+    """Streaming streamFilterAcc.
 
     Exact reference semantics (``src/Striot/FunctionalProcessing.hs:
     181-185``): the predicate sees the accumulator *before* this event's
@@ -616,47 +790,33 @@ def filter_acc_stream(
     cross-batch order is arrival order (the distributed reference merge
     guarantee, ``Nodes/TCP.hs:52-59``).
     """
-    if _resolve_api(api) == "tws":
-        from striot_spark.streaming.tws import filter_acc_stream_tws
-
-        return filter_acc_stream_tws(
-            sdf, step, init, pred, key, time_col, state_type,
-            tiebreak=tiebreak,
-        )
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    key = list(key)
-    sort_cols = [time_col] if tiebreak is None else [time_col, tiebreak]
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in sdf.schema.fields
-    )
-
-    def fn(
-        k: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        acc = tuple(state.get) if state.exists else tuple(init)
-        # concat before sorting — see scan_stream: a chunked batch must
-        # order as ONE sequence or the accumulator sees wrong order
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks).sort_values(sort_cols, kind="mergesort")
-            keep = []
-            for row in pdf.to_dict("records"):
-                keep.append(bool(pred(row, acc)))
-                acc = tuple(step(acc, row))
-            yield pdf[pd.Series(keep, index=pdf.index)]
-        state.update(acc)
-
-    return sdf.groupBy(*key).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_type,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _filter_stream(
+        sdf, step, init, pred, key, time_col, state_type, tiebreak,
+        kept_only=False,
     )
 
 
-# -- sinks -------------------------------------------------------------------
+def filter_keep_acc_stream(
+    sdf: DataFrame,
+    step: Callable[[Any, dict], Any],
+    init: tuple,
+    pred: Callable[[dict, Any], bool],
+    key: Sequence[str],
+    time_col: str,
+    state_type: str,
+    tiebreak: str | None = None,
+) -> DataFrame:
+    """Streaming keep-dependent stateful filter — the streaming twin of
+    ``operators/stateful.py:filter_keep_acc`` (debounce / rate-limit:
+    the state advances ONLY on kept rows, so survival depends on which
+    earlier rows survived). Same discipline as ``filter_acc_stream``;
+    cross-batch order is arrival order, so order-sensitive gates should
+    replay in-order staged input (the q89/q90 pattern).
+    """
+    return _filter_stream(
+        sdf, step, init, pred, key, time_col, state_type, tiebreak,
+        kept_only=True,
+    )
 
 
 def zip_join_stream(
@@ -685,8 +845,6 @@ def zip_join_stream(
 
     Output: (zip_pos, l_id, l_val, r_id, r_val).
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     merged = (
         left.select(
             F.lit(0).alias("__side"),
@@ -712,63 +870,55 @@ def zip_join_stream(
         "e bigint, pend_side int, pend_ids array<bigint>, "
         "pend_vals array<double>"
     )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            e, pend_side, pend_ids, pend_vals = state.get
-            # empty state arrays can round-trip as None (same contract
-            # _pend_arrays guards): normalize before use
-            pend_ids = list(pend_ids or [])
-            pend_vals = list(pend_vals or [])
-        else:
-            e, pend_side, pend_ids, pend_vals = 0, -1, [], []
-        lids: list = []
-        lvals: list = []
-        rids: list = []
-        rvals: list = []
-        if pend_side == 0:
-            lids, lvals = pend_ids, pend_vals
-        elif pend_side == 1:
-            rids, rvals = pend_ids, pend_vals
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            pdf = pd.concat(chunks).sort_values(
-                ["__ts", "__id"], kind="mergesort"
-            )
-            for r in pdf.to_dict("records"):
-                if r["__side"] == 0:
-                    lids.append(r["__id"])
-                    lvals.append(r["__val"])
-                else:
-                    rids.append(r["__id"])
-                    rvals.append(r["__val"])
-        n = min(len(lids), len(rids))
-        if n:
-            yield pd.DataFrame(
-                {
-                    "zip_pos": range(e, e + n),
-                    "l_id": lids[:n],
-                    "l_val": lvals[:n],
-                    "r_id": rids[:n],
-                    "r_val": rvals[:n],
-                }
-            )
-        if len(lids) > n:
-            state.update((e + n, 0, lids[n:], lvals[n:]))
-        elif len(rids) > n:
-            state.update((e + n, 1, rids[n:], rvals[n:]))
-        else:
-            state.update((e + n, -1, [], []))
-
-    return merged.groupBy("__k").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_stream(
+        merged, ["__k"], "__ts", "__id", _zip_body, out_schema, state_schema,
+        (0, -1, [], []),
     )
+
+
+def _zip_body(k: tuple, pdf: pd.DataFrame, st: tuple):
+    """Pair the buffered unpaired prefix with the batch's events in
+    (time, id) order; the state keeps whatever is still unpaired."""
+    e, pend_side, pend_ids, pend_vals = st
+    # empty state arrays can round-trip as None (same contract
+    # _pend_arrays guards): normalize before use
+    pend_ids = list(pend_ids or [])
+    pend_vals = list(pend_vals or [])
+    lids: list = []
+    lvals: list = []
+    rids: list = []
+    rvals: list = []
+    if pend_side == 0:
+        lids, lvals = pend_ids, pend_vals
+    elif pend_side == 1:
+        rids, rvals = pend_ids, pend_vals
+    for r in pdf.to_dict("records"):
+        if r["__side"] == 0:
+            lids.append(r["__id"])
+            lvals.append(r["__val"])
+        else:
+            rids.append(r["__id"])
+            rvals.append(r["__val"])
+    n = min(len(lids), len(rids))
+    out = None
+    if n:
+        out = pd.DataFrame(
+            {
+                "zip_pos": range(e, e + n),
+                "l_id": lids[:n],
+                "l_val": lvals[:n],
+                "r_id": rids[:n],
+                "r_val": rvals[:n],
+            }
+        )
+    if len(lids) > n:
+        return out, (e + n, 0, lids[n:], lvals[n:])
+    if len(rids) > n:
+        return out, (e + n, 1, rids[n:], rvals[n:])
+    return out, (e + n, -1, [], [])
+
+
+# -- sinks -------------------------------------------------------------------
 
 
 #: explicit override for the bounded-drain width pin (int; <= 0 means
@@ -1835,110 +1985,45 @@ def contamination_filter_stream(
     return sdf.filter(~hit if emit == "clean" else hit)
 
 
-# -- order-robust count windows ----------------------------------------------
-#
-# The plain chop/sliding count-window lowerings below process events in
-# (time_col, tiebreak) order WITHIN a micro-batch, but cross-batch order
-# is arrival order — the reference's own distributed-merge guarantee
-# (``Nodes/TCP.hs:52-59``), and exactly the hole the driver's
-# CORRECTNESS_r05 q100 red exposed: a replay split into several
-# out-of-order micro-batches assigns events to different windows than
-# the oracle's global (ts, tiebreak) order, at identical row counts
-# (window COUNT per key is order-independent; membership is not).
-#
-# ``order_robust=True`` closes the hole with the standard watermark
-# discipline: new events are BUFFERED in per-key state, and only events
-# strictly below the current watermark are released — sorted by
-# (event-time, tiebreak) — into the window machinery. The released
-# prefix is final by the watermark contract (anything older would be
-# dropped as late on arrival), so window membership equals the batch
-# oracle's global order REGARDLESS of how the replay batches or
-# interleaves files. Cost: state holds the out-of-orderness horizon
-# (watermark delay) worth of events per key instead of O(n) — the
-# usual price of event-time correctness, same as Spark's own windowed
-# aggregation state. Emission uses event-time timeouts so buffered
-# events also drain on watermark-only (no-data) batches; a bounded
-# replay therefore needs one event beyond the last window's span (e.g.
-# a max-timestamp barrier row) to push the final watermark past the
-# real data — see queries/flagship.py:_stage_events_barrier.
-
-
-def _pend_merge(
-    state_pend: list[tuple], new_rows: list[tuple], wm_us: int
-) -> tuple[list[tuple], list[tuple]]:
-    """Merge buffered pending rows with a batch's new rows, splitting at
-    the watermark: returns (finalized rows sorted by (ts_us, tiebreak),
-    rows still pending). A row finalizes only STRICTLY below the
-    watermark — a row AT the watermark could still have equal-timestamp
-    peers arrive later (Spark only drops arrivals strictly older)."""
-    allr = state_pend + new_rows
-    # key on (ts, tiebreak) only: the value must never be compared
-    # (it may be None, or a type without a total order)
-    fin = sorted(
-        (r for r in allr if r[0] < wm_us), key=lambda r: (r[0], r[1])
-    )
-    pend = [r for r in allr if r[0] >= wm_us]
-    return fin, pend
-
-
-def _pend_arrays(state_row: tuple, base: int) -> list[tuple]:
-    """Reassemble the pending-row list from its three state arrays
-    (stored column-wise: ts_us, tiebreak, value) starting at state
-    field index ``base``."""
-    pts, ptb, pv = state_row[base], state_row[base + 1], state_row[base + 2]
-    if pts is None:
-        return []
-    return list(zip(list(pts), list(ptb), list(pv)))
-
-
-def _pend_cols(pend: list[tuple]) -> tuple[list, list, list]:
-    return (
-        [r[0] for r in pend],
-        [r[1] for r in pend],
-        [r[2] for r in pend],
-    )
-
-
-def _batch_pend_rows(
-    pdf: pd.DataFrame,
+def _count_window_stream(
+    sdf: DataFrame,
+    n: int,
+    value_col: str,
+    key: list[str],
     time_col: str,
     tiebreak: str | None,
-    value_col: str,
-    value_cast=None,
-) -> list[tuple]:
-    """``value_cast`` coerces values to the pending-state array's
-    element type BEFORE they are stored — state serialization nulls out
-    type-mismatched elements silently (an int in an ``array<double>``
-    field comes back None), so the cast must happen here, not at
-    emission."""
-    ts_us = (pdf[time_col].astype("int64") // 1000).tolist()
-    tb = (
-        pdf[tiebreak].tolist()
-        if tiebreak is not None
-        else [0] * len(pdf)
+    order_robust: bool,
+    watermark_delay: str,
+    window: Callable[[tuple, Any, tuple], tuple[pd.DataFrame | None, tuple]],
+    out_schema: str,
+    state_schema: str,
+    init: tuple,
+    value_type: str,
+) -> DataFrame:
+    """Shared plumbing of the count windows: ``window(k, [(ts, value),
+    ...], st) -> (frame or None, st)`` runs on ``_keyed_stream``, fed
+    from the sorted micro-batch, or in ``order_robust`` mode from the
+    watermark-released pending buffer (state values of
+    ``value_type``)."""
+    if n <= 0:
+        raise ValueError("window size n must be positive")
+    if order_robust:
+        return _keyed_stream(
+            sdf.withWatermark(time_col, watermark_delay), key, time_col,
+            tiebreak, window, out_schema, state_schema, init,
+            pending=(value_col, value_type),
+        )
+
+    body = partial(_pairs_body, window, time_col, value_col)
+    return _keyed_stream(
+        sdf, key, time_col, tiebreak, body, out_schema, state_schema, init
     )
-    vals = pdf[value_col].tolist()
-    if value_cast is not None:
-        vals = [
-            None
-            if v is None or (isinstance(v, float) and v != v)  # null / NaN
-            else value_cast(v)
-            for v in vals
-        ]
-    return list(zip(ts_us, tb, vals))
 
 
-# pending-value coercion per state array element type (see
-# _batch_pend_rows: a mismatched element is silently nulled by state
-# serialization); non-numeric buf types store values as-is
-_STATE_CASTS = {
-    "double": float,
-    "float": float,
-    "bigint": int,
-    "int": int,
-    "smallint": int,
-    "tinyint": int,
-}
+def _pairs_body(window, time_col: str, value_col: str, k: tuple, pdf, st: tuple):
+    """Plain-mode feed of a count window: the sorted batch's (time,
+    value) pairs."""
+    return window(k, zip(pdf[time_col].tolist(), pdf[value_col].tolist()), st)
 
 
 def chop_count_stream(
@@ -1981,120 +2066,43 @@ def chop_count_stream(
     releases them in global (event-time, tiebreak) order as the
     watermark (``withWatermark(time_col, watermark_delay)``) passes
     them, making window membership independent of micro-batch
-    partitioning and file-listing order (see the section comment
-    above). ``order_robust`` requires a ``tiebreak`` column whenever
+    partitioning and file-listing order (see the order-robust section
+    comment). ``order_robust`` requires a ``tiebreak`` column whenever
     equal timestamps are possible (the watermark can only order by
     event time; ties need a total order the oracle shares).
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    if n <= 0:
-        raise ValueError("window size n must be positive")
     key = list(key)
-    fields = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
-    out_schema = ", ".join(
-        [f"`{c}` {fields[c]}" for c in key]
-        + [
-            "`window_ordinal` bigint",
-            f"`{time_col}` {fields[time_col]}",
-            f"`{out_field}` {out_type}",
-        ]
+    out_schema = _ddl(
+        (sdf.schema[c] for c in key),
+        "`window_ordinal` bigint",
+        f"`{time_col}` {sdf.schema[time_col].dataType.simpleString()}",
+        f"`{out_field}` {out_type}",
     )
-    sort_cols = [time_col] if tiebreak is None else [time_col, tiebreak]
 
-    if order_robust:
-        tb_type = fields[tiebreak] if tiebreak is not None else "int"
-        state_schema = (
-            f"ordinal bigint, buf array<{buf_type}>, pts array<bigint>, "
-            f"ptb array<{tb_type}>, pv array<{buf_type}>"
-        )
-
-        def fn_robust(
-            k: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-        ) -> Iterator[pd.DataFrame]:
-            if state.exists:
-                row = state.get
-                ordinal, buf = row[0], list(row[1])
-                pend = _pend_arrays(row, 2)
-            else:
-                ordinal, buf, pend = 0, [], []
-            new_rows: list[tuple] = []
-            for pdf in pdfs:
-                if len(pdf):
-                    new_rows.extend(
-                        _batch_pend_rows(
-                            pdf, time_col, tiebreak, value_col,
-                            value_cast=_STATE_CASTS.get(buf_type),
-                        )
-                    )
-            wm_us = state.getCurrentWatermarkMs() * 1000
-            fin, pend = _pend_merge(pend, new_rows, wm_us)
-            out_rows = []
-            for t_us, _tb, v in fin:
-                buf.append(v)
-                if len(buf) == n:
-                    out_rows.append(
-                        (*k, ordinal, pd.to_datetime(t_us, unit="us"), agg(buf))
-                    )
-                    ordinal += 1
-                    buf = []
-            if out_rows:
-                yield pd.DataFrame(
-                    out_rows,
-                    columns=[*key, "window_ordinal", time_col, out_field],
-                )
-            pts, ptb, pv = _pend_cols(pend)
-            state.update((ordinal, buf, pts, ptb, pv))
-            if pend:
-                # fire again when the watermark moves so buffered events
-                # drain on no-data batches too
-                state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-
-        return (
-            sdf.withWatermark(time_col, watermark_delay)
-            .groupBy(*key)
-            .applyInPandasWithState(
-                fn_robust,
-                outputStructType=out_schema,
-                stateStructType=state_schema,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.EventTimeTimeout,
-            )
-        )
-
-    def fn(
-        k: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            ordinal, buf = state.get[0], list(state.get[1])
-        else:
-            ordinal, buf = 0, []
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks).sort_values(sort_cols, kind="mergesort")
-            out_rows = []
-            for v, t in zip(
-                pdf[value_col].tolist(), pdf[time_col].tolist()
-            ):
-                buf.append(v)
-                if len(buf) == n:
-                    out_rows.append((*k, ordinal, t, agg(buf)))
-                    ordinal += 1
-                    buf = []
-            if out_rows:
-                yield pd.DataFrame(
-                    out_rows,
-                    columns=[*key, "window_ordinal", time_col, out_field],
-                )
-        state.update((ordinal, buf))
-
-    return sdf.groupBy(*key).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=f"ordinal bigint, buf array<{buf_type}>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _count_window_stream(
+        sdf, n, value_col, key, time_col, tiebreak, order_robust,
+        watermark_delay, partial(_chop_window, n, agg, key, time_col, out_field),
+        out_schema, f"ordinal bigint, buf array<{buf_type}>", (0, []), buf_type,
     )
+
+
+def _chop_window(n, agg, key, time_col, out_field, k: tuple, pairs, st: tuple):
+    """Tumbling count window: every ``n``-th value closes a window; the
+    state is (next ordinal, partial buffer)."""
+    ordinal, buf = st[0], list(st[1])
+    out_rows = []
+    for t, v in pairs:
+        buf.append(v)
+        if len(buf) == n:
+            out_rows.append((*k, ordinal, t, agg(buf)))
+            ordinal += 1
+            buf = []
+    out = None
+    if out_rows:
+        out = pd.DataFrame(
+            out_rows, columns=[*key, "window_ordinal", time_col, out_field]
+        )
+    return out, (ordinal, buf)
 
 
 def sliding_count_stream(
@@ -2107,7 +2115,6 @@ def sliding_count_stream(
     out_field: str = "agg",
     out_type: str = "double",
     tiebreak: str | None = None,
-    api: str = "auto",
     order_robust: bool = False,
     watermark_delay: str = "0 seconds",
 ) -> DataFrame:
@@ -2128,152 +2135,30 @@ def sliding_count_stream(
     unless ``order_robust=True``, which buffers events in state and
     releases them in global (event-time, ``tiebreak``) order as the
     watermark passes them, exactly like ``chop_count_stream``'s robust
-    mode (see the order-robust section comment above): window
-    membership then matches the batch ``rowsBetween`` frame regardless
-    of micro-batch partitioning.
+    mode (see the order-robust section comment): window membership then
+    matches the batch ``rowsBetween`` frame regardless of micro-batch
+    partitioning.
     """
-    if _resolve_api(api) == "tws":
-        from striot_spark.streaming.tws import sliding_count_stream_tws
-
-        return sliding_count_stream_tws(
-            sdf, n, value_col, agg, key, time_col, out_field, out_type, tiebreak
-        )
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     key = list(key)
-    carry = [*key, time_col]
-    fields = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
-    out_schema = ", ".join(
-        [f"`{c}` {fields[c]}" for c in carry] + [f"`{out_field}` {out_type}"]
+    out_schema = _ddl(
+        (sdf.schema[c] for c in (*key, time_col)), f"`{out_field}` {out_type}"
     )
-    sort_cols = [time_col] if tiebreak is None else [time_col, tiebreak]
 
-    if order_robust:
-        tb_type = fields[tiebreak] if tiebreak is not None else "int"
-        state_schema = (
-            f"buf array<double>, pts array<bigint>, "
-            f"ptb array<{tb_type}>, pv array<double>"
-        )
-
-        def fn_robust(
-            k: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-        ) -> Iterator[pd.DataFrame]:
-            if state.exists:
-                row = state.get
-                buf = list(row[0])
-                pend = _pend_arrays(row, 1)
-            else:
-                buf, pend = [], []
-            new_rows: list[tuple] = []
-            for pdf in pdfs:
-                if len(pdf):
-                    new_rows.extend(
-                        _batch_pend_rows(
-                            pdf, time_col, tiebreak, value_col,
-                            value_cast=float,
-                        )
-                    )
-            wm_us = state.getCurrentWatermarkMs() * 1000
-            fin, pend = _pend_merge(pend, new_rows, wm_us)
-            out_rows = []
-            for t_us, _tb, v in fin:
-                win = buf[-(n - 1):] + [v] if n > 1 else [v]
-                out_rows.append((*k, pd.to_datetime(t_us, unit="us"), agg(win)))
-                buf = (buf + [v])[-(n - 1):] if n > 1 else []
-            if out_rows:
-                yield pd.DataFrame(out_rows, columns=[*carry, out_field])
-            pts, ptb, pv = _pend_cols(pend)
-            state.update((buf, pts, ptb, pv))
-            if pend:
-                state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-
-        return (
-            sdf.withWatermark(time_col, watermark_delay)
-            .groupBy(*key)
-            .applyInPandasWithState(
-                fn_robust,
-                outputStructType=out_schema,
-                stateStructType=state_schema,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.EventTimeTimeout,
-            )
-        )
-
-    def fn(
-        k: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        buf = list(state.get[0]) if state.exists else []
-        # concat before sorting — see scan_stream: a chunked batch must
-        # order as ONE sequence or the buffer sees wrong event order
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks).sort_values(sort_cols, kind="mergesort")
-            out = []
-            for v in pdf[value_col].tolist():
-                out.append(agg(buf[-(n - 1):] + [v] if n > 1 else [v]))
-                buf = (buf + [v])[-(n - 1):] if n > 1 else []
-            res = pdf[carry].copy()
-            res[out_field] = out
-            yield res
-        state.update((buf,))
-
-    return sdf.groupBy(*key).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="buf array<double>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _count_window_stream(
+        sdf, n, value_col, key, time_col, tiebreak, order_robust,
+        watermark_delay,
+        partial(_sliding_window, n, agg, key, time_col, out_field),
+        out_schema, "buf array<double>", ([],), "double",
     )
 
 
-def filter_keep_acc_stream(
-    sdf: DataFrame,
-    step: Callable[[Any, dict], Any],
-    init: tuple,
-    pred: Callable[[dict, Any], bool],
-    key: Sequence[str],
-    time_col: str,
-    state_type: str,
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """Streaming keep-dependent stateful filter — the streaming twin of
-    ``operators/stateful.py:filter_keep_acc`` (debounce / rate-limit:
-    the state advances ONLY on kept rows, so survival depends on which
-    earlier rows survived). Same discipline as ``filter_acc_stream``:
-    per-key state via applyInPandasWithState, each micro-batch's rows
-    for a key concat-then-sorted in (time, tiebreak) order before the
-    sequential replay; cross-batch order is arrival order, so
-    order-sensitive gates should replay in-order staged input (the
-    q89/q90 pattern).
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    key = list(key)
-    sort_cols = [time_col] if tiebreak is None else [time_col, tiebreak]
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in sdf.schema.fields
-    )
-
-    def fn(
-        k: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        acc = tuple(state.get) if state.exists else init
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks).sort_values(sort_cols, kind="mergesort")
-            keep = []
-            for row in pdf.to_dict("records"):
-                kp = bool(pred(row, acc))
-                keep.append(kp)
-                if kp:
-                    acc = step(acc, row)
-            yield pdf[pd.Series(keep, index=pdf.index)]
-        state.update(tuple(acc))
-
-    return sdf.groupBy(*key).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_type,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+def _sliding_window(n, agg, key, time_col, out_field, k: tuple, pairs, st: tuple):
+    """Sliding count window: every value emits ``agg`` over the last
+    ``n`` values; the state buffers the previous ``n-1``."""
+    buf = list(st[0])
+    out_rows = []
+    for t, v in pairs:
+        win = (buf + [v])[-n:]
+        out_rows.append((*k, t, agg(win)))
+        buf = win[1:] if len(win) == n else win
+    return pd.DataFrame(out_rows, columns=[*key, time_col, out_field]), (buf,)
