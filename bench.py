@@ -35,6 +35,47 @@ def _local_dir_free_bytes() -> int | None:
         return None
 
 
+def open_session(sf_dir: str, app_name: str, extra_conf=None):
+    """The measuring session shared by bench.py and tools/: the project
+    session (``get_spark``), ERROR logging, the warm-ups and every
+    table loaded once, so timed queries measure compute, not
+    first-touch."""
+    from striot_spark.session import get_spark
+    from striot_spark.sources.batch import load_table
+
+    spark = get_spark(app_name=app_name, extra_conf=extra_conf)
+    spark.sparkContext.setLogLevel("ERROR")
+    # warm up the JVM, codegen, and parquet footer caches
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    # spin up the Python worker daemons too — otherwise the first
+    # mapInPandas query is charged ~2-4s of interpreter fork/import
+    spark.range(64).repartition(32).mapInPandas(
+        lambda it: it, "id long"
+    ).count()
+    for t in (
+        "region", "nation", "customer", "supplier", "part",
+        "orders", "lineitem", "events", "documents", "embeddings",
+    ):
+        load_table(spark, sf_dir, t).count()
+    return spark
+
+
+def calib_sec(spark) -> float:
+    """Machine-speed calibration: a fixed CPU-bound JVM job, best-of-3.
+    Round-6 measured the SAME tree 1.41× slower on a new container
+    (PERF.md §21) — cross-round bench ratios are only meaningful
+    divided by this. Input size is constant (not sf-scaled) so the
+    number is a pure box-speed probe."""
+    calib = float("inf")
+    for _ in range(3):
+        t0 = time.perf_counter()
+        spark.range(2_000_000_000).selectExpr(
+            "sum(id * 2654435761 % 1000003)"
+        ).collect()
+        calib = min(calib, time.perf_counter() - t0)
+    return calib
+
+
 def time_queries(spark, queries: dict, sf_dir: str, repeats: int):
     """Best-of-``repeats`` seconds per query, each forced end-to-end with
     the noop sink. A query that raises does not stop the run: it lands
@@ -76,25 +117,8 @@ def main() -> None:
     sf = float(m.group(1)) if m else None
 
     from striot_spark.queries.registry import all_queries
-    from striot_spark.session import get_spark
 
-    spark = get_spark(app_name="striot-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    # warm up the JVM, codegen, and parquet footer caches outside the
-    # timed region — queries should measure compute, not first-touch
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    # spin up the Python worker daemons too — otherwise the first
-    # mapInPandas query is charged ~2-4s of interpreter fork/import
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
-    from striot_spark.sources.batch import load_table
-
-    for t in (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ):
-        load_table(spark, sf_dir, t).count()
+    spark = open_session(sf_dir, "striot-bench")
 
     # best-of-N per query: this box is shared and single-shot timings
     # swing up to ~70% under external load; the min is the stable
@@ -156,25 +180,13 @@ def main() -> None:
     timings, errors = time_queries(spark, queries, sf_dir, repeats)
 
     total = round(sum(timings.values()), 4)
-    # machine-speed calibration: a fixed CPU-bound JVM job, best-of-3.
-    # Round-6 measured the SAME tree 1.41× slower on a new container
-    # (PERF.md §21) — cross-round bench ratios are only meaningful
-    # divided by this. Input size is constant (not sf-scaled) so the
-    # number is a pure box-speed probe.
-    calib = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(2_000_000_000).selectExpr(
-            "sum(id * 2654435761 % 1000003)"
-        ).collect()
-        calib = min(calib, time.perf_counter() - t0)
     payload = {
         "metric": "striot_spark_headline_queries_total",
         "value": total,
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        "calib_sec": round(calib, 4),
+        "calib_sec": round(calib_sec(spark), 4),
         "errors": errors,
     }
     # stdout captures keep only a tail (r04 lost q01–q22), so the

@@ -812,146 +812,59 @@ def near_dup_filter_stream(
     Scale: state is #distinct band buckets (compact), not #documents;
     each batch costs one signature scan of the batch + two keyed
     shuffles (batch-band groupBy, snapshot merge) + one equi-join
-    against the snapshot. With ``state_parts`` > 0 (default 16) the
-    owner snapshot is hash-prefix partitioned on (band, sig)
+    against the snapshot. The owner snapshot is hash-prefix
+    partitioned on (band, sig) into ``state_parts`` (>= 1) partitions
     (``streaming.runtime._PartitionedState``): the ownership lookup is
     an equi-join, so each batch READS only the partitions its bands
     hash into and REWRITES only those — per-batch cost
     O(batch + touched-state) rather than O(all band buckets), which is
     what keeps the gate viable when the bucket table itself outgrows a
-    per-batch rewrite. ``state_parts=0`` keeps the legacy
-    whole-snapshot A/B writer. Read the kept corpus back with
-    ``read_kept`` below; the owner snapshot with
-    ``streaming.runtime.read_snapshot`` (auto-detects both layouts).
+    per-batch rewrite. Read the kept corpus back with ``read_kept``
+    below; the owner snapshot with ``streaming.runtime.read_snapshot``.
     """
-    import hashlib as _hashlib
     import os as _os
 
-    from striot_spark.streaming.runtime import (
-        _PART_COL,
-        _PartitionedState,
-    )
+    from striot_spark.streaming.runtime import _snapshot_sink
 
     # validate at stream-construction time, not first-batch time: a
     # bad banding geometry must fail before any state is written
     _banding_rows_per_band(num_hashes, bands)
-    run_id = _hashlib.sha1(
-        _os.path.abspath(checkpoint_dir).encode()
-    ).hexdigest()[:8]
 
-    def _batch_bands(batch_df: DataFrame):
-        b = lsh_bands(
+    def _bands(batch_df: DataFrame) -> DataFrame:
+        return lsh_bands(
             batch_df, id_col, text_col, num_hashes, bands, shingle_n
         )
+
+    def _merge(batch_df: DataFrame, batch_id: int, b, prev):
         batch_own = b.groupBy("band", "sig").agg(
             F.min(id_col).alias("__bown")
         )
-        return b, batch_own
-
-    def _filter_and_keep(
-        batch_df: DataFrame, b, batch_own, prev, batch_id: int
-    ):
         hit = b.join(batch_own, ["band", "sig"])
+        is_dup = F.col("__bown") < F.col(id_col)
         if prev is not None:
+            # the ownership lookup is equi on (band, sig): partitions
+            # the batch doesn't hash into cannot own any of its bands
             hit = hit.join(prev, ["band", "sig"], "left")
-            is_dup = F.col("owner").isNotNull() | (
-                F.col("__bown") < F.col(id_col)
-            )
-        else:
-            is_dup = F.col("__bown") < F.col(id_col)
+            is_dup = F.col("owner").isNotNull() | is_dup
         dup_ids = hit.filter(is_dup).select(id_col).distinct()
+        # kept rows land BEFORE the manifest flip, as a per-batch
+        # overwrite: the replay of an uncommitted batch rewrites them
         kept = batch_df.join(dup_ids, id_col, "left_anti")
         kept.select(*keep_cols).write.mode("overwrite").parquet(
             _os.path.join(out_dir, f"b{batch_id:05d}")
         )
-
-    def _write_partitioned(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        st = _PartitionedState(
-            snap_dir, ["band", "sig"], state_parts, run_id,
-            gc_grace_batches=gc_grace_batches,
-        )
-        man, skip = st.load(batch_id)
-        if skip:
-            return  # replayed batch (same run): already durable
-        b, batch_own = _batch_bands(batch_df)
-        batch_own = batch_own.withColumn(_PART_COL, st.part_expr())
-        batch_own.persist()
-        try:
-            touched = st.touched(batch_own)
-            # the ownership lookup is equi on (band, sig): partitions
-            # the batch doesn't hash into cannot own any of its bands
-            prev = st.read_parts(spark, man, touched)
-            _filter_and_keep(
-                batch_df, b, batch_own.drop(_PART_COL), prev, batch_id
-            )
-            new_own = batch_own.select(
-                "band", "sig", F.col("__bown").alias("owner")
-            )
-            if prev is not None:
-                new_own = (
-                    prev.unionByName(new_own)
-                    .groupBy("band", "sig")
-                    .agg(F.min("owner").alias("owner"))
-                )
-            st.commit(
-                new_own.withColumn(_PART_COL, st.part_expr()),
-                man, touched, batch_id,
-            )
-        finally:
-            batch_own.unpersist()
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        ptr = _os.path.join(snap_dir, "_CURRENT")
-        prev, cur = None, None
-        if _os.path.exists(ptr):
-            with open(ptr) as f:
-                parts = f.read().strip().split(":")
-            if len(parts) < 3 or parts[2] != run_id:
-                raise ValueError(
-                    f"near_dup_filter_stream: owner state {snap_dir!r} "
-                    "belongs to a different run — resuming with a "
-                    "fresh checkpoint would misread restarted batch "
-                    "ids as replays; keep the original checkpoint or "
-                    "use a fresh state path"
-                )
-            cur, last = parts[0], int(parts[1])
-            if batch_id <= last:
-                return  # replayed batch (same run): already durable
-            prev = spark.read.parquet(_os.path.join(snap_dir, cur))
-        b, batch_own = _batch_bands(batch_df)
-        _filter_and_keep(batch_df, b, batch_own, prev, batch_id)
-        new_own = batch_own.select(
-            "band", "sig", F.col("__bown").alias("owner")
-        )
+        owners = b.select("band", "sig", F.col(id_col).alias("owner"))
         if prev is not None:
-            new_own = (
-                prev.unionByName(new_own)
-                .groupBy("band", "sig")
-                .agg(F.min("owner").alias("owner"))
-            )
-        nxt = "b" if cur == "a" else "a"
-        new_own.write.mode("overwrite").parquet(
-            _os.path.join(snap_dir, nxt)
+            owners = prev.unionByName(owners)
+        return owners.groupBy("band", "sig").agg(
+            F.min("owner").alias("owner")
         )
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(f"{nxt}:{batch_id}:{run_id}")
-        _os.replace(tmp, ptr)  # atomic flip commits state AND batch id
 
-    w = (
-        sdf.writeStream.foreachBatch(
-            _write_partitioned if state_parts else _write
-        )
-        .option("checkpointLocation", checkpoint_dir)
+    return _snapshot_sink(
+        sdf, snap_dir, checkpoint_dir, ["band", "sig"], _bands, _merge,
+        available_now, state_parts, gc_grace_batches,
+        drain_shuffle_partitions,
     )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    from striot_spark.streaming.runtime import drain_width
-
-    with drain_width(sdf.sparkSession, drain_shuffle_partitions):
-        return w.start()
 
 
 def read_kept(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -1456,18 +1456,14 @@ def q125_upsert_snapshot_stream(
     sdf = RT.file_stream(
         spark, src, max_files_per_trigger=1
     ).withColumn("value_c", cents(F.col("value")))
-    path = striot_mkdtemp(prefix="striot_q125_snap_")
-    q = RT.upsert_snapshot_sink(
+    snap = RT.drain_snapshot(
+        RT.upsert_snapshot_sink,
         sdf,
-        path,
-        striot_mkdtemp(prefix="striot_q125_ck_"),
+        source_path=src,
         key_cols=["user_id"],
         order_cols=["ts", "event_id"],
         payload_cols=["event_type", "value_c"],
-        drain_shuffle_partitions=RT.derive_drain_width(spark, src),
-    )
-    q.awaitTermination()
-    snap = RT.read_snapshot(spark, path).filter(
+    ).filter(
         F.col("user_id") != BARRIER_USER
     )
     return snap.select(
@@ -1602,17 +1598,13 @@ def q138_incremental_agg_stream(
     sdf = RT.file_stream(
         spark, src, max_files_per_trigger=1
     ).withColumn("value_c", cents(F.col("value")))
-    path = striot_mkdtemp(prefix="striot_q138_mv_")
-    q = RT.incremental_agg_sink(
+    snap = RT.drain_snapshot(
+        RT.incremental_agg_sink,
         sdf,
-        path,
-        striot_mkdtemp(prefix="striot_q138_ck_"),
+        source_path=src,
         key_cols=["user_id", "event_type"],
         sum_cols=["value_c"],
-        drain_shuffle_partitions=RT.derive_drain_width(spark, src),
-    )
-    q.awaitTermination()
-    snap = RT.read_snapshot(spark, path).filter(
+    ).filter(
         F.col("user_id") != BARRIER_USER
     )
     return snap.select(
@@ -1942,17 +1934,13 @@ def q174_rollup_serve_stream(
             cents(F.col("value")).alias("value_c"),
         )
     )
-    path = striot_mkdtemp(prefix="striot_q174_mv_")
-    q = RT.incremental_agg_sink(
+    snap = RT.drain_snapshot(
+        RT.incremental_agg_sink,
         sdf,
-        path,
-        striot_mkdtemp(prefix="striot_q174_ck_"),
+        source_path=src,
         key_cols=["minute", "event_type"],
         sum_cols=["value_c"],
-        drain_shuffle_partitions=RT.derive_drain_width(spark, src),
     )
-    q.awaitTermination()
-    snap = RT.read_snapshot(spark, path)
     return snap.groupBy(
         ts_str(F.date_trunc("hour", F.col("minute"))).alias("bucket"),
         "event_type",
@@ -2005,18 +1993,14 @@ def q179_cdc_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             ts_str(F.col("ts")).alias("last_ts"),
         )
     )
-    path = striot_mkdtemp(prefix="striot_q179_snap_")
-    q = RT.upsert_snapshot_sink(
+    snap = RT.drain_snapshot(
+        RT.upsert_snapshot_sink,
         sdf,
-        path,
-        striot_mkdtemp(prefix="striot_q179_ck_"),
+        source_path=src,
         key_cols=["user_id"],
         order_cols=["ts", "event_id"],
         payload_cols=["event_type", "last_cents", "last_ts"],
-        drain_shuffle_partitions=RT.derive_drain_width(spark, src),
     )
-    q.awaitTermination()
-    snap = RT.read_snapshot(spark, path)
     return snap.filter(F.col("event_type") != "error").select(
         "user_id", "last_cents", "last_ts"
     )
@@ -2052,18 +2036,14 @@ def q189_freshness_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id") != BARRIER_USER)
         .select("event_type", "ts", "event_id")
     )
-    path = striot_mkdtemp(prefix="striot_q189_snap_")
-    q = RT.upsert_snapshot_sink(
+    snap = RT.drain_snapshot(
+        RT.upsert_snapshot_sink,
         sdf,
-        path,
-        striot_mkdtemp(prefix="striot_q189_ck_"),
+        source_path=src,
         key_cols=["event_type"],
         order_cols=["ts", "event_id"],
         payload_cols=[],
-        drain_shuffle_partitions=RT.derive_drain_width(spark, src),
     )
-    q.awaitTermination()
-    snap = RT.read_snapshot(spark, path)
     t = snap.agg(F.max("ts").alias("gmx"))
     return snap.crossJoin(F.broadcast(t)).select(
         "event_type",
@@ -2338,17 +2318,13 @@ def q229_stream_quantile_bins(
         .select(cents(F.col("value")).alias("vc"))
         .select(F.expr("vc DIV 1000").alias("bin"))
     )
-    path = striot_mkdtemp(prefix="striot_q229_mv_")
-    q = RT.incremental_agg_sink(
+    snap = RT.drain_snapshot(
+        RT.incremental_agg_sink,
         sdf,
-        path,
-        striot_mkdtemp(prefix="striot_q229_ck_"),
+        source_path=src,
         key_cols=["bin"],
         sum_cols=[],
-        drain_shuffle_partitions=RT.derive_drain_width(spark, src),
     )
-    q.awaitTermination()
-    snap = RT.read_snapshot(spark, path)
     serve = binned_quantile_serve(snap, "bin", "n_rows", ticks=10)
     return serve.select(
         "q", "bin", (F.col("bin") * 1000).cast("long").alias("lo_cents")
@@ -2461,17 +2437,13 @@ def q239_lpa_stream_weighted(
 
     src = _stage_pair_events(spark, sf_dir)
     sdf = RT.file_stream(spark, src, max_files_per_trigger=1)
-    path = striot_mkdtemp(prefix="striot_q239_mv_")
-    q = RT.incremental_agg_sink(
+    snap = RT.drain_snapshot(
+        RT.incremental_agg_sink,
         sdf,
-        path,
-        striot_mkdtemp(prefix="striot_q239_ck_"),
+        source_path=src,
         key_cols=["u", "v"],
         sum_cols=[],
-        drain_shuffle_partitions=RT.derive_drain_width(spark, src),
-    )
-    q.awaitTermination()
-    snap = RT.read_snapshot(spark, path).select(
+    ).select(
         "u", "v", F.col("n_rows").alias("w")
     )
     edges = snap.unionByName(
@@ -2516,19 +2488,15 @@ def q240_incremental_extents_stream(
     sdf = RT.file_stream(
         spark, src, max_files_per_trigger=1
     ).withColumn("value_c", cents(F.col("value")))
-    path = striot_mkdtemp(prefix="striot_q240_mv_")
-    q = RT.incremental_agg_sink(
+    snap = RT.drain_snapshot(
+        RT.incremental_agg_sink,
         sdf,
-        path,
-        striot_mkdtemp(prefix="striot_q240_ck_"),
+        source_path=src,
         key_cols=["user_id"],
         sum_cols=["value_c"],
         min_cols=["ts"],
         max_cols=["ts"],
-        drain_shuffle_partitions=RT.derive_drain_width(spark, src),
-    )
-    q.awaitTermination()
-    snap = RT.read_snapshot(spark, path).filter(
+    ).filter(
         F.col("user_id") != BARRIER_USER
     )
     return snap.select(
@@ -2775,17 +2743,13 @@ def q286_exp_histogram_stream_serve(
             "bucket", F.expr("CAST(length(bin(v)) - 1 AS BIGINT)")
         )
     )
-    path = striot_mkdtemp(prefix="striot_q286_mv_")
-    q = RT.incremental_agg_sink(
+    snap = RT.drain_snapshot(
+        RT.incremental_agg_sink,
         sdf,
-        path,
-        striot_mkdtemp(prefix="striot_q286_ck_"),
+        source_path=src,
         key_cols=["event_type", "bucket"],
         sum_cols=["v"],
-        drain_shuffle_partitions=RT.derive_drain_width(spark, src),
     )
-    q.awaitTermination()
-    snap = RT.read_snapshot(spark, path)
     return snap.select(
         "event_type",
         "bucket",

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from striot_spark.tempdirs import staged, striot_mkdtemp
+from striot_spark.tempdirs import staged
 from striot_spark.functions.analytics import day_str
 from striot_spark.functions.graph import same_key_pairs
 from striot_spark.queries.registry import register
@@ -2073,18 +2073,14 @@ def q245_khop_hll_stream_serve(
 
     src = _stage_quarter_pair_events(spark, sf_dir)
     sdf = RT.file_stream(spark, src, max_files_per_trigger=1)
-    path = striot_mkdtemp(prefix="striot_q245_mv_")
-    q = RT.incremental_agg_sink(
+    snap = RT.drain_snapshot(
+        RT.incremental_agg_sink,
         sdf,
-        path,
-        striot_mkdtemp(prefix="striot_q245_ck_"),
+        source_path=src,
         key_cols=["u", "v"],
         sum_cols=[],
         gc_grace_batches=1,
-        drain_shuffle_partitions=RT.derive_drain_width(spark, src),
-    )
-    q.awaitTermination()
-    snap = RT.read_snapshot(spark, path).select("u", "v")
+    ).select("u", "v")
     edges = snap.unionByName(
         snap.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -2485,18 +2481,14 @@ def q250_pagerank_stream_serve(
 
     src = _stage_trade_observations(spark, sf_dir)
     sdf = RT.file_stream(spark, src, max_files_per_trigger=1)
-    path = striot_mkdtemp(prefix="striot_q250_mv_")
-    q = RT.incremental_agg_sink(
+    snap = RT.drain_snapshot(
+        RT.incremental_agg_sink,
         sdf,
-        path,
-        striot_mkdtemp(prefix="striot_q250_ck_"),
+        source_path=src,
         key_cols=["a", "b"],
         sum_cols=[],
         gc_grace_batches=1,
-        drain_shuffle_partitions=RT.derive_drain_width(spark, src),
-    )
-    q.awaitTermination()
-    snap = RT.read_snapshot(spark, path).select(
+    ).select(
         "a", "b", F.col("n_rows").alias("w")
     )
     edges = snap.unionByName(
@@ -3418,17 +3410,13 @@ def q267_sssp_stream_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _stage_trade_observations(spark, sf_dir)
     sdf = RT.file_stream(spark, src, max_files_per_trigger=1)
-    path = striot_mkdtemp(prefix="striot_q267_mv_")
-    q = RT.incremental_agg_sink(
+    snap = RT.drain_snapshot(
+        RT.incremental_agg_sink,
         sdf,
-        path,
-        striot_mkdtemp(prefix="striot_q267_ck_"),
+        source_path=src,
         key_cols=["a", "b"],
         sum_cols=[],
-        drain_shuffle_partitions=RT.derive_drain_width(spark, src),
-    )
-    q.awaitTermination()
-    snap = RT.read_snapshot(spark, path).select(
+    ).select(
         "a", "b", F.col("n_rows").alias("w")
     )
     edges = snap.unionByName(
@@ -3623,17 +3611,13 @@ def q269_coreness_stream_serve(
 
     src = _stage_copurchase_observations(spark, sf_dir)
     sdf = RT.file_stream(spark, src, max_files_per_trigger=1)
-    path = striot_mkdtemp(prefix="striot_q269_mv_")
-    q = RT.incremental_agg_sink(
+    snap = RT.drain_snapshot(
+        RT.incremental_agg_sink,
         sdf,
-        path,
-        striot_mkdtemp(prefix="striot_q269_ck_"),
+        source_path=src,
         key_cols=["k", "p"],
         sum_cols=[],
-        drain_shuffle_partitions=RT.derive_drain_width(spark, src),
-    )
-    q.awaitTermination()
-    snap = RT.read_snapshot(spark, path).select("k", "p")
+    ).select("k", "p")
     pairs = same_key_pairs(snap, "k", "p", out_a="u", out_b="v")
     edges = pairs.unionByName(
         pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))

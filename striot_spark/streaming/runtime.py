@@ -1153,8 +1153,23 @@ def to_idempotent_parquet(
             f"{path}/batch_id={batch_id}"
         )
 
+    return _start_foreach_batch(
+        sdf, _write, checkpoint_dir, available_now, drain_shuffle_partitions
+    )
+
+
+def _start_foreach_batch(
+    sdf: DataFrame,
+    write: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    available_now: bool,
+    drain_shuffle_partitions: int | None,
+):
+    """Start ``write(batch_df, batch_id)`` per micro-batch, checkpointed
+    at ``checkpoint_dir``, as an ``availableNow`` drain when asked, at
+    the pinned width (``drain_width``). Returns the started query."""
     w = (
-        sdf.writeStream.foreachBatch(_write)
+        sdf.writeStream.foreachBatch(write)
         .option("checkpointLocation", checkpoint_dir)
     )
     if available_now:
@@ -1166,11 +1181,11 @@ def to_idempotent_parquet(
 # ---------------------------------------------------------------------------
 # Hash-prefix-partitioned snapshot state — shared by the snapshot-sink
 # family (upsert_snapshot_sink / incremental_agg_sink /
-# functions.dedup.near_dup_filter_stream). The legacy whole-snapshot A/B
-# writer rewrites O(total state) per micro-batch; this writer rewrites
-# only the partitions a batch TOUCHES, making the per-batch cost
-# O(batch + touched-state) — the property a 100 TB ingest needs once the
-# key space outgrows a per-batch full rewrite.
+# functions.dedup.near_dup_filter_stream), all driven per micro-batch by
+# _snapshot_sink. Each batch rewrites only the partitions it TOUCHES,
+# making the per-batch cost O(batch + touched-state) rather than
+# O(total state) — the property a 100 TB ingest needs once the key space
+# outgrows a per-batch full rewrite.
 #
 # Layout:  path/_MANIFEST                    atomic JSON commit point
 #          path/g<batch_id>/__state_part=K/  parquet, one dir per touched
@@ -1206,9 +1221,10 @@ def _load_manifest(path: str) -> dict | None:
 
 
 class _PartitionedState:
-    """Per-batch lifecycle: ``load`` (guards + manifest) → attach
-    ``part_expr()`` to the batch delta → ``touched`` (distinct partition
-    ids; persist the delta first — this triggers a job) →
+    """Per-batch lifecycle, run by ``_snapshot_sink``: ``load`` (guards +
+    manifest) → attach ``part_expr()`` to the batch delta → ``touched``
+    (distinct partition ids; persist the delta first — this triggers a
+    job) →
     ``read_parts`` (previous state, touched partitions ONLY — the merge
     and any state lookup join are equi on the key, so untouched
     partitions cannot participate) → sink-specific merge →
@@ -1247,7 +1263,8 @@ class _PartitionedState:
     def load(self, batch_id: int) -> tuple[dict | None, bool]:
         """Returns (manifest, skip). Raises on run-id mismatch, on a
         partition-count mismatch (keys would re-hash to different
-        partitions), and on a path holding legacy whole-snapshot state."""
+        partitions), and on a path holding legacy whole-snapshot state
+        (written outside this process; a manifest would shadow it)."""
         import os as _os
 
         man = _load_manifest(self.path)
@@ -1255,9 +1272,9 @@ class _PartitionedState:
             if _os.path.exists(_os.path.join(self.path, "_CURRENT")):
                 raise ValueError(
                     f"partitioned snapshot sink: {self.path!r} holds a "
-                    "legacy whole-snapshot (_CURRENT pointer) state — "
-                    "pass state_parts=0 to keep appending to it, or use "
-                    "a fresh path"
+                    "legacy whole-snapshot (_CURRENT pointer) state, "
+                    "which this sink neither reads nor extends — use a "
+                    "fresh path"
                 )
             return None, False
         if man.get("run_id") != self.run_id:
@@ -1408,6 +1425,66 @@ class _PartitionedState:
                     pass
 
 
+def _snapshot_sink(
+    sdf: DataFrame,
+    path: str,
+    checkpoint_dir: str,
+    key_cols: Sequence[str],
+    delta: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame, int, DataFrame, DataFrame | None], DataFrame],
+    available_now: bool,
+    state_parts: int,
+    gc_grace_batches: int,
+    drain_shuffle_partitions: int | None,
+):
+    """The per-batch driver of the snapshot-sink family. Each sink
+    supplies only ``delta(batch_df)`` (the batch's rows keyed by
+    ``key_cols``) and ``merge(batch_df, batch_id, delta, prev)`` (the
+    new state of the touched partitions; ``prev`` is their previous
+    state, None when none of them holds any yet); neither carries the
+    partition column.
+
+    Per micro-batch: ``load`` the manifest (a replayed batch id of this
+    run is skipped whole), tag the delta with its partition and persist
+    it, find the ``touched`` partitions, ``read_parts`` their previous
+    state, run the merge, ``commit`` its output, unpersist. The run id
+    is derived from the checkpoint dir, so restarting with a fresh
+    checkpoint against old state refuses instead of misreading the
+    restarted batch ids as replays. The state is built here, so a bad
+    ``state_parts`` or ``gc_grace_batches`` raises before the query
+    starts."""
+    import hashlib as _hashlib
+    import os as _os
+
+    run_id = _hashlib.sha1(
+        _os.path.abspath(checkpoint_dir).encode()
+    ).hexdigest()[:8]
+    st = _PartitionedState(
+        path, key_cols, state_parts, run_id, gc_grace_batches
+    )
+
+    def _write(batch_df: DataFrame, batch_id: int) -> None:
+        man, skip = st.load(batch_id)
+        if skip:
+            return  # replayed batch (same run): already durable
+        tagged = delta(batch_df).withColumn(_PART_COL, st.part_expr())
+        tagged.persist()
+        try:
+            touched = st.touched(tagged)
+            prev = st.read_parts(batch_df.sparkSession, man, touched)
+            merged = merge(batch_df, batch_id, tagged.drop(_PART_COL), prev)
+            st.commit(
+                merged.withColumn(_PART_COL, st.part_expr()),
+                man, touched, batch_id,
+            )
+        finally:
+            tagged.unpersist()
+
+    return _start_foreach_batch(
+        sdf, _write, checkpoint_dir, available_now, drain_shuffle_partitions
+    )
+
+
 def upsert_snapshot_sink(
     sdf: DataFrame,
     path: str,
@@ -1426,114 +1503,54 @@ def upsert_snapshot_sink(
     ``functions/analytics.py:latest_snapshot`` (CDC tailing into a
     queryable state-of-the-world table).
 
-    Per micro-batch (foreachBatch): union the existing snapshot with
-    the batch's own latest-per-key compaction and re-compact, writing
-    to an alternating A/B directory and flipping a pointer file LAST —
-    so a crash mid-write leaves the previous snapshot intact and a
-    replayed batch (Spark re-runs the last uncommitted batch) is
-    idempotent: max_by over the same (order_cols) total order is
-    insensitive to applying a batch twice. ``order_cols`` must totally
+    Per micro-batch (foreachBatch): union the touched part of the
+    snapshot with the batch's own latest-per-key compaction and
+    re-compact, committing through the manifest flip of
+    ``_snapshot_sink`` — so a crash mid-write leaves the previous
+    snapshot intact and a replayed batch is skipped (and would be
+    idempotent anyway: max_by over the same (order_cols) total order is
+    insensitive to applying a batch twice). ``order_cols`` must totally
     order events per key (version + unique tiebreak) — the guarantee
     is then independent of micro-batch boundaries AND of cross-batch
     arrival order, with no watermark needed.
 
-    Scale: the snapshot is key-cardinality-sized (not history-sized).
-    With ``state_parts`` > 0 (default 16) the snapshot is hash-prefix
-    partitioned (see ``_PartitionedState``): each batch reads and
-    rewrites ONLY the partitions its keys hash into, so the per-batch
-    cost is O(batch + touched-state) instead of O(total state) — size
+    Scale: the snapshot is key-cardinality-sized (not history-sized)
+    and hash-prefix partitioned into ``state_parts`` (>= 1) partitions
+    (see ``_PartitionedState``): each batch reads and rewrites ONLY the
+    partitions its keys hash into, so the per-batch cost is
+    O(batch + touched-state) instead of O(total state) — size
     ``state_parts`` so one partition fits a per-batch rewrite budget
     (e.g. 4096 partitions keeps a 1 TB snapshot's touched rewrites in
-    the hundreds of MB). ``state_parts=0`` keeps the legacy
-    whole-snapshot A/B writer (optimal for small snapshots: one write,
-    no manifest). The partitioned writer adds the run-id + batch-id
-    replay guard (belt and braces here — max_by merge is already
-    replay-idempotent — but it makes fresh-checkpoint restarts against
-    old state an error instead of a silent anomaly, matching
-    ``incremental_agg_sink``).
+    the hundreds of MB). The run-id + batch-id replay guard is belt and
+    braces here, but it makes fresh-checkpoint restarts against old
+    state an error instead of a silent anomaly, matching
+    ``incremental_agg_sink``.
 
-    Read the current snapshot with ``read_snapshot(spark, path)`` —
-    it auto-detects both layouts.
+    Read the current snapshot with ``read_snapshot(spark, path)``.
     """
-    import hashlib as _hashlib
-    import os as _os
-
     from striot_spark.functions.analytics import latest_snapshot
 
     cols = list(dict.fromkeys([*key_cols, *order_cols, *payload_cols]))
     val_cols = [*order_cols, *payload_cols]
-    run_id = _hashlib.sha1(
-        _os.path.abspath(checkpoint_dir).encode()
-    ).hexdigest()[:8]
 
-    def _write_partitioned(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        st = _PartitionedState(
-            path, list(key_cols), state_parts, run_id,
-            gc_grace_batches=gc_grace_batches,
-        )
-        man, skip = st.load(batch_id)
-        if skip:
-            return  # replayed batch (same run): already durable
-        compact = latest_snapshot(
-            batch_df.select(*cols), key_cols, order_cols, val_cols
-        ).withColumn(_PART_COL, st.part_expr())
-        compact.persist()
-        try:
-            touched = st.touched(compact)
-            prev = st.read_parts(spark, man, touched)
-            if prev is not None:
-                merged = latest_snapshot(
-                    prev.unionByName(compact.drop(_PART_COL)),
-                    key_cols, order_cols, val_cols,
-                ).withColumn(_PART_COL, st.part_expr())
-            else:
-                merged = compact
-            st.commit(merged, man, touched, batch_id)
-        finally:
-            compact.unpersist()
+    def _compact(df: DataFrame) -> DataFrame:
+        return latest_snapshot(df, key_cols, order_cols, val_cols)
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        compact = latest_snapshot(
-            batch_df.select(*cols), key_cols, order_cols, val_cols
-        )
-        ptr = _os.path.join(path, "_CURRENT")
-        if _os.path.exists(ptr):
-            with open(ptr) as f:
-                cur = f.read().strip()
-            prev = spark.read.parquet(_os.path.join(path, cur))
-            merged = latest_snapshot(
-                prev.unionByName(compact), key_cols, order_cols, val_cols
-            )
-            nxt = "b" if cur == "a" else "a"
-        else:
-            merged, nxt = compact, "a"
-        merged.write.mode("overwrite").parquet(_os.path.join(path, nxt))
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(nxt)
-        _os.replace(tmp, ptr)  # atomic pointer flip commits the batch
+    def _merge(_batch_df, _batch_id, delta, prev):
+        return delta if prev is None else _compact(prev.unionByName(delta))
 
-    w = (
-        sdf.writeStream.foreachBatch(
-            _write_partitioned if state_parts else _write
-        )
-        .option("checkpointLocation", checkpoint_dir)
+    return _snapshot_sink(
+        sdf, path, checkpoint_dir, key_cols,
+        lambda batch_df: _compact(batch_df.select(*cols)), _merge,
+        available_now, state_parts, gc_grace_batches,
+        drain_shuffle_partitions,
     )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    with drain_width(sdf.sparkSession, drain_shuffle_partitions):
-        return w.start()
 
 
 def read_snapshot(spark: SparkSession, path: str) -> DataFrame:
-    """Read the current snapshot written by the snapshot-sink family.
-    Auto-detects the layout: a ``_MANIFEST`` (hash-prefix-partitioned
-    state, default) resolves to the union of every partition's current
-    generation dir; otherwise the legacy ``_CURRENT`` A/B pointer
-    (whose incremental_agg variant also carries the last applied batch
-    id after a colon).
+    """Read the current snapshot written by the snapshot-sink family:
+    the manifest resolves to the union of every partition's current
+    generation dir.
 
     Reading concurrently with an ACTIVE stream on a shared filesystem
     requires the sink to run with ``gc_grace_batches >= 1``: under
@@ -1545,28 +1562,48 @@ def read_snapshot(spark: SparkSession, path: str) -> DataFrame:
     import os as _os
 
     man = _load_manifest(path)
-    if man is not None:
-        paths = [
-            _os.path.join(path, gen, f"{_PART_COL}={k}")
-            for k, gen in sorted(man["map"].items(), key=lambda kv: int(kv[0]))
-        ]
-        if not paths:
-            # every commit records the data schema, so a stream whose
-            # batches so far were all empty serves an EMPTY snapshot
-            # (legacy-writer parity) instead of raising
-            if "schema" in man:
-                from pyspark.sql.types import StructType
-
-                return spark.createDataFrame(
-                    [], StructType.fromJson(man["schema"])
-                )
-            raise FileNotFoundError(
-                f"snapshot {path!r} committed no partitions yet"
+    if man is None:
+        raise FileNotFoundError(f"snapshot {path!r} has no manifest")
+    paths = [
+        _os.path.join(path, gen, f"{_PART_COL}={k}")
+        for k, gen in sorted(man["map"].items(), key=lambda kv: int(kv[0]))
+    ]
+    if not paths:
+        # every commit records the data schema, so a stream whose
+        # batches so far were all empty serves an EMPTY snapshot
+        # instead of raising
+        if "schema" in man:
+            return spark.createDataFrame(
+                [], StructType.fromJson(man["schema"])
             )
-        return spark.read.parquet(*paths)
-    with open(_os.path.join(path, "_CURRENT")) as f:
-        cur = f.read().strip().split(":")[0]
-    return spark.read.parquet(_os.path.join(path, cur))
+        raise FileNotFoundError(
+            f"snapshot {path!r} committed no partitions yet"
+        )
+    return spark.read.parquet(*paths)
+
+
+def drain_snapshot(
+    sink: Callable[..., Any],
+    sdf: DataFrame,
+    source_path: str | None = None,
+    **sink_args: Any,
+) -> DataFrame:
+    """Drain ``sdf`` through the snapshot sink ``sink``
+    (``upsert_snapshot_sink`` or ``incremental_agg_sink``, given its
+    own arguments as ``sink_args``) and return the drained snapshot.
+    Like ``run_available_now``, the snapshot and checkpoint dirs are
+    fresh ``striot_mkdtemp`` dirs and the drain runs at the width
+    ``derive_drain_width`` derives from the staged ``source_path``."""
+    spark = sdf.sparkSession
+    path = striot_mkdtemp(prefix="striot_drain_snap_")
+    sink(
+        sdf,
+        path,
+        striot_mkdtemp(prefix="striot_drain_ck_"),
+        drain_shuffle_partitions=derive_drain_width(spark, source_path),
+        **sink_args,
+    ).awaitTermination()
+    return read_snapshot(spark, path)
 
 
 def incremental_agg_sink(
@@ -1596,28 +1633,22 @@ def incremental_agg_sink(
     micro-batch boundaries and cross-batch arrival order, with no
     watermark needed. Unlike the latest-wins upsert (idempotent by
     max_by), ADDITIVE merge would double-count a replayed batch, so the
-    A/B pointer records the last applied batch id and a run id derived
-    from the checkpoint dir ("a:17:3f2a9c1d"), and a replayed
-    ``batch_id <= last`` from the SAME run is skipped — Structured
-    Streaming replays only the last uncommitted batch, and if the
-    pointer already advanced past it the merge result is already
-    durable. The run id closes a silent-data-loss hole: restarting the
-    stream with a FRESH checkpoint dir against the same snapshot path
-    restarts batch ids at 0, which the bare ``<= last`` guard would
-    misread as replays and drop; a run-id mismatch instead raises with
-    instructions (keep the checkpoint to resume, or point at a fresh
-    snapshot path). A colon-less pointer (path previously used by
-    ``upsert_snapshot_sink``) raises a clear error rather than
-    ``ValueError`` from ``split``. Same atomic pointer-flip crash
-    discipline as ``upsert_snapshot_sink``; snapshots are #keys-sized.
-    Read back with ``read_snapshot``.
+    manifest records the last applied batch id and a run id derived
+    from the checkpoint dir, and a replayed ``batch_id <= last`` from
+    the SAME run is skipped — Structured Streaming replays only the
+    last uncommitted batch, and if the manifest already advanced past
+    it the merge result is already durable. The run id closes a
+    silent-data-loss hole: restarting the stream with a FRESH
+    checkpoint dir against the same snapshot path restarts batch ids at
+    0, which the bare ``<= last`` guard would misread as replays and
+    drop; a run-id mismatch instead raises with instructions (keep the
+    checkpoint to resume, or point at a fresh snapshot path). Read back
+    with ``read_snapshot``.
 
-    Scale: with ``state_parts`` > 0 (default 16) the totals table is
-    hash-prefix partitioned (``_PartitionedState``): each batch merges
-    its delta into ONLY the partitions holding its keys — per-batch
-    cost O(batch + touched-state), not O(#keys) — with the same replay
-    guard carried in the atomic JSON manifest. ``state_parts=0`` keeps
-    the legacy whole-snapshot A/B writer.
+    Scale: the totals table is hash-prefix partitioned into
+    ``state_parts`` (>= 1) partitions (``_PartitionedState``): each
+    batch merges its delta into ONLY the partitions holding its keys —
+    per-batch cost O(batch + touched-state), not O(#keys).
 
     Non-additive aggregates decompose the standard way before this
     sink: avg = sum/count at read time; distinct counts via an exact
@@ -1629,118 +1660,33 @@ def incremental_agg_sink(
     same merge; any orderable column works (timestamps give per-key
     first/last-seen).
     """
-    import hashlib as _hashlib
-    import os as _os
-
-    run_id = _hashlib.sha1(
-        _os.path.abspath(checkpoint_dir).encode()
-    ).hexdigest()[:8]
     cols = list(
         dict.fromkeys([*key_cols, *sum_cols, *min_cols, *max_cols])
     )
 
-    def _partial(df: DataFrame) -> DataFrame:
-        return df.select(*cols).groupBy(*key_cols).agg(
+    def _partial(batch_df: DataFrame) -> DataFrame:
+        return batch_df.select(*cols).groupBy(*key_cols).agg(
             F.count(F.lit(1)).alias("n_rows"),
             *[F.sum(c).alias(f"sum_{c}") for c in sum_cols],
             *[F.min(c).alias(f"min_{c}") for c in min_cols],
             *[F.max(c).alias(f"max_{c}") for c in max_cols],
         )
 
-    def _merge_aggs():
-        return [
+    def _merge(_batch_df, _batch_id, delta, prev):
+        if prev is None:
+            return delta
+        return prev.unionByName(delta).groupBy(*key_cols).agg(
             F.sum("n_rows").alias("n_rows"),
             *[F.sum(f"sum_{c}").alias(f"sum_{c}") for c in sum_cols],
             *[F.min(f"min_{c}").alias(f"min_{c}") for c in min_cols],
             *[F.max(f"max_{c}").alias(f"max_{c}") for c in max_cols],
-        ]
-
-    def _write_partitioned(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        st = _PartitionedState(
-            path, list(key_cols), state_parts, run_id,
-            gc_grace_batches=gc_grace_batches,
         )
-        man, skip = st.load(batch_id)
-        if skip:
-            return  # replayed batch (same run): already durable
-        delta = _partial(batch_df).withColumn(_PART_COL, st.part_expr())
-        delta.persist()
-        try:
-            touched = st.touched(delta)
-            prev = st.read_parts(spark, man, touched)
-            if prev is not None:
-                merged = (
-                    prev.unionByName(delta.drop(_PART_COL))
-                    .groupBy(*key_cols)
-                    .agg(*_merge_aggs())
-                    .withColumn(_PART_COL, st.part_expr())
-                )
-            else:
-                merged = delta
-            st.commit(merged, man, touched, batch_id)
-        finally:
-            delta.unpersist()
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        ptr = _os.path.join(path, "_CURRENT")
-        prev, cur, last = None, None, -1
-        if _os.path.exists(ptr):
-            with open(ptr) as f:
-                parts = f.read().strip().split(":")
-            if len(parts) < 2:
-                raise ValueError(
-                    f"incremental_agg_sink: pointer {ptr!r} has no "
-                    f"batch id ({parts!r}) — this snapshot path was "
-                    "written by upsert_snapshot_sink, not this sink; "
-                    "use a fresh path"
-                )
-            cur, last = parts[0], int(parts[1])
-            if len(parts) < 3 or parts[2] != run_id:
-                # a 2-part legacy pointer carries no run id, so the
-                # run CANNOT be verified — refusing is the only safe
-                # call (accepting it would reopen the silent-drop
-                # hole for exactly the restarted-with-fresh-checkpoint
-                # case this guard exists for)
-                seen = parts[2] if len(parts) >= 3 else "<none>"
-                raise ValueError(
-                    f"incremental_agg_sink: snapshot {path!r} was "
-                    f"built by a different or unverifiable run "
-                    f"(pointer run id {seen}, this checkpoint's "
-                    f"{run_id}). Batch ids restart at 0 under a "
-                    "fresh checkpoint dir, so the replay guard would "
-                    "silently drop data. Resume with the original "
-                    "checkpoint dir, or write to a fresh snapshot "
-                    "path"
-                )
-            if batch_id <= last:
-                return  # replayed batch (same run): already durable
-            prev = spark.read.parquet(_os.path.join(path, cur))
-        delta = _partial(batch_df)
-        if prev is not None:
-            merged = prev.unionByName(delta).groupBy(*key_cols).agg(
-                *_merge_aggs()
-            )
-            nxt = "b" if cur == "a" else "a"
-        else:
-            merged, nxt = delta, "a"
-        merged.write.mode("overwrite").parquet(_os.path.join(path, nxt))
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(f"{nxt}:{batch_id}:{run_id}")
-        _os.replace(tmp, ptr)  # atomic flip commits dir AND batch id
-
-    w = (
-        sdf.writeStream.foreachBatch(
-            _write_partitioned if state_parts else _write
-        )
-        .option("checkpointLocation", checkpoint_dir)
+    return _snapshot_sink(
+        sdf, path, checkpoint_dir, key_cols, _partial, _merge,
+        available_now, state_parts, gc_grace_batches,
+        drain_shuffle_partitions,
     )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    with drain_width(sdf.sparkSession, drain_shuffle_partitions):
-        return w.start()
 
 
 def to_console(sdf: DataFrame, checkpoint_dir: str, mode: str = "append"):

@@ -1261,27 +1261,29 @@ def test_upsert_snapshot_sink_matches_batch_compaction(
     """Streaming latest-wins upsert over an adversarial out-of-order
     multi-batch replay must converge to exactly the batch compaction
     (per-key max by (ts, event_id)) — batch boundaries and arrival
-    order must not matter."""
+    order must not matter. A same-checkpoint resume leaves the snapshot
+    identical; a fresh checkpoint against it refuses (run-id guard)."""
     from striot_spark.functions.analytics import latest_snapshot
 
     src, ev, _delay = ooo_staged
     schema = spark.read.parquet(src).schema
     sdf = RT.file_stream(spark, src, schema, max_files_per_trigger=1)
     snap_dir = str(tmp_path / "snap")
-    q = RT.upsert_snapshot_sink(
-        sdf,
-        snap_dir,
-        ckpt,
+    kw = dict(
         key_cols=["user_id"],
         order_cols=["ts", "event_id"],
         payload_cols=["event_type", "cents"],
     )
-    q.awaitTermination()
-    got = sorted(
-        (r["user_id"], r["event_id"], r["event_type"], r["cents"])
-        for r in RT.read_snapshot(spark, snap_dir).collect()
-        if r["user_id"] != -1  # barrier sentinel
-    )
+
+    def snapshot():
+        return sorted(
+            (r["user_id"], r["event_id"], r["event_type"], r["cents"])
+            for r in RT.read_snapshot(spark, snap_dir).collect()
+            if r["user_id"] != -1  # barrier sentinel
+        )
+
+    RT.upsert_snapshot_sink(sdf, snap_dir, ckpt, **kw).awaitTermination()
+    got = snapshot()
     expect = sorted(
         (r["user_id"], r["event_id"], r["event_type"], r["cents"])
         for r in latest_snapshot(
@@ -1290,6 +1292,15 @@ def test_upsert_snapshot_sink_matches_batch_compaction(
         ).collect()
     )
     assert got == expect and len(got) > 0
+    # resuming with the SAME checkpoint dir re-offers nothing new; any
+    # replayed batch id is skipped and the snapshot stays identical
+    RT.upsert_snapshot_sink(sdf, snap_dir, ckpt, **kw).awaitTermination()
+    assert snapshot() == expect
+    # a FRESH checkpoint dir restarts batch ids at 0, so the run-id
+    # guard must refuse the existing snapshot
+    q = RT.upsert_snapshot_sink(sdf, snap_dir, str(tmp_path / "ck2"), **kw)
+    with pytest.raises(Exception, match="different run"):
+        q.awaitTermination()
 
 
 def test_streaming_ingest_quality_pipeline_composes(
@@ -1652,89 +1663,43 @@ def test_partitioned_state_guards(tmp_path):
         _PartitionedState(legacy, ["k"], 16, "aaaaaaaa").load(0)
 
 
-def test_incremental_agg_sink_legacy_whole_snapshot_mode(
-    spark, ooo_staged, ckpt, tmp_path
+@pytest.mark.parametrize(
+    "bad", [{"state_parts": 0}, {"state_parts": -1}, {"gc_grace_batches": -2}],
+    ids=["parts0", "parts-1", "grace-2"],
+)
+@pytest.mark.parametrize("sink", ["upsert", "incremental", "near_dup"])
+def test_snapshot_sinks_reject_bad_state_args_at_build(
+    spark, tmp_path, sink, bad
 ):
-    """state_parts=0 keeps the legacy whole-snapshot A/B writer: same
-    converged totals, pointer carries batch id + run id, and the
-    pointer-format diagnostics (colon-less upsert pointer, 2-part
-    legacy pointer with no run id) raise their clear errors. A
-    partitioned sink pointed at this legacy path must also refuse
-    rather than shadow it with a manifest."""
-    import os
+    """A state_parts below 1 or a gc_grace_batches below -1 raises
+    ValueError when the sink is built: no query starts, rather than one
+    that fails at its first micro-batch."""
+    from striot_spark.functions.dedup import near_dup_filter_stream
 
-    src, ev, _delay = ooo_staged
-    schema = spark.read.parquet(src).schema
-    sdf = RT.file_stream(spark, src, schema, max_files_per_trigger=1)
-    snap_dir = str(tmp_path / "mv")
-    q = RT.incremental_agg_sink(
-        sdf, snap_dir, ckpt, key_cols=["user_id"], sum_cols=["cents"],
-        state_parts=0,
-    )
-    q.awaitTermination()
-    got = sorted(
-        (r["user_id"], r["n_rows"], r["sum_cents"])
-        for r in RT.read_snapshot(spark, snap_dir).collect()
-        if r["user_id"] != -1
-    )
-    expect = sorted(
-        (r["user_id"], r["n_rows"], r["sum_cents"])
-        for r in ev.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("cents").alias("sum_cents"),
-        )
-        .collect()
-    )
-    assert got == expect and len(got) > 0
-    with open(os.path.join(snap_dir, "_CURRENT")) as f:
-        cur, last, run_id = f.read().strip().split(":")
-    assert cur in ("a", "b") and int(last) >= 2  # multi-batch replay ran
-    assert len(run_id) == 8
-    # fresh checkpoint against the legacy snapshot must refuse
-    q2 = RT.incremental_agg_sink(
-        sdf,
-        snap_dir,
-        str(tmp_path / "ck2"),
-        key_cols=["user_id"],
-        sum_cols=["cents"],
-        state_parts=0,
-    )
-    with pytest.raises(Exception, match="different or unverifiable"):
-        q2.awaitTermination()
-    # (the partitioned sink refusing this legacy path is unit-tested in
-    # test_partitioned_state_guards — a drained checkpoint runs no
-    # micro-batch, so it can't be provoked through the stream here)
-    # a colon-less pointer (path written by upsert_snapshot_sink) must
-    # raise the clear diagnostic, not a bare unpack ValueError
-    with open(os.path.join(snap_dir, "_CURRENT"), "w") as f:
-        f.write("a")
-    q4 = RT.incremental_agg_sink(
-        sdf,
-        snap_dir,
-        str(tmp_path / "ck3"),
-        key_cols=["user_id"],
-        sum_cols=["cents"],
-        state_parts=0,
-    )
-    with pytest.raises(Exception, match="no batch id"):
-        q4.awaitTermination()
-    # a LEGACY 2-part pointer carries no run id: the run cannot be
-    # verified, so the sink must refuse rather than reopen the
-    # silent-drop hole (batch ids restart at 0 under a fresh
-    # checkpoint and '<= last' would discard every real batch)
-    with open(os.path.join(snap_dir, "_CURRENT"), "w") as f:
-        f.write("a:17")
-    q5 = RT.incremental_agg_sink(
-        sdf,
-        snap_dir,
-        str(tmp_path / "ck4"),
-        key_cols=["user_id"],
-        sum_cols=["cents"],
-        state_parts=0,
-    )
-    with pytest.raises(Exception, match="unverifiable"):
-        q5.awaitTermination()
+    sdf = spark.readStream.format("rate").load()
+    snap, ck = str(tmp_path / "snap"), str(tmp_path / "ck")
+    build = {
+        "upsert": lambda: RT.upsert_snapshot_sink(
+            sdf, snap, ck, key_cols=["value"], order_cols=["timestamp"],
+            payload_cols=[], **bad,
+        ),
+        "incremental": lambda: RT.incremental_agg_sink(
+            sdf, snap, ck, key_cols=["value"], sum_cols=[], **bad
+        ),
+        "near_dup": lambda: near_dup_filter_stream(
+            sdf, str(tmp_path / "out"), snap, ck, "value", "text",
+            ["value"], **bad,
+        ),
+    }[sink]
+    before = {q.id for q in spark.streams.active}
+    try:
+        with pytest.raises(ValueError, match="state_parts|gc_grace_batches"):
+            build()
+        assert {q.id for q in spark.streams.active} == before
+    finally:
+        for q in spark.streams.active:
+            if q.id not in before:
+                q.stop()
 
 
 def test_partitioned_state_crash_replay_recovery(spark, tmp_path):

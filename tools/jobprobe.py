@@ -15,6 +15,7 @@ import json
 import sys
 import time
 import urllib.request
+from datetime import datetime
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -28,22 +29,12 @@ def main() -> int:
     ap.add_argument("--reps", type=int, default=1)
     args = ap.parse_args()
 
-    from striot_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="jobprobe", extra_conf={"spark.ui.enabled": "true"}
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.range(64).repartition(32).mapInPandas(lambda it: it, "id long").count()
-
-    from striot_spark.sources.batch import load_table
-
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"):
-        load_table(spark, args.sf, t).count()
-
     import __spark_entry__ as e
+    from bench import open_session
+
+    spark = open_session(
+        args.sf, "jobprobe", {"spark.ui.enabled": "true"}
+    )
 
     qs = e.queries()
     ui = spark.sparkContext.uiWebUrl
@@ -72,8 +63,6 @@ def main() -> int:
             for j in new:
                 t_sub = j["submissionTime"]
                 t_done = j.get("completionTime", t_sub)
-                from datetime import datetime
-
                 fmt = "%Y-%m-%dT%H:%M:%S.%f%Z"
                 dur = (
                     datetime.strptime(t_done, fmt)

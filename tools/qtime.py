@@ -6,7 +6,7 @@
 Times each named query with the noop sink inside the bench session,
 interleaving queries across reps (A B A B ...) so box drift hits every
 arm equally; prints per-rep and min/median per query. clearCache()
-between runs, warmup identical to bench.py.
+between runs; session, warm-up and calib from bench.py.
 """
 
 from __future__ import annotations
@@ -34,21 +34,11 @@ def main() -> int:
                          "drift between processes.")
     args = ap.parse_args()
 
-    from striot_spark.session import get_spark
+    import __spark_entry__ as e
+    from bench import calib_sec, open_session
 
     extra = dict(kv.split("=", 1) for kv in args.conf)
-    spark = get_spark(app_name="qtime", extra_conf=extra or None)
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.range(64).repartition(32).mapInPandas(lambda it: it, "id long").count()
-
-    from striot_spark.sources.batch import load_table
-
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"):
-        load_table(spark, args.sf, t).count()
-
-    import __spark_entry__ as e
+    spark = open_session(args.sf, "qtime", extra or None)
 
     qs = e.queries()
     ab = dict(kv.split("=", 1) for kv in args.ab) if args.ab else None
@@ -80,13 +70,7 @@ def main() -> int:
     for (n, arm), ts in sorted(rows.items()):
         print(f"{n}[{arm}]: min={min(ts):.3f} med={statistics.median(ts):.3f} "
               f"all={[round(t, 2) for t in ts]}")
-    # calib, same as bench.py
-    calib = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(2_000_000_000).selectExpr("sum(id * 2654435761 % 1000003)").collect()
-        calib = min(calib, time.perf_counter() - t0)
-    print(f"calib_sec={calib:.4f}")
+    print(f"calib_sec={calib_sec(spark):.4f}")
     return 0
 
 
