@@ -76,6 +76,18 @@ def calib_sec(spark) -> float:
     return calib
 
 
+def timed_run(spark, fn, sf_dir: str) -> float:
+    """Seconds to force ``fn(spark, sf_dir)`` end-to-end with the noop
+    sink (full computation, no collect). clearCache() first drops any
+    .persist() data of an earlier run: Spark's CacheManager matches by
+    plan equality, so a repeat would otherwise read cached
+    intermediates."""
+    spark.catalog.clearCache()
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+    return time.perf_counter() - t0
+
+
 def time_queries(spark, queries: dict, sf_dir: str, repeats: int):
     """Best-of-``repeats`` seconds per query, each forced end-to-end with
     the noop sink. A query that raises does not stop the run: it lands
@@ -86,16 +98,7 @@ def time_queries(spark, queries: dict, sf_dir: str, repeats: int):
     errors: dict[str, dict] = {}
     for name, fn in sorted(queries.items()):
         try:
-            best = float("inf")
-            for _ in range(repeats):
-                # clearCache() drops any .persist() data from the
-                # previous repeat (Spark's CacheManager matches by plan
-                # equality, so the repeat would otherwise read cached
-                # intermediates)
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-                best = min(best, time.perf_counter() - t0)
+            best = min(timed_run(spark, fn, sf_dir) for _ in range(repeats))
             timings[name] = round(best, 4)
         except Exception as e:  # one failing query must not blank the run
             errors[name] = {

@@ -147,8 +147,24 @@ class Stream:
     ) -> "Stream":
         """Fused window+aggregate. Tumbling makers → groupBy (one shuffle,
         partial aggregation); sliding makers → analytic frames (zero row
-        multiplication)."""
+        multiplication). On a streaming frame a ``ChopTime`` maker lowers
+        to the native watermarked event-time window
+        (``streaming/runtime.py:window_agg_stream``, its default
+        watermark), whose output always carries ``window_start``; this
+        is the only method that dispatches on ``isStreaming``."""
         key = list(key or [])
+        if self.df.isStreaming and isinstance(maker, Wm.ChopTime):
+            from striot_spark.streaming import runtime as RT
+
+            out = RT.window_agg_stream(
+                self.df,
+                self.time_col,
+                maker.duration,
+                aggs,
+                key,
+                origin=maker.origin,
+            )
+            return Stream(out, time_col=None, seq_col=None)
         if Wm.is_sliding(maker):
             spec = Wm.sliding_frame(maker, self.time_col, self.seq_col, key)
             df = self.df

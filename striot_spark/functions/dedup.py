@@ -1427,6 +1427,45 @@ def cross_corpus_near_dup_pairs(
     )
 
 
+def token_hashes(text_col: str) -> Column:
+    """The 60-bit md5 hash of each non-empty space-split token of
+    ``text_col``, as an array (``simhash_bits``' input)."""
+    return F.expr(
+        f"""
+        transform(
+          filter(split({text_col}, ' '), t -> t <> ''),
+          t -> CAST(conv(substring(md5(encode(t, 'UTF-8')), 1, 15),
+                         16, 10) AS BIGINT))
+        """
+    )
+
+
+def simhash_bits(hashes_col: str) -> Column:
+    """60-bit SimHash of the token-hash array column ``hashes_col``:
+    each token votes +1 or -1 on every bit, and a bit is set where its
+    vote sum is positive. The one fingerprint definition, shared by
+    ``simhash`` (batch) and ``streaming/runtime.py:
+    fingerprint_dedup_stream``."""
+    return F.expr(
+        f"""
+        aggregate(
+          zip_with(
+            aggregate(
+              {hashes_col},
+              array_repeat(CAST(0 AS BIGINT), 60),
+              (acc, h) -> zip_with(
+                  acc, sequence(0, 59),
+                  (a, b) -> a + CASE WHEN (h >> b) & 1 = 1
+                                 THEN CAST(1 AS BIGINT)
+                                 ELSE CAST(-1 AS BIGINT) END)),
+            sequence(0, 59),
+            (v, b) -> CASE WHEN v > 0 THEN CAST(1 AS BIGINT) << b
+                           ELSE CAST(0 AS BIGINT) END),
+          CAST(0 AS BIGINT), (acc, x) -> acc + x)
+        """
+    )
+
+
 def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """60-bit SimHash fingerprint, fully declarative — and a pure
     projection: the bit-vote fold runs over the in-row token-hash array
@@ -1435,43 +1474,11 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     shuffled every token). Zero-token docs are dropped (parity with the
     unnest-based oracle SQL).
     """
-    hashes = scatter(df).withColumn(
-        "hs",
-        F.expr(
-            """
-            transform(
-              filter(split({text}, ' '), t -> t <> ''),
-              t -> CAST(conv(substring(md5(encode(t, 'UTF-8')), 1, 15),
-                             16, 10) AS BIGINT))
-            """.format(text=text_col)
-        ),
-    ).filter(F.size("hs") > 0)
-    votes = F.expr(
-        """
-        aggregate(
-          hs,
-          array_repeat(CAST(0 AS BIGINT), 60),
-          (acc, h) -> zip_with(
-              acc, sequence(0, 59),
-              (a, b) -> a + CASE WHEN (h >> b) & 1 = 1
-                             THEN CAST(1 AS BIGINT)
-                             ELSE CAST(-1 AS BIGINT) END))
-        """
-    )
-    fingerprint = F.expr(
-        """
-        aggregate(
-          zip_with(votes, sequence(0, 59),
-                   (v, b) -> CASE WHEN v > 0
-                                  THEN CAST(1 AS BIGINT) << b
-                                  ELSE CAST(0 AS BIGINT) END),
-          CAST(0 AS BIGINT), (acc, x) -> acc + x)
-        """
-    )
     return (
-        hashes.withColumn("votes", votes)
-        .withColumn("simhash", fingerprint)
-        .select(id_col, "simhash")
+        scatter(df)
+        .withColumn("hs", token_hashes(text_col))
+        .filter(F.size("hs") > 0)
+        .select(id_col, simhash_bits("hs").alias("simhash"))
     )
 
 

@@ -559,6 +559,15 @@ def same_key_pairs(
     return pairs.distinct() if unique else pairs
 
 
+def undirected(df: DataFrame, a: str = "u", b: str = "v") -> DataFrame:
+    """Both directions of every edge: ``df`` plus each row with ``a``
+    and ``b`` swapped, every other column (a weight ``w``) carried
+    unchanged — the edge list the operators here take for an
+    undirected graph."""
+    swap = {a: F.col(b).alias(a), b: F.col(a).alias(b)}
+    return df.unionByName(df.select(*[swap.get(c, c) for c in df.columns]))
+
+
 def triangle_count(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     """Exact global triangle count over an undirected edge list
     (distinct pairs, either orientation) — with the degree-orientation
@@ -581,10 +590,7 @@ def triangle_count(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     from striot_spark.functions.text import md5_hash64
 
     e = edges.select(F.col(a).alias("u"), F.col(b).alias("v"))
-    both = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    deg = both.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+    deg = undirected(e).groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     ann = (
         e.join(
             deg.select(F.col("u").alias("__n"), F.col("d").alias("du")),
@@ -643,10 +649,7 @@ def _orient_pairs(p: DataFrame) -> DataFrame:
     (u, v, src, dst, dd, dh) — NOT persisted; callers decide."""
     from striot_spark.functions.text import md5_hash64
 
-    both = p.unionByName(
-        p.select(F.col("u").alias("v"), F.col("v").alias("u"))
-    )
-    deg = both.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+    deg = undirected(p).groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     ann = (
         p.join(
             deg.select(F.col("u").alias("__n"), F.col("d").alias("du")),

@@ -20,9 +20,8 @@ CENTS_SQL = "CAST(round((value)*100.0, 0) AS BIGINT)"
 EPOCH_S = "(epoch_us(ts) // 1000000)"
 
 
-@register(
-    "q31_joinw_revenue_per_click",
-    f"""
+# shared by q31 (batch) and q87 (stream)
+JOINW_ORACLE = f"""
     WITH l AS (
         SELECT ({EPOCH_S} // 86400) * 86400 AS left_window,
                sum({CENTS_SQL}) / 100.0 AS revenue
@@ -34,7 +33,12 @@ EPOCH_S = "(epoch_us(ts) // 1000000)"
     SELECT l.left_window, l.left_window - l.left_window % 172800 AS right_window,
            l.revenue, r.n_clicks
     FROM l LEFT JOIN r ON r.right_window = l.left_window - l.left_window % 172800
-    """,
+    """
+
+
+@register(
+    "q31_joinw_revenue_per_click",
+    JOINW_ORACLE,
     doc="streamJoinW with different per-side window lengths "
     "(FunctionalProcessing.hs:175-178; taxi Q2 pattern Taxi.hs:299-305): "
     "1-day purchase revenue joined to the containing 2-day click window",
@@ -55,19 +59,7 @@ def q31_joinw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q87_joinw_stream",
-    f"""
-    WITH l AS (
-        SELECT ({EPOCH_S} // 86400) * 86400 AS left_window,
-               sum({CENTS_SQL}) / 100.0 AS revenue
-        FROM events WHERE event_type = 'purchase' GROUP BY 1),
-    r AS (
-        SELECT ({EPOCH_S} // 172800) * 172800 AS right_window,
-               count(*) AS n_clicks
-        FROM events WHERE event_type = 'click' GROUP BY 1)
-    SELECT l.left_window, l.left_window - l.left_window % 172800 AS right_window,
-           l.revenue, r.n_clicks
-    FROM l LEFT JOIN r ON r.right_window = l.left_window - l.left_window % 172800
-    """,
+    JOINW_ORACLE,
     doc="streamJoinW lowered to Structured Streaming (taxi Q2 pattern, "
     "Taxi.hs:299-305): two watermarked windowed aggregations — 1-day "
     "purchase revenue, 2-day click counts — drained available-now, then "
@@ -332,16 +324,20 @@ def q93d_joinw_stream_money_double(
     )
 
 
-@register(
-    "q32_joine_window_theta",
-    f"""
+# shared by q32 (batch) and q117 (stream)
+JOINE_ORACLE = f"""
     WITH p AS (SELECT ({EPOCH_S} // 3600) * 3600 AS window_id, event_id, value
                FROM events WHERE event_type = 'purchase'),
          e AS (SELECT ({EPOCH_S} // 3600) * 3600 AS window_id, event_id, value
                FROM events WHERE event_type = 'error')
     SELECT p.window_id, p.event_id AS purchase_id, e.event_id AS error_id
     FROM p JOIN e USING (window_id) WHERE p.value > e.value
-    """,
+    """
+
+
+@register(
+    "q32_joine_window_theta",
+    JOINE_ORACLE,
     doc="streamJoinE: windowed theta join — cartesian within time-aligned "
     "1h windows, filtered purchase.value > error.value "
     "(FunctionalProcessing.hs:161-173); equi-join on window key at scale",
@@ -714,14 +710,18 @@ def q55_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q56_daily_distinct_users",
-    """
+# shared by q56 (batch) and q115 (stream)
+DAILY_DISTINCT_ORACLE = """
     SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
            count(DISTINCT user_id) AS n_users,
            count(*) AS n_events
     FROM events GROUP BY 1
-    """,
+    """
+
+
+@register(
+    "q56_daily_distinct_users",
+    DAILY_DISTINCT_ORACLE,
     doc="exact windowed distinct count: Spark lowers to a two-phase "
     "plan (partial dedup on (day, user) map-side, then count) — the "
     "distinct shuffle carries unique pairs, not raw events",
@@ -739,9 +739,8 @@ def q56_daily_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q59_interval_join",
-    f"""
+# shared by q59 (batch) and q116 (stream)
+INTERVAL_JOIN_ORACLE = f"""
     WITH c AS (SELECT event_id AS click_id, user_id, ts AS click_ts
                FROM events WHERE event_type = 'click'),
          p AS (SELECT event_id AS purchase_id, user_id, ts AS purchase_ts,
@@ -755,7 +754,12 @@ def q56_daily_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON c.user_id = p.user_id
      AND p.purchase_ts >= c.click_ts
      AND p.purchase_ts <= c.click_ts + INTERVAL 1 HOUR
-    """,
+    """
+
+
+@register(
+    "q59_interval_join",
+    INTERVAL_JOIN_ORACLE,
     doc="bounded time-interval join (click -> purchases by the same "
     "user within 1h) via the binned range-join lowering in "
     "operators/join.py:interval_join — equi-join on (key, time-bin) "

@@ -434,13 +434,16 @@ def q45_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q74_dedup_groups",
-    _cc_sql_cte()
-    + """
+# shared by q74 and q129 (two lowerings of one answer)
+DEDUP_GROUPS_ORACLE = _cc_sql_cte() + """
     SELECT u AS doc_id, least(u, min(v)) AS group_id
     FROM reach GROUP BY u
-    """,
+    """
+
+
+@register(
+    "q74_dedup_groups",
+    DEDUP_GROUPS_ORACLE,
     doc="near-dup pairs (q45's simhash graph) -> dedup groups via "
     "connected components: min-label propagation, one edge-label "
     "equi-join + one min groupBy per round, O(component diameter) "
@@ -1722,9 +1725,8 @@ def q114_scrub_duplicated_spans(
     )
 
 
-@register(
-    "q128_cms_heavy_hitters",
-    """
+# shared by q128 (batch) and q130 (stream)
+CMS_ORACLE = """
     WITH toks AS (
         SELECT unnest(list_filter(string_split(text, ' '), x -> x <> ''))
             AS tok
@@ -1746,7 +1748,12 @@ def q114_scrub_duplicated_spans(
         ('0x' || substr(md5(e.tok || '#1'), 1, 15))::BIGINT % 512
     JOIN b2 s2 ON s2.pos =
         ('0x' || substr(md5(e.tok || '#2'), 1, 15))::BIGINT % 512
-    """,
+    """
+
+
+@register(
+    "q128_cms_heavy_hitters",
+    CMS_ORACLE,
     doc="count-min-sketch heavy hitters vs exact ground truth "
     "(functions/analytics.py:cms_heavy_hitters; Cormode & "
     "Muthukrishnan 2005): the sketch hashes are md5-derived so the "
@@ -1766,11 +1773,7 @@ def q128_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q129_dedup_groups_logrounds",
-    _cc_sql_cte()
-    + """
-    SELECT u AS doc_id, least(u, min(v)) AS group_id
-    FROM reach GROUP BY u
-    """,
+    DEDUP_GROUPS_ORACLE,
     doc="the SAME dedup-groups result as q74, computed by the "
     "O(log^2 n)-round large-star/small-star contraction "
     "(functions/dedup.py:dedup_groups_logrounds; Kiveris et al. "
@@ -3439,9 +3442,8 @@ def q265_shuffle_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SAMP.shuffle_shard(docs, "doc_id", n_shards=8, seed="ep0")
 
 
-@register(
-    "q272_unigram_surprisal",
-    """
+# shared by q272 (batch) and q273 (stream)
+SURPRISAL_ORACLE = """
     WITH toks AS (
         SELECT doc_id,
                unnest(list_filter(string_split(text, ' '),
@@ -3462,7 +3464,12 @@ def q265_shuffle_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(surprisal_bits * 1000 // n_tokens AS BIGINT)
                AS mean_millibits
     FROM s
-    """,
+    """
+
+
+@register(
+    "q272_unigram_surprisal",
+    SURPRISAL_ORACLE,
     doc="per-doc INTEGER unigram surprisal — the info-theoretic "
     "member of the quality-screen family (the exact-arithmetic "
     "stand-in for the perplexity filter every LLM corpus pipeline "

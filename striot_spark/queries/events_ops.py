@@ -99,22 +99,31 @@ def q01_filter_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # -- streamExpand (op #4) ----------------------------------------------------
-@register(
-    "q02_expand_tokens",
-    """
+# shared by q02 (batch) and q121 (stream), as is ``token_counts``
+TOKEN_COUNTS_ORACLE = """
     SELECT token, count(*) AS n
     FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents) t
     WHERE token <> '' GROUP BY token
-    """,
+    """
+
+
+@register(
+    "q02_expand_tokens",
+    TOKEN_COUNTS_ORACLE,
     doc="streamExpand: explode word tokens (FunctionalProcessing.hs:206-210; "
     "hashtag example examples/expand/generate.hs:31-36)",
 )
 def q02_expand_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return token_counts(load_table(spark, sf_dir, "documents"))
+
+
+def token_counts(docs: DataFrame) -> DataFrame:
+    """Word-token counts over a documents frame, batch or streaming."""
     from striot_spark.core import Stream
 
-    docs = Stream(load_table(spark, sf_dir, "documents"))
     return (
-        docs.with_columns(tokens=F.split(F.col("text"), " "))
+        Stream(docs)
+        .with_columns(tokens=F.split(F.col("text"), " "))
         .expand("tokens", alias="token")
         .filter(F.col("token") != "")
         .df.groupBy("token")
@@ -123,19 +132,27 @@ def q02_expand_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # -- streamMerge (op #5) -----------------------------------------------------
-@register(
-    "q03_merge",
-    f"""
+# shared by q03 (batch) and q120 (stream), as is ``merge_clicks_views``
+MERGE_ORACLE = f"""
     SELECT event_id, strftime(ts, '{TS_FMT}') AS ts_s, 'clicks' AS src, value
     FROM events WHERE event_type = 'click'
     UNION ALL
     SELECT event_id, strftime(ts, '{TS_FMT}') AS ts_s, 'views' AS src, value
     FROM events WHERE event_type = 'view'
-    """,
+    """
+
+
+@register(
+    "q03_merge",
+    MERGE_ORACLE,
     doc="streamMerge: n-way union (FunctionalProcessing.hs:135-144)",
 )
 def q03_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = event_stream(spark, sf_dir)
+    return merge_clicks_views(event_stream(spark, sf_dir))
+
+
+def merge_clicks_views(s) -> DataFrame:
+    """Clicks and views of an event ``Stream``, tagged and merged."""
     clicks = s.filter(F.col("event_type") == "click").map(
         "event_id", ts_s=ts_str(F.col("ts")), src=F.lit("clicks"), value=F.col("value")
     )
@@ -166,20 +183,30 @@ def q04_chop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # -- streamWindow: chopTime (time tumbling) ----------------------------------
-@register(
-    "q05_choptime_window",
-    f"""
+# shared by q05 (batch) and q78 (stream), as is ``daily_value_stats``
+CHOPTIME_ORACLE = f"""
     SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
            count(*) AS n,
            sum({CENTS_SQL}) / 100.0 AS sum_value,
            sum({CENTS_SQL}) / count(*) / 100.0 AS avg_value
     FROM events GROUP BY 1
-    """,
+    """
+
+
+@register(
+    "q05_choptime_window",
+    CHOPTIME_ORACLE,
     doc="chopTime: tumbling time window, epoch-aligned Spark window() "
     "(FunctionalProcessing.hs:118-126; alignment delta documented)",
 )
 def q05_choptime(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = event_stream(spark, sf_dir)
+    return daily_value_stats(event_stream(spark, sf_dir))
+
+
+def daily_value_stats(s) -> DataFrame:
+    """Per-day count, sum and mean of an event ``Stream``'s values: a
+    grouped window on a batch frame, a watermarked event-time window on
+    a streaming one (``Stream.window_agg``)."""
     out = s.window_agg(
         ChopTime("1 day"),
         {
@@ -278,9 +305,8 @@ def q09_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # -- streamJoin: positional zip (op #6) --------------------------------------
-@register(
-    "q10_zip_join",
-    """
+# shared by q10 (batch) and q123 (stream)
+ZIP_ORACLE = """
     WITH c AS (SELECT row_number() OVER (ORDER BY ts, event_id) - 1 AS zip_pos,
                       event_id, value
                FROM events WHERE event_type = 'click'),
@@ -290,7 +316,12 @@ def q09_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT c.zip_pos, c.event_id AS click_id, v.event_id AS view_id,
            c.value AS click_value, v.value AS view_value
     FROM c JOIN v USING (zip_pos)
-    """,
+    """
+
+
+@register(
+    "q10_zip_join",
+    ZIP_ORACLE,
     doc="streamJoin: positional pairwise zip of two streams "
     "(FunctionalProcessing.hs:148-155) via row_number equi-join",
 )
@@ -690,9 +721,8 @@ def q67_joine_positional_untimed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q107_latest_snapshot",
-    f"""
+# shared by q107 (batch) and q125 (stream)
+LATEST_SNAPSHOT_ORACLE = f"""
     SELECT user_id, event_id AS last_event_id,
            event_type AS last_type,
            strftime(ts, '{TS_FMT}') AS last_ts,
@@ -702,7 +732,12 @@ def q67_joine_positional_untimed(spark: SparkSession, sf_dir: str) -> DataFrame:
             PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
         FROM events) t
     WHERE rn = 1
-    """,
+    """
+
+
+@register(
+    "q107_latest_snapshot",
+    LATEST_SNAPSHOT_ORACLE,
     doc="latest-wins CDC/upsert compaction (SCD type 1): one row per "
     "key carrying the payload of its (ts, event_id)-latest change. "
     "Lowered as ONE groupBy with max_by on a payload struct — map-side "
@@ -860,9 +895,8 @@ def q146_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q148_table_digest",
-    f"""
+# shared by q148 (batch) and q150 (stream), as is ``events_digest``
+TABLE_DIGEST_ORACLE = f"""
     WITH p AS (
         SELECT COALESCE(md5(CAST(event_id AS VARCHAR)), '<NULL>') ||
                COALESCE(md5(CAST(user_id AS VARCHAR)), '<NULL>') ||
@@ -876,7 +910,12 @@ def q146_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT hv % 64 AS bucket, count(*) AS n_rows,
            CAST(sum(hv) % 2147483647 AS BIGINT) AS digest
     FROM h GROUP BY hv % 64
-    """,
+    """
+
+
+@register(
+    "q148_table_digest",
+    TABLE_DIGEST_ORACLE,
     doc="order-insensitive bucketed table content digest "
     "(functions/analytics.py:table_digest): per-row injection-safe "
     "column-wise md5 fold, per-bucket row count + modular SUM of row "
@@ -887,9 +926,15 @@ def q146_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bucket-row aggregate with map-side partials",
 )
 def q148_table_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from striot_spark.functions.analytics import cents, table_digest
+    return events_digest(load_table(spark, sf_dir, "events"))
 
-    ev = load_table(spark, sf_dir, "events").select(
+
+def events_digest(ev: DataFrame) -> DataFrame:
+    """The 64-bucket content digest of an events frame, batch or
+    streaming (count and modular sum are order-insensitive)."""
+    from striot_spark.functions.analytics import table_digest
+
+    ev = ev.select(
         "event_id",
         "user_id",
         "event_type",
@@ -1221,9 +1266,8 @@ def q160_gini_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q161_ohlc_bars",
-    f"""
+# shared by q161 (batch) and q164 (stream), as is ``daily_ohlc``
+OHLC_ORACLE = f"""
     WITH v AS (
         SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
                {CENTS_SQL} AS c, ts, event_id
@@ -1242,7 +1286,12 @@ def q160_gini_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
            max(CASE WHEN rd = 1 THEN c END) AS close_c,
            count(*) AS n
     FROM rk GROUP BY day
-    """,
+    """
+
+
+@register(
+    "q161_ohlc_bars",
+    OHLC_ORACLE,
     doc="time-series downsampling to OHLC bars (open/high/low/close "
     "per day in integer cents): open/close are min_by/max_by on the "
     "(ts, event_id) total order — ONE groupBy with map-side partials, "
@@ -1252,16 +1301,20 @@ def q160_gini_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "that turns a 100 TB tick stream into queryable bars",
 )
 def q161_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from striot_spark.functions.analytics import cents, day_str
+    return daily_ohlc(load_table(spark, sf_dir, "events"))
 
+
+def daily_ohlc(ev: DataFrame) -> DataFrame:
+    """Per-day OHLC bars in integer cents over an events frame, batch or
+    streaming (every aggregate is order-insensitive)."""
     from striot_spark.functions.analytics import ohlc_bars
 
-    ev = load_table(spark, sf_dir, "events").select(
+    bars = ev.select(
         day_str(F.col("ts")).alias("day"),
         cents(F.col("value")).alias("c"),
         F.struct(F.col("ts"), F.col("event_id")).alias("o"),
     )
-    return ohlc_bars(ev, "day", "c", "o")
+    return ohlc_bars(bars, "day", "c", "o")
 
 
 @register(
@@ -1795,11 +1848,16 @@ def q195_debounce_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q196_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from striot_spark.functions.analytics import burst_flags
 
-    ev = load_table(spark, sf_dir, "events")
-    m = ev.groupBy(
+    m = hour_counts(load_table(spark, sf_dir, "events"))
+    return burst_flags(m, "event_type", "b")
+
+
+def hour_counts(ev: DataFrame) -> DataFrame:
+    """(event_type, hour ``b``, ``n``) counts over an events frame, batch
+    or streaming; ``analytics.burst_flags`` reads them."""
+    return ev.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("b")
     ).agg(F.count(F.lit(1)).alias("n"))
-    return burst_flags(m, "event_type", "b")
 
 
 @register(
@@ -2776,9 +2834,8 @@ def q274_decayed_user_activity(
     )
 
 
-@register(
-    "q284_exponential_histogram",
-    f"""
+# shared by q284 (batch) and q286 (stream)
+EXP_HISTOGRAM_ORACLE = f"""
     WITH c AS (SELECT event_type, {CENTS_SQL} AS v
                FROM events WHERE {CENTS_SQL} >= 1)
     SELECT event_type,
@@ -2788,7 +2845,12 @@ def q274_decayed_user_activity(
            CAST(count(*) AS BIGINT) AS n_events,
            CAST(sum(v) AS BIGINT) AS sum_c
     FROM c GROUP BY event_type, length(bin(v))
-    """,
+    """
+
+
+@register(
+    "q284_exponential_histogram",
+    EXP_HISTOGRAM_ORACLE,
     doc="per-type EXPONENTIAL histogram of event values — the "
     "base-2-bucket latency/value histogram of the observability "
     "standard (OpenTelemetry exponential histograms, Prometheus "

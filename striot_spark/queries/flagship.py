@@ -57,7 +57,14 @@ def q30_frequent_routes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value") >= 0)
         .withColumn("day", day_str(F.col("ts")))
     )
-    ranked = topk(ev, ["day"], "event_type", 3)
+    return routes_on_change(topk(ev, ["day"], "event_type", 3))
+
+
+def routes_on_change(ranked: DataFrame) -> DataFrame:
+    """The frequentRoutes finalize tier, shared by q30 and its stream
+    twin: each day's (``rnk``, ``event_type``) rows become one ordered
+    route list, and a day is kept only when its list differs from the
+    previous day's (dedup-on-change as a ``lag``)."""
     lists = ranked.groupBy("day").agg(
         F.array_join(
             F.transform(
@@ -130,21 +137,7 @@ def frequent_routes_stream(
         )
         .filter(F.col("rnk") <= 3)
     )
-    lists = ranked.groupBy("day").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("rnk", "event_type"))),
-                lambda s: s["event_type"],
-            ),
-            ",",
-        ).alias("top_routes")
-    )
-    w = W.orderBy("day")
-    return (
-        lists.withColumn("prev", F.lag("top_routes").over(w))
-        .filter(F.col("prev").isNull() | (F.col("prev") != F.col("top_routes")))
-        .select("day", "top_routes")
-    )
+    return routes_on_change(ranked)
 
 
 # -- streaming flagship under the correctness gate ---------------------------
@@ -182,11 +175,35 @@ def _stage_events(spark: SparkSession, sf_dir: str) -> str:
 # barrier sentinel ids: real event_id/user_id are non-negative bigints
 BARRIER_USER = -1
 
-# shared batch/stream oracle pieces (the streaming twins q198/q206 run
-# under the identical SQL as their batch forms q195/q196)
+# the stream twins below register their batch twin's oracle string and,
+# where the lowering is the same, run their batch twin's pipeline over a
+# replayed source
+from striot_spark.queries.composite import (  # noqa: E402
+    DAILY_DISTINCT_ORACLE,
+    INTERVAL_JOIN_ORACLE,
+    JOINE_ORACLE,
+)
+from striot_spark.queries.datapipe import (  # noqa: E402
+    CMS_ORACLE,
+    SURPRISAL_ORACLE,
+)
 from striot_spark.queries.events_ops import (  # noqa: E402
     BURST_ORACLE,
+    CHOPTIME_ORACLE,
     DEBOUNCE_ORACLE_CTE,
+    EXP_HISTOGRAM_ORACLE,
+    LATEST_SNAPSHOT_ORACLE,
+    MERGE_ORACLE,
+    OHLC_ORACLE,
+    TABLE_DIGEST_ORACLE,
+    TOKEN_COUNTS_ORACLE,
+    ZIP_ORACLE,
+    daily_ohlc,
+    daily_value_stats,
+    events_digest,
+    hour_counts,
+    merge_clicks_views,
+    token_counts,
 )
 
 
@@ -253,27 +270,15 @@ def _stage_events_ooo(spark: SparkSession, sf_dir: str) -> str:
     driver's own environment. The 365-day watermark delay exceeds any
     possible disorder (the whole data span); the barrier lands one hour
     past max+delay so the final watermark passes every real event.
-
-    TEST-STAGING ONLY: the global single-partition ``row_number()`` below (a ``Window.orderBy`` with no partition key) is a deliberate O(n)-single-partition sort that exists to cut adversarial micro-batch boundaries for the serve tests at sf0.01 — it is fixture machinery, never a production path, and must not be copied into an operator (VERDICT r12).
+    Test staging only (``split_thirds``).
     """
     import datetime as _dt
 
-    from pyspark.sql import Window
-
-    from striot_spark.streaming.runtime import stage_ordered_files
+    from striot_spark.streaming.runtime import split_thirds, stage_ordered_files
 
     def write(out: str):
         base = load_table(spark, sf_dir, "events")
-        n = base.count()
-        evr = base.withColumn(
-            "rn", F.row_number().over(Window.orderBy("ts", "event_id"))
-        )
-        third = n // 3
-        a = evr.filter(F.col("rn") <= third).drop("rn")
-        b = evr.filter(
-            (F.col("rn") > third) & (F.col("rn") <= 2 * third)
-        ).drop("rn")
-        c = evr.filter(F.col("rn") > 2 * third).drop("rn")
+        a, b, c = split_thirds(base, ["ts", "event_id"])
         mx = base.agg(F.max("ts")).first()[0]
         barrier = _barrier_row(base, mx + _dt.timedelta(days=365, hours=1))
         stage_ordered_files([b, a, c, barrier], out)
@@ -300,41 +305,23 @@ from striot_spark.queries.events_ops import CENTS_SQL as _Q78_CENTS
 
 @register(
     "q78_window_agg_stream",
-    f"""
-    SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-           count(*) AS n,
-           sum({_Q78_CENTS}) / 100.0 AS sum_value,
-           sum({_Q78_CENTS}) / count(*) / 100.0 AS avg_value
-    FROM events GROUP BY 1
-    """,
+    CHOPTIME_ORACLE,
     doc="streaming chopTime aggregation (watermarked tumbling window + "
     "incremental state) drained available-now — hash-checked against "
-    "the SAME oracle as batch q05, so streaming-vs-batch window "
-    "semantics parity is driver-visible, not only locally tested",
+    "the SAME oracle as batch q05, and the same pipeline "
+    "(events_ops.daily_value_stats): on a streaming frame "
+    "Stream.window_agg lowers ChopTime to the native event-time window, "
+    "so streaming-vs-batch window semantics parity is driver-visible, "
+    "not only locally tested",
 )
 def q78_window_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from striot_spark.functions.analytics import avg_money, sum_money
+    from striot_spark.core import Stream
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events(spark, sf_dir)
-    sdf = RT.file_stream(spark, src)
-    counts = RT.window_agg_stream(
-        sdf,
-        "ts",
-        "1 day",
-        {
-            "n": F.count(F.lit(1)),
-            "sum_value": sum_money(F.col("value")),
-            "avg_value": avg_money(F.col("value")),
-        },
-        watermark="1 minute",
-    )
-    drained = RT.run_available_now(counts, mode="complete", source_path=src)
-    return drained.select(
-        day_str(F.col("window_start")).alias("day"),
-        "n",
-        "sum_value",
-        "avg_value",
+    s = Stream(RT.file_stream(spark, src), time_col="ts")
+    return RT.run_available_now(
+        daily_value_stats(s), mode="complete", source_path=src
     )
 
 
@@ -1057,12 +1044,7 @@ def q111_sliding_time_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q115_daily_distinct_stream",
-    """
-    SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-           count(DISTINCT user_id) AS n_users,
-           count(*) AS n_events
-    FROM events GROUP BY 1
-    """,
+    DAILY_DISTINCT_ORACLE,
     doc="EXACT windowed distinct count on the stream: two CHAINED "
     "stateful aggregations in one plan (Spark 4 multiple-stateful-"
     "operator support) — agg1 dedups to (day-window, user) partials, "
@@ -1104,21 +1086,7 @@ def q115_daily_distinct_stream(
 
 @register(
     "q116_interval_join_stream",
-    f"""
-    WITH c AS (SELECT event_id AS click_id, user_id, ts AS click_ts
-               FROM events WHERE event_type = 'click'),
-         p AS (SELECT event_id AS purchase_id, user_id, ts AS purchase_ts,
-                      value
-               FROM events WHERE event_type = 'purchase')
-    SELECT c.click_id, p.purchase_id, c.user_id,
-           epoch_us(p.purchase_ts) - epoch_us(c.click_ts) AS gap_us,
-           CAST(round(p.value * 100.0, 0) AS BIGINT) / 100.0
-               AS purchase_value
-    FROM c JOIN p
-      ON c.user_id = p.user_id
-     AND p.purchase_ts >= c.click_ts
-     AND p.purchase_ts <= c.click_ts + INTERVAL 1 HOUR
-    """,
+    INTERVAL_JOIN_ORACLE,
     doc="STREAMING bounded time-interval join under the same oracle as "
     "batch q59: native stream-stream inner join with the range "
     "condition written on the two watermarked event-time columns, so "
@@ -1177,21 +1145,9 @@ def q116_interval_join_stream(
     )
 
 
-_EPOCH_S_Q117 = "(epoch_us(ts) // 1000000)"
-
-
 @register(
     "q117_joine_stream",
-    f"""
-    WITH p AS (SELECT ({_EPOCH_S_Q117} // 3600) * 3600 AS window_id,
-                      event_id, value
-               FROM events WHERE event_type = 'purchase'),
-         e AS (SELECT ({_EPOCH_S_Q117} // 3600) * 3600 AS window_id,
-                      event_id, value
-               FROM events WHERE event_type = 'error')
-    SELECT p.window_id, p.event_id AS purchase_id, e.event_id AS error_id
-    FROM p JOIN e USING (window_id) WHERE p.value > e.value
-    """,
+    JOINE_ORACLE,
     doc="STREAMING streamJoinE under the same oracle as batch q32 "
     "(FunctionalProcessing.hs:161-173): both streams bucket into "
     "aligned 1h tumbling windows via F.window equality (keeps the "
@@ -1228,20 +1184,9 @@ def q117_joine_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from striot_spark.queries.events_ops import TS_FMT as _TS_FMT_Q120
-
-
 @register(
     "q120_merge_stream",
-    f"""
-    SELECT event_id, strftime(ts, '{_TS_FMT_Q120}') AS ts_s,
-           'clicks' AS src, value
-    FROM events WHERE event_type = 'click'
-    UNION ALL
-    SELECT event_id, strftime(ts, '{_TS_FMT_Q120}') AS ts_s,
-           'views' AS src, value
-    FROM events WHERE event_type = 'view'
-    """,
+    MERGE_ORACLE,
     doc="STREAMING streamMerge (FunctionalProcessing.hs:135-144) under "
     "the same oracle as batch q03: two filtered streams union'd by "
     "name — stateless in Structured Streaming, so the drain is batch-"
@@ -1250,32 +1195,14 @@ from striot_spark.queries.events_ops import TS_FMT as _TS_FMT_Q120
     "as in the batch lowering (the gate is order-insensitive)",
 )
 def q120_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from striot_spark.functions.analytics import ts_str
+    from striot_spark.core import Stream
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events(spark, sf_dir)
-    clicks = (
-        RT.file_stream(spark, src)
-        .filter(F.col("event_type") == "click")
-        .select(
-            "event_id",
-            ts_str(F.col("ts")).alias("ts_s"),
-            F.lit("clicks").alias("src"),
-            "value",
-        )
+    s = Stream(RT.file_stream(spark, src))
+    return RT.run_available_now(
+        merge_clicks_views(s), mode="append", source_path=src
     )
-    views = (
-        RT.file_stream(spark, src)
-        .filter(F.col("event_type") == "view")
-        .select(
-            "event_id",
-            ts_str(F.col("ts")).alias("ts_s"),
-            F.lit("views").alias("src"),
-            "value",
-        )
-    )
-    merged = clicks.unionByName(views)
-    return RT.run_available_now(merged, mode="append", source_path=src)
 
 
 def _stage_documents(spark: SparkSession, sf_dir: str) -> str:
@@ -1294,11 +1221,7 @@ def _stage_documents(spark: SparkSession, sf_dir: str) -> str:
 
 @register(
     "q121_expand_stream",
-    """
-    SELECT token, count(*) AS n
-    FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents) t
-    WHERE token <> '' GROUP BY token
-    """,
+    TOKEN_COUNTS_ORACLE,
     doc="STREAMING streamExpand (FunctionalProcessing.hs:206-210) under "
     "the same oracle as batch q02: explode word tokens on a document "
     "stream (stateless flat-map) feeding an unwatermarked global "
@@ -1309,11 +1232,7 @@ def q121_expand_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from striot_spark.streaming import runtime as RT
 
     src = _stage_documents(spark, sf_dir)
-    sdf = RT.file_stream(spark, src)
-    toks = sdf.select(
-        F.explode(F.split(F.col("text"), " ")).alias("token")
-    ).filter(F.col("token") != "")
-    counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
+    counts = token_counts(RT.file_stream(spark, src))
     return RT.run_available_now(counts, mode="complete", source_path=src)
 
 
@@ -1374,19 +1293,7 @@ def q122_corpus_ingest_stream(
 
 @register(
     "q123_zip_join_stream",
-    """
-    WITH c AS (SELECT row_number() OVER (ORDER BY ts, event_id) - 1
-                   AS zip_pos,
-                      event_id, value
-               FROM events WHERE event_type = 'click'),
-         v AS (SELECT row_number() OVER (ORDER BY ts, event_id) - 1
-                   AS zip_pos,
-                      event_id, value
-               FROM events WHERE event_type = 'view')
-    SELECT c.zip_pos, c.event_id AS click_id, v.event_id AS view_id,
-           c.value AS click_value, v.value AS view_value
-    FROM c JOIN v USING (zip_pos)
-    """,
+    ZIP_ORACLE,
     doc="STREAMING streamJoin — the positional zip "
     "(FunctionalProcessing.hs:148-155) under the same oracle as batch "
     "q10: both streams merge under a side tag into ONE stateful "
@@ -1424,17 +1331,7 @@ def q123_zip_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q125_upsert_snapshot_stream",
-    f"""
-    SELECT user_id, event_id AS last_event_id,
-           event_type AS last_type,
-           strftime(ts, '{_TS_FMT_Q89}') AS last_ts,
-           CAST(round((value)*100.0, 0) AS BIGINT) AS last_value_c
-    FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        FROM events) t
-    WHERE rn = 1
-    """,
+    LATEST_SNAPSHOT_ORACLE,
     doc="STREAMING latest-wins upsert sink under the same oracle as "
     "batch q107, driven through the ADVERSARIAL 4-batch out-of-order "
     "replay on purpose: upsert_snapshot_sink's foreachBatch merge "
@@ -1477,29 +1374,7 @@ def q125_upsert_snapshot_stream(
 
 @register(
     "q130_cms_sketch_stream",
-    """
-    WITH toks AS (
-        SELECT unnest(list_filter(string_split(text, ' '), x -> x <> ''))
-            AS tok
-        FROM documents),
-    ex AS (
-        SELECT tok, count(*) AS exact_n FROM toks GROUP BY tok
-        ORDER BY exact_n DESC, tok LIMIT 20),
-    b0 AS (SELECT ('0x' || substr(md5(tok || '#0'), 1, 15))::BIGINT % 512
-               AS pos, count(*) AS c FROM toks GROUP BY 1),
-    b1 AS (SELECT ('0x' || substr(md5(tok || '#1'), 1, 15))::BIGINT % 512
-               AS pos, count(*) AS c FROM toks GROUP BY 1),
-    b2 AS (SELECT ('0x' || substr(md5(tok || '#2'), 1, 15))::BIGINT % 512
-               AS pos, count(*) AS c FROM toks GROUP BY 1)
-    SELECT e.tok, e.exact_n, least(s0.c, s1.c, s2.c) AS cms_estimate
-    FROM ex e
-    JOIN b0 s0 ON s0.pos =
-        ('0x' || substr(md5(e.tok || '#0'), 1, 15))::BIGINT % 512
-    JOIN b1 s1 ON s1.pos =
-        ('0x' || substr(md5(e.tok || '#1'), 1, 15))::BIGINT % 512
-    JOIN b2 s2 ON s2.pos =
-        ('0x' || substr(md5(e.tok || '#2'), 1, 15))::BIGINT % 512
-    """,
+    CMS_ORACLE,
     doc="the count-min sketch BUILT ON THE STREAM (same oracle as "
     "batch q128): tokens explode on a document stream and fan into "
     "(row, bucket) pairs whose counts aggregate incrementally — CMS "
@@ -1717,63 +1592,25 @@ def q143_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q150_table_digest_stream",
-    f"""
-    WITH p AS (
-        SELECT COALESCE(md5(CAST(event_id AS VARCHAR)), '<NULL>') ||
-               COALESCE(md5(CAST(user_id AS VARCHAR)), '<NULL>') ||
-               COALESCE(md5(event_type), '<NULL>') ||
-               COALESCE(md5(CAST(CAST(round((value)*100.0, 0) AS BIGINT)
-                                 AS VARCHAR)), '<NULL>')
-                   AS s
-        FROM events),
-    h AS (SELECT ('0x' || substr(md5(s), 1, 15))::BIGINT % 2147483647
-              AS hv
-          FROM p)
-    SELECT hv % 64 AS bucket, count(*) AS n_rows,
-           CAST(sum(hv) % 2147483647 AS BIGINT) AS digest
-    FROM h GROUP BY hv % 64
-    """,
+    TABLE_DIGEST_ORACLE,
     doc="the q148 content digest built ON THE STREAM through the "
     "adversarial out-of-order multi-batch replay: count and modular "
     "SUM are algebraic aggregates, so the complete-mode streaming "
     "digest is exactly batching- and arrival-order-insensitive — "
     "continuous replication validation (digest the stream while it "
     "loads, compare against the source's batch digest) under the "
-    "SAME oracle as batch q148",
+    "SAME oracle and pipeline (events_ops.events_digest) as batch q148",
 )
 def q150_table_digest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from striot_spark.functions.analytics import cents
-    from striot_spark.functions.text import md5_hash64
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events_ooo(spark, sf_dir)
-    sdf = (
-        RT.file_stream(spark, src, max_files_per_trigger=1)
-        .filter(F.col("user_id") != BARRIER_USER)
-        .withColumn("value_c", cents(F.col("value")))
+    sdf = RT.file_stream(spark, src, max_files_per_trigger=1).filter(
+        F.col("user_id") != BARRIER_USER
     )
-    parts = [
-        F.coalesce(
-            F.md5(F.encode(F.col(c).cast("string"), "UTF-8")),
-            F.lit("<NULL>"),
-        )
-        for c in ("event_id", "user_id", "event_type", "value_c")
-    ]
-    h = md5_hash64(F.concat(*parts)) % F.lit(2147483647)
-    digest_s = (
-        sdf.select(
-            F.pmod(h, F.lit(64)).alias("bucket"), h.alias("__h")
-        )
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            (
-                F.sum(F.col("__h").cast("decimal(38,0)"))
-                % F.lit(2147483647)
-            ).cast("long").alias("digest"),
-        )
+    return RT.run_available_now(
+        events_digest(sdf), mode="complete", source_path=src
     )
-    return RT.run_available_now(digest_s, mode="complete", source_path=src)
 
 
 @register(
@@ -1851,26 +1688,7 @@ def q152_pit_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q164_ohlc_bars_stream",
-    """
-    WITH v AS (
-        SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-               CAST(round((value)*100.0, 0) AS BIGINT) AS c, ts, event_id
-        FROM events),
-    rk AS (
-        SELECT day, c,
-               row_number() OVER (PARTITION BY day
-                                  ORDER BY ts ASC, event_id ASC) AS ra,
-               row_number() OVER (PARTITION BY day
-                                  ORDER BY ts DESC, event_id DESC) AS rd
-        FROM v)
-    SELECT day,
-           max(CASE WHEN ra = 1 THEN c END) AS open_c,
-           max(c) AS high_c,
-           min(c) AS low_c,
-           max(CASE WHEN rd = 1 THEN c END) AS close_c,
-           count(*) AS n
-    FROM rk GROUP BY day
-    """,
+    OHLC_ORACLE,
     doc="q161's OHLC downsampling computed ON THE STREAM through the "
     "adversarial out-of-order multi-batch replay: min_by/max_by over "
     "the (ts, event_id) total order, min/max/count are all "
@@ -1880,21 +1698,15 @@ def q152_pit_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the batch form",
 )
 def q164_ohlc_bars_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from striot_spark.functions.analytics import cents, day_str, ohlc_bars
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events_ooo(spark, sf_dir)
-    sdf = (
-        RT.file_stream(spark, src, max_files_per_trigger=1)
-        .filter(F.col("user_id") != BARRIER_USER)
-        .select(
-            day_str(F.col("ts")).alias("day"),
-            cents(F.col("value")).alias("c"),
-            F.struct(F.col("ts"), F.col("event_id")).alias("o"),
-        )
+    sdf = RT.file_stream(spark, src, max_files_per_trigger=1).filter(
+        F.col("user_id") != BARRIER_USER
     )
-    bars_s = ohlc_bars(sdf, "day", "c", "o")
-    return RT.run_available_now(bars_s, mode="complete", source_path=src)
+    return RT.run_available_now(
+        daily_ohlc(sdf), mode="complete", source_path=src
+    )
 
 
 @register(
@@ -2117,16 +1929,10 @@ def q206_burst_detection_stream(
     from striot_spark.streaming import runtime as RT
 
     src = _stage_events_ooo(spark, sf_dir)
-    sdf = (
-        RT.file_stream(spark, src, max_files_per_trigger=1)
-        .filter(F.col("user_id") != BARRIER_USER)
-        .groupBy(
-            "event_type",
-            F.date_trunc("hour", F.col("ts")).alias("b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
+    sdf = RT.file_stream(spark, src, max_files_per_trigger=1).filter(
+        F.col("user_id") != BARRIER_USER
     )
-    m = RT.run_available_now(sdf, mode="complete", source_path=src)
+    m = RT.run_available_now(hour_counts(sdf), mode="complete", source_path=src)
     return burst_flags(m, "event_type", "b")
 
 
@@ -2339,13 +2145,9 @@ def _stage_pair_events(spark: SparkSession, sf_dir: str) -> str:
     the same edge's multiplicity accumulates across micro-batch
     boundaries, which is exactly what the additive ingest sink must
     get right.
-
-    TEST-STAGING ONLY: the global single-partition ``row_number()`` below (a ``Window.orderBy`` with no partition key) is a deliberate O(n)-single-partition sort that exists to cut adversarial micro-batch boundaries for the serve tests at sf0.01 — it is fixture machinery, never a production path, and must not be copied into an operator (VERDICT r12).
+    Test staging only (``split_thirds``).
     """
-
-    from pyspark.sql import Window
-
-    from striot_spark.streaming.runtime import stage_ordered_files
+    from striot_spark.streaming.runtime import split_thirds, stage_ordered_files
 
     def write(out: str):
         li = load_table(spark, sf_dir, "lineitem").select(
@@ -2361,19 +2163,9 @@ def _stage_pair_events(spark: SparkSession, sf_dir: str) -> str:
             F.col("a.l_partkey").alias("u"),
             F.col("b.l_partkey").alias("v"),
         )
-        n = pe.count()
-        r = pe.withColumn(
-            "rn", F.row_number().over(Window.orderBy("u", "v"))
+        stage_ordered_files(
+            split_thirds(pe, ["u", "v"]), out, order_cols=["u", "v"]
         )
-        third = n // 3
-        chunks = [
-            r.filter(F.col("rn") <= third).drop("rn"),
-            r.filter(
-                (F.col("rn") > third) & (F.col("rn") <= 2 * third)
-            ).drop("rn"),
-            r.filter(F.col("rn") > 2 * third).drop("rn"),
-        ]
-        stage_ordered_files(chunks, out, order_cols=["u", "v"])
         return pe.schema
 
     return staged(sf_dir, "striot_fr_stream_pairs_", write)
@@ -2432,7 +2224,7 @@ def q239_lpa_stream_weighted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
 
-    from striot_spark.functions.graph import label_propagation
+    from striot_spark.functions.graph import label_propagation, undirected
     from striot_spark.streaming import runtime as RT
 
     src = _stage_pair_events(spark, sf_dir)
@@ -2446,11 +2238,7 @@ def q239_lpa_stream_weighted(
     ).select(
         "u", "v", F.col("n_rows").alias("w")
     )
-    edges = snap.unionByName(
-        snap.select(
-            F.col("v").alias("u"), F.col("u").alias("v"), F.col("w")
-        )
-    )
+    edges = undirected(snap)
     return label_propagation(
         edges, rounds=3, src="u", dst="v", weight="w"
     )
@@ -2510,28 +2298,7 @@ def q240_incremental_extents_stream(
 
 @register(
     "q273_surprisal_stream",
-    """
-    WITH toks AS (
-        SELECT doc_id,
-               unnest(list_filter(string_split(text, ' '),
-                                  x -> x <> '')) AS tok
-        FROM documents),
-    cnt AS (SELECT tok, CAST(count(*) AS BIGINT) AS c
-            FROM toks GROUP BY tok),
-    tot AS (SELECT CAST(sum(c) AS BIGINT) AS total FROM cnt),
-    bits AS (SELECT tok,
-                    CAST(length(bin(total // c)) - 1 AS BIGINT) AS b
-             FROM cnt CROSS JOIN tot),
-    s AS (SELECT t.doc_id,
-                 CAST(count(*) AS BIGINT) AS n_tokens,
-                 CAST(sum(b.b) AS BIGINT) AS surprisal_bits
-          FROM toks t JOIN bits b ON b.tok = t.tok
-          GROUP BY t.doc_id)
-    SELECT doc_id, n_tokens, surprisal_bits,
-           CAST(surprisal_bits * 1000 // n_tokens AS BIGINT)
-               AS mean_millibits
-    FROM s
-    """,
+    SURPRISAL_ORACLE,
     doc="STREAMING ingest-time surprisal scoring — the deployment "
     "shape of q272's quality screen (batch corpus stats, stream "
     "scoring): phase 1 builds the per-token bits table from the "
@@ -2690,25 +2457,9 @@ def q282_bm25_stream_serve(
     return drained
 
 
-def _q286_oracle() -> str:
-    from striot_spark.queries.events_ops import CENTS_SQL
-
-    return f"""
-    WITH c AS (SELECT event_type, {CENTS_SQL} AS v
-               FROM events WHERE {CENTS_SQL} >= 1)
-    SELECT event_type,
-           CAST(length(bin(v)) - 1 AS BIGINT) AS bucket,
-           CAST(1::BIGINT << (length(bin(v)) - 1) AS BIGINT) AS lo_c,
-           CAST((1::BIGINT << length(bin(v))) - 1 AS BIGINT) AS hi_c,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(sum(v) AS BIGINT) AS sum_c
-    FROM c GROUP BY event_type, length(bin(v))
-    """
-
-
 @register(
     "q286_exp_histogram_stream_serve",
-    _q286_oracle(),
+    EXP_HISTOGRAM_ORACLE,
     doc="STREAMING exponential histogram — the claim q284 makes "
     "('the mergeable, streaming-friendly histogram') proven through "
     "the serve tier: the bucket function is a stateless per-row "

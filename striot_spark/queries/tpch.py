@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from striot_spark.tempdirs import staged
 from striot_spark.functions.analytics import day_str
-from striot_spark.functions.graph import same_key_pairs
+from striot_spark.functions.graph import same_key_pairs, undirected
 from striot_spark.queries.registry import register
 from striot_spark.sources.batch import load_table
 
@@ -534,6 +534,32 @@ def q132_bucketed_colocated_join(
     )
 
 
+def _trade_observations(
+    spark: SparkSession, sf_dir: str, a: str = "a", b: str = "b"
+) -> DataFrame:
+    """Customer-supplier trade observations: one (``a`` = "c<custkey>",
+    ``b`` = "s<suppkey>") row per orders⋈lineitem hit, duplicates kept."""
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey"
+    )
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_suppkey"
+    )
+    return o.join(li, F.col("o_orderkey") == F.col("l_orderkey")).select(
+        F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(a),
+        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(b),
+    )
+
+
+def _trade_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The weighted trade graph: (a, b, w = trade multiplicity)."""
+    return (
+        _trade_observations(spark, sf_dir)
+        .groupBy("a", "b")
+        .agg(F.count(F.lit(1)).alias("w"))
+    )
+
+
 def _pagerank_oracle(iterations: int, scale: int, dn: int, dd: int) -> str:
     """Unroll the integer PageRank recurrence as chained CTEs — DuckDB
     reproduces the scaled-long arithmetic digit for digit."""
@@ -625,27 +651,8 @@ def q232_personalized_pagerank(
 ) -> DataFrame:
     from striot_spark.functions.graph import pagerank
 
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    pairs = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                "a"
-            ),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                "b"
-            ),
-        )
-        .distinct()
-    )
-    edges = pairs.unionByName(
-        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
+    pairs = _trade_observations(spark, sf_dir).distinct()
+    edges = undirected(pairs, "a", "b")
     pr = pagerank(edges, iterations=3, src="a", dst="b", seeds=_PPR_SEEDS)
     return pr.filter(F.col("rank") > 0).select(
         "node", F.col("rank").alias("pr")
@@ -670,27 +677,8 @@ def q133_pagerank_customer_supplier(
 ) -> DataFrame:
     from striot_spark.functions.graph import pagerank
 
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    pairs = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                "a"
-            ),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                "b"
-            ),
-        )
-        .distinct()
-    )
-    edges = pairs.unionByName(
-        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
+    pairs = _trade_observations(spark, sf_dir).distinct()
+    edges = undirected(pairs, "a", "b")
     pr = pagerank(edges, iterations=3, src="a", dst="b")
     return pr.select("node", F.col("rank").alias("pr"))
 
@@ -751,24 +739,7 @@ def _dangling_pr_oracle(iterations: int, scale: int, dn: int, dd: int) -> str:
 def q236_pagerank_dangling(spark: SparkSession, sf_dir: str) -> DataFrame:
     from striot_spark.functions.graph import pagerank
 
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    edges = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                "a"
-            ),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                "b"
-            ),
-        )
-        .distinct()
-    )
+    edges = _trade_observations(spark, sf_dir).distinct()
     pr = pagerank(
         edges, iterations=2, src="a", dst="b", dangling="redistribute"
     )
@@ -806,9 +777,15 @@ def _weighted_pr_oracle(iterations: int, scale: int, dn: int, dd: int) -> str:
     return sql + f"\n    SELECT node, pr FROM r{iterations}"
 
 
+# shared by q237 (batch) and q250 (stream), as is ``_trade_pagerank``
+_WEIGHTED_PR_ORACLE = _weighted_pr_oracle(
+    iterations=3, scale=10**9, dn=85, dd=100
+)
+
+
 @register(
     "q237_weighted_pagerank",
-    _weighted_pr_oracle(iterations=3, scale=10**9, dn=85, dd=100),
+    _WEIGHTED_PR_ORACLE,
     doc="WEIGHTED PageRank (functions/graph.py:pagerank(weight=...)) "
     "over the customer-supplier trade graph with edge weight = "
     "lineitem multiplicity of the pair (how often they actually "
@@ -821,33 +798,34 @@ def _weighted_pr_oracle(iterations: int, scale: int, dn: int, dd: int) -> str:
     "list); the oracle unrolls the identical weighted recurrence",
 )
 def q237_weighted_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _trade_pagerank(_trade_weights(spark, sf_dir))
+
+
+def _trade_pagerank(weights: DataFrame) -> DataFrame:
+    """3-iteration weighted PageRank over (a, b, w) trade weights."""
     from striot_spark.functions.graph import pagerank
 
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    pairs = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .groupBy(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                "a"
-            ),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                "b"
-            ),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    edges = pairs.unionByName(
-        pairs.select(
-            F.col("b").alias("a"), F.col("a").alias("b"), F.col("w")
-        )
-    )
+    edges = undirected(weights, "a", "b")
     pr = pagerank(edges, iterations=3, src="a", dst="b", weight="w")
     return pr.select("node", F.col("rank").alias("pr"))
+
+
+def _served_counts(
+    spark: SparkSession, src: str, key_cols: list, **sink_args
+) -> DataFrame:
+    """Replay the staged observations at ``src`` one file per
+    micro-batch into the additive ``incremental_agg_sink`` keyed on
+    ``key_cols``; returns the converged snapshot (keys and ``n_rows``)."""
+    from striot_spark.streaming import runtime as RT
+
+    return RT.drain_snapshot(
+        RT.incremental_agg_sink,
+        RT.file_stream(spark, src, max_files_per_trigger=1),
+        source_path=src,
+        key_cols=key_cols,
+        sum_cols=[],
+        **sink_args,
+    )
 
 
 _Q238_SCALE = 1_000_000
@@ -902,29 +880,8 @@ def _q238_oracle() -> str:
 def q238_weighted_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from striot_spark.functions.graph import modularity
 
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    pairs = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .groupBy(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                "a"
-            ),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                "b"
-            ),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    edges = pairs.unionByName(
-        pairs.select(
-            F.col("b").alias("a"), F.col("a").alias("b"), F.col("w")
-        )
-    )
+    pairs = _trade_weights(spark, sf_dir)
+    edges = undirected(pairs, "a", "b")
     cust = load_table(spark, sf_dir, "customer").select(
         F.concat(F.lit("c"), F.col("c_custkey").cast("string")).alias(
             "node"
@@ -1184,9 +1141,7 @@ def q230_lpa_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_partkey"
     )
     pairs = same_key_pairs(li, "l_orderkey", "l_partkey", out_a="u", out_b="v")
-    edges = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    edges = undirected(pairs)
     labels = label_propagation(edges, rounds=3, src="u", dst="v")
     return modularity(edges, labels, src="u", dst="v")
 
@@ -1214,9 +1169,7 @@ def q228_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_partkey"
     )
     pairs = same_key_pairs(li, "l_orderkey", "l_partkey", out_a="u", out_b="v")
-    edges = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    edges = undirected(pairs)
     return label_propagation(edges, rounds=3, src="u", dst="v")
 
 
@@ -1439,9 +1392,7 @@ def q172_kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_partkey"
     )
     pairs = same_key_pairs(li, "l_orderkey", "l_partkey", out_a="u", out_b="v")
-    edges = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    edges = undirected(pairs)
     return k_core(edges, k=90, rounds=3, src="u", dst="v")
 
 
@@ -1833,10 +1784,11 @@ _COPURCHASE_Q_CTE = """
               UNION ALL SELECT v AS src, u AS dst FROM eraw)"""
 
 
-def _copurchase_quarter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _quarter_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(l_orderkey, l_partkey) of the lines shipped in 1995 Q1."""
     import datetime as dt
 
-    li = (
+    return (
         load_table(spark, sf_dir, "lineitem")
         .filter(
             (F.col("l_shipdate") >= F.lit(dt.datetime(1995, 1, 1)))
@@ -1844,7 +1796,13 @@ def _copurchase_quarter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("l_orderkey", "l_partkey")
     )
-    return same_key_pairs(li, "l_orderkey", "l_partkey", out_a="u", out_b="v")
+
+
+def _copurchase_quarter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return same_key_pairs(
+        _quarter_lines(spark, sf_dir), "l_orderkey", "l_partkey",
+        out_a="u", out_b="v",
+    )
 
 
 @register(
@@ -1882,9 +1840,7 @@ def q241_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     from striot_spark.functions.graph import khop_reach
 
     pairs = _copurchase_quarter_pairs(spark, sf_dir)
-    edges = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    edges = undirected(pairs)
     return khop_reach(edges, hops=2, src="u", dst="v")
 
 
@@ -1968,9 +1924,13 @@ _KHOP_HLL_TAIL = """,
     """
 
 
+# shared by q243 (batch) and q245 (stream), as is ``_khop_hll``
+_KHOP_HLL_ORACLE = _COPURCHASE_Q_CTE + _KHOP_HLL_TAIL
+
+
 @register(
     "q243_khop_reach_hll",
-    _COPURCHASE_Q_CTE + _KHOP_HLL_TAIL,
+    _KHOP_HLL_ORACLE,
     doc="HLL-sketched k-hop reach (functions/graph.py:khop_reach_hll, "
     "the HyperANF register-propagation idea, Boldi/Rosa/Vigna WWW'11) "
     "over the same one-quarter co-purchase graph as q241 — the scale "
@@ -1986,13 +1946,14 @@ _KHOP_HLL_TAIL = """,
     "separately by a property test",
 )
 def q243_khop_reach_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _khop_hll(_copurchase_quarter_pairs(spark, sf_dir))
+
+
+def _khop_hll(pairs: DataFrame) -> DataFrame:
+    """2-hop HLL reach sketches over the undirected (u, v) pair graph."""
     from striot_spark.functions.graph import khop_reach_hll
 
-    pairs = _copurchase_quarter_pairs(spark, sf_dir)
-    edges = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    return khop_reach_hll(edges, hops=2, src="u", dst="v")
+    return khop_reach_hll(undirected(pairs), hops=2, src="u", dst="v")
 
 
 def _stage_quarter_pair_events(spark: SparkSession, sf_dir: str) -> str:
@@ -2000,26 +1961,12 @@ def _stage_quarter_pair_events(spark: SparkSession, sf_dir: str) -> str:
     per same-order partkey pair occurrence, duplicates kept) as three
     mtime-ordered files, ordered by (u, v) so the third-splits cut
     through pairs — same adversarial discipline as q239's stager, on
-    q241/q243's one-quarter graph.
-
-    TEST-STAGING ONLY: the global single-partition ``row_number()`` below (a ``Window.orderBy`` with no partition key) is a deliberate O(n)-single-partition sort that exists to cut adversarial micro-batch boundaries for the serve tests at sf0.01 — it is fixture machinery, never a production path, and must not be copied into an operator (VERDICT r12).
+    q241/q243's one-quarter graph. Test staging only (``split_thirds``).
     """
-
-    from pyspark.sql import Window
-
-    from striot_spark.streaming.runtime import stage_ordered_files
+    from striot_spark.streaming.runtime import split_thirds, stage_ordered_files
 
     def write(out: str):
-        import datetime as dt
-
-        li = (
-            load_table(spark, sf_dir, "lineitem")
-            .filter(
-                (F.col("l_shipdate") >= F.lit(dt.datetime(1995, 1, 1)))
-                & (F.col("l_shipdate") < F.lit(dt.datetime(1995, 4, 1)))
-            )
-            .select("l_orderkey", "l_partkey")
-        )
+        li = _quarter_lines(spark, sf_dir)
         a = li.alias("a")
         b = li.alias("b")
         pe = a.join(
@@ -2030,27 +1977,17 @@ def _stage_quarter_pair_events(spark: SparkSession, sf_dir: str) -> str:
             F.col("a.l_partkey").alias("u"),
             F.col("b.l_partkey").alias("v"),
         )
-        n = pe.count()
-        r = pe.withColumn(
-            "rn", F.row_number().over(Window.orderBy("u", "v"))
+        stage_ordered_files(
+            split_thirds(pe, ["u", "v"]), out, order_cols=["u", "v"]
         )
-        third = n // 3
-        chunks = [
-            r.filter(F.col("rn") <= third).drop("rn"),
-            r.filter(
-                (F.col("rn") > third) & (F.col("rn") <= 2 * third)
-            ).drop("rn"),
-            r.filter(F.col("rn") > 2 * third).drop("rn"),
-        ]
-        stage_ordered_files(chunks, out, order_cols=["u", "v"])
-        return chunks[0].schema
+        return pe.schema
 
     return staged(sf_dir, "striot_q245_pairs_", write)
 
 
 @register(
     "q245_khop_hll_stream_serve",
-    _COPURCHASE_Q_CTE + _KHOP_HLL_TAIL,
+    _KHOP_HLL_ORACLE,
     doc="STREAMED graph-feature serve (the q239 pattern on q243's "
     "feature): quarter co-purchase pair observations replay as three "
     "micro-batches cut THROUGH pairs, the additive ingest sink "
@@ -2067,24 +2004,9 @@ def _stage_quarter_pair_events(spark: SparkSession, sf_dir: str) -> str:
 def q245_khop_hll_stream_serve(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-
-    from striot_spark.functions.graph import khop_reach_hll
-    from striot_spark.streaming import runtime as RT
-
     src = _stage_quarter_pair_events(spark, sf_dir)
-    sdf = RT.file_stream(spark, src, max_files_per_trigger=1)
-    snap = RT.drain_snapshot(
-        RT.incremental_agg_sink,
-        sdf,
-        source_path=src,
-        key_cols=["u", "v"],
-        sum_cols=[],
-        gc_grace_batches=1,
-    ).select("u", "v")
-    edges = snap.unionByName(
-        snap.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    return khop_reach_hll(edges, hops=2, src="u", dst="v")
+    snap = _served_counts(spark, src, ["u", "v"], gc_grace_batches=1)
+    return _khop_hll(snap.select("u", "v"))
 
 
 @register(
@@ -2166,9 +2088,7 @@ def q246_neighborhood_function(
     from striot_spark.functions.graph import neighborhood_function
 
     pairs = _copurchase_quarter_pairs(spark, sf_dir)
-    edges = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    edges = undirected(pairs)
     return neighborhood_function(edges, hops=3, src="u", dst="v")
 
 
@@ -2323,9 +2243,7 @@ def q248_harmonic_centrality(
     from striot_spark.functions.graph import harmonic_centrality_hll
 
     pairs = _copurchase_quarter_pairs(spark, sf_dir)
-    edges = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    edges = undirected(pairs)
     return harmonic_centrality_hll(edges, hops=3, src="u", dst="v")
 
 
@@ -2361,9 +2279,13 @@ def _sssp_oracle(rounds: int, source: str, inv_scale: int) -> str:
     return sql + f"\n    SELECT node, dist FROM d{rounds}"
 
 
+# shared by q249 (batch) and q267 (stream), as is ``_trade_sssp``
+_SSSP_ORACLE = _sssp_oracle(rounds=3, source="c1", inv_scale=1_000_000)
+
+
 @register(
     "q249_sssp_trade_proximity",
-    _sssp_oracle(rounds=3, source="c1", inv_scale=1_000_000),
+    _SSSP_ORACLE,
     doc="single-source shortest paths (functions/graph.py:sssp): "
     "fixed-round integer Bellman-Ford over the customer-supplier "
     "trade graph with arc cost = 1e6 DIV trade multiplicity "
@@ -2381,31 +2303,15 @@ def _sssp_oracle(rounds: int, source: str, inv_scale: int) -> str:
 def q249_sssp_trade_proximity(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
+    return _trade_sssp(_trade_weights(spark, sf_dir))
+
+
+def _trade_sssp(weights: DataFrame) -> DataFrame:
+    """3-round shortest paths from c1 over (a, b, w) trade weights at
+    arc cost 1e6 DIV w."""
     from striot_spark.functions.graph import sssp
 
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    pairs = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .groupBy(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                "a"
-            ),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                "b"
-            ),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    edges = pairs.unionByName(
-        pairs.select(
-            F.col("b").alias("a"), F.col("a").alias("b"), F.col("w")
-        )
-    ).select(
+    edges = undirected(weights, "a", "b").select(
         "a", "b", F.expr("CAST(1000000 DIV w AS BIGINT)").alias("cost")
     )
     return sssp(edges, ["c1"], rounds=3, src="a", dst="b", cost="cost")
@@ -2418,47 +2324,23 @@ def _stage_trade_observations(spark: SparkSession, sf_dir: str) -> str:
     mtime-ordered files ordered by (a, b), so the third-splits cut
     through a pair's observations — the adversarial batching q239/q245
     use: per-key counts must come out identical no matter where the
-    micro-batch boundaries land.
-
-    TEST-STAGING ONLY: the global single-partition ``row_number()`` below (a ``Window.orderBy`` with no partition key) is a deliberate O(n)-single-partition sort that exists to cut adversarial micro-batch boundaries for the serve tests at sf0.01 — it is fixture machinery, never a production path, and must not be copied into an operator (VERDICT r12).
+    micro-batch boundaries land. Test staging only (``split_thirds``).
     """
-
-    from pyspark.sql import Window
-
-    from striot_spark.streaming.runtime import stage_ordered_files
+    from striot_spark.streaming.runtime import split_thirds, stage_ordered_files
 
     def write(out: str):
-        o = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey"
+        obs = _trade_observations(spark, sf_dir)
+        stage_ordered_files(
+            split_thirds(obs, ["a", "b"]), out, order_cols=["a", "b"]
         )
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_suppkey"
-        )
-        obs = o.join(li, F.col("o_orderkey") == F.col("l_orderkey")).select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("a"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("b"),
-        )
-        n = obs.count()
-        r = obs.withColumn(
-            "rn", F.row_number().over(Window.orderBy("a", "b"))
-        )
-        third = n // 3
-        chunks = [
-            r.filter(F.col("rn") <= third).drop("rn"),
-            r.filter(
-                (F.col("rn") > third) & (F.col("rn") <= 2 * third)
-            ).drop("rn"),
-            r.filter(F.col("rn") > 2 * third).drop("rn"),
-        ]
-        stage_ordered_files(chunks, out, order_cols=["a", "b"])
-        return chunks[0].schema
+        return obs.schema
 
     return staged(sf_dir, "striot_q250_obs_", write)
 
 
 @register(
     "q250_pagerank_stream_serve",
-    _weighted_pr_oracle(iterations=3, scale=10**9, dn=85, dd=100),
+    _WEIGHTED_PR_ORACLE,
     doc="STREAMED weighted-PageRank serve (VERDICT r10 task 5 — the "
     "q245 pattern one step further, proving the full stream -> "
     "graph-analytics composition): individual customer-supplier trade "
@@ -2475,29 +2357,9 @@ def _stage_trade_observations(spark: SparkSession, sf_dir: str) -> str:
 def q250_pagerank_stream_serve(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-
-    from striot_spark.functions.graph import pagerank
-    from striot_spark.streaming import runtime as RT
-
     src = _stage_trade_observations(spark, sf_dir)
-    sdf = RT.file_stream(spark, src, max_files_per_trigger=1)
-    snap = RT.drain_snapshot(
-        RT.incremental_agg_sink,
-        sdf,
-        source_path=src,
-        key_cols=["a", "b"],
-        sum_cols=[],
-        gc_grace_batches=1,
-    ).select(
-        "a", "b", F.col("n_rows").alias("w")
-    )
-    edges = snap.unionByName(
-        snap.select(
-            F.col("b").alias("a"), F.col("a").alias("b"), F.col("w")
-        )
-    )
-    pr = pagerank(edges, iterations=3, src="a", dst="b", weight="w")
-    return pr.select("node", F.col("rank").alias("pr"))
+    snap = _served_counts(spark, src, ["a", "b"], gc_grace_batches=1)
+    return _trade_pagerank(snap.select("a", "b", F.col("n_rows").alias("w")))
 
 
 @register(
@@ -2524,9 +2386,7 @@ def q251_degree_distribution(
     from striot_spark.functions.graph import degree_distribution
 
     pairs = _copurchase_quarter_pairs(spark, sf_dir)
-    edges = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    edges = undirected(pairs)
     return degree_distribution(edges, src="u", dst="v")
 
 
@@ -2580,9 +2440,7 @@ def q252_degree_assortativity(
     from striot_spark.functions.graph import degree_assortativity
 
     pairs = _copurchase_quarter_pairs(spark, sf_dir)
-    edges = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    edges = undirected(pairs)
     return degree_assortativity(edges, src="u", dst="v")
 
 
@@ -2641,29 +2499,8 @@ def _sssp_parents_oracle(rounds: int, source: str, inv_scale: int) -> str:
 def q253_sssp_parents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from striot_spark.functions.graph import sssp
 
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    pairs = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .groupBy(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                "a"
-            ),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                "b"
-            ),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    edges = pairs.unionByName(
-        pairs.select(
-            F.col("b").alias("a"), F.col("a").alias("b"), F.col("w")
-        )
-    ).select(
+    pairs = _trade_weights(spark, sf_dir)
+    edges = undirected(pairs, "a", "b").select(
         "a", "b", F.expr("CAST(1000000 DIV w AS BIGINT)").alias("cost")
     )
     return sssp(
@@ -2743,29 +2580,8 @@ _Q254_PIVOTS = ["c1", "c2", "c3", "s1"]
 def q254_harmonic_pivots(spark: SparkSession, sf_dir: str) -> DataFrame:
     from striot_spark.functions.graph import harmonic_centrality_pivots
 
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    pairs = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .groupBy(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                "a"
-            ),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                "b"
-            ),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    edges = pairs.unionByName(
-        pairs.select(
-            F.col("b").alias("a"), F.col("a").alias("b"), F.col("w")
-        )
-    ).select(
+    pairs = _trade_weights(spark, sf_dir)
+    edges = undirected(pairs, "a", "b").select(
         "a", "b", F.expr("CAST(1000000 DIV w AS BIGINT)").alias("cost")
     )
     return harmonic_centrality_pivots(
@@ -3290,29 +3106,8 @@ def _score_oracle(k: int, rounds: int) -> str:
 def q264_strength_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     from striot_spark.functions.graph import k_core
 
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    pairs = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .groupBy(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                "a"
-            ),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                "b"
-            ),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    edges = pairs.unionByName(
-        pairs.select(
-            F.col("b").alias("a"), F.col("a").alias("b"), F.col("w")
-        )
-    )
+    pairs = _trade_weights(spark, sf_dir)
+    edges = undirected(pairs, "a", "b")
     return k_core(edges, k=60, rounds=3, src="a", dst="b", weight="w")
 
 
@@ -3356,9 +3151,13 @@ def _coreness_capped_oracle(rounds: int, cap: int) -> str:
     )
 
 
+# shared by q266 (batch) and q269 (stream), as is ``_part_coreness``
+_CORENESS_ORACLE = _coreness_oracle(rounds=3)
+
+
 @register(
     "q266_coreness",
-    _coreness_oracle(rounds=3),
+    _CORENESS_ORACLE,
     doc="per-node CORENESS via the h-index iteration "
     "(functions/graph.py:coreness, Lü et al. 2016): start from the "
     "degree, repeatedly replace each node's value with the H-index "
@@ -3376,21 +3175,23 @@ def _coreness_capped_oracle(rounds: int, cap: int) -> str:
     "just the row count)",
 )
 def q266_coreness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from striot_spark.functions.graph import coreness
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
-    pairs = same_key_pairs(li, "l_orderkey", "l_partkey", out_a="u", out_b="v")
-    edges = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    return coreness(edges, rounds=3, src="u", dst="v")
+    return _part_coreness(li, "l_orderkey", "l_partkey")
+
+
+def _part_coreness(lines: DataFrame, key: str, item: str) -> DataFrame:
+    """3-round coreness of the part co-purchase graph of ``lines``."""
+    from striot_spark.functions.graph import coreness
+
+    pairs = same_key_pairs(lines, key, item, out_a="u", out_b="v")
+    return coreness(undirected(pairs), rounds=3, src="u", dst="v")
 
 
 @register(
     "q267_sssp_stream_serve",
-    _sssp_oracle(rounds=3, source="c1", inv_scale=1_000_000),
+    _SSSP_ORACLE,
     doc="STREAMED shortest-path serve — the third leg of the "
     "stream->graph-analytics family (q245 reach sketch, q250 "
     "weighted PageRank, now distances): individual trade "
@@ -3404,29 +3205,9 @@ def q266_coreness(spark: SparkSession, sf_dir: str) -> DataFrame:
     "where the micro-batch boundaries land",
 )
 def q267_sssp_stream_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-
-    from striot_spark.functions.graph import sssp
-    from striot_spark.streaming import runtime as RT
-
     src = _stage_trade_observations(spark, sf_dir)
-    sdf = RT.file_stream(spark, src, max_files_per_trigger=1)
-    snap = RT.drain_snapshot(
-        RT.incremental_agg_sink,
-        sdf,
-        source_path=src,
-        key_cols=["a", "b"],
-        sum_cols=[],
-    ).select(
-        "a", "b", F.col("n_rows").alias("w")
-    )
-    edges = snap.unionByName(
-        snap.select(
-            F.col("b").alias("a"), F.col("a").alias("b"), F.col("w")
-        )
-    ).select(
-        "a", "b", F.expr("CAST(1000000 DIV w AS BIGINT)").alias("cost")
-    )
-    return sssp(edges, ["c1"], rounds=3, src="a", dst="b", cost="cost")
+    snap = _served_counts(spark, src, ["a", "b"])
+    return _trade_sssp(snap.select("a", "b", F.col("n_rows").alias("w")))
 
 
 def _betweenness_oracle(rounds: int, pivots: list, scale: int) -> str:
@@ -3518,27 +3299,8 @@ def q268_betweenness_pivots(
 ) -> DataFrame:
     from striot_spark.functions.graph import betweenness_pivots
 
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    pairs = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                "a"
-            ),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                "b"
-            ),
-        )
-        .distinct()
-    )
-    edges = pairs.unionByName(
-        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
+    pairs = _trade_observations(spark, sf_dir).distinct()
+    edges = undirected(pairs, "a", "b")
     return betweenness_pivots(
         edges, _Q254_PIVOTS, rounds=3, src="a", dst="b",
         scale=1_000_000,
@@ -3555,40 +3317,25 @@ def _stage_copurchase_observations(
     third-splits cut through a key's observations — the adversarial
     batching the q250/q267 serves use: the materialized key set must
     come out identical no matter where the micro-batch boundaries
-    land.
-
-    TEST-STAGING ONLY: the global single-partition ``row_number()`` below (a ``Window.orderBy`` with no partition key) is a deliberate O(n)-single-partition sort that exists to cut adversarial micro-batch boundaries for the serve tests at sf0.01 — it is fixture machinery, never a production path, and must not be copied into an operator (VERDICT r12).
+    land. Test staging only (``split_thirds``).
     """
-
-    from pyspark.sql import Window
-
-    from striot_spark.streaming.runtime import stage_ordered_files
+    from striot_spark.streaming.runtime import split_thirds, stage_ordered_files
 
     def write(out: str):
         li = load_table(spark, sf_dir, "lineitem").select(
             F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("p")
         )
-        n = li.count()
-        r = li.withColumn(
-            "rn", F.row_number().over(Window.orderBy("k", "p"))
+        stage_ordered_files(
+            split_thirds(li, ["k", "p"]), out, order_cols=["k", "p"]
         )
-        third = n // 3
-        chunks = [
-            r.filter(F.col("rn") <= third).drop("rn"),
-            r.filter(
-                (F.col("rn") > third) & (F.col("rn") <= 2 * third)
-            ).drop("rn"),
-            r.filter(F.col("rn") > 2 * third).drop("rn"),
-        ]
-        stage_ordered_files(chunks, out, order_cols=["k", "p"])
-        return chunks[0].schema
+        return li.schema
 
     return staged(sf_dir, "striot_q269_obs_", write)
 
 
 @register(
     "q269_coreness_stream_serve",
-    _coreness_oracle(rounds=3),
+    _CORENESS_ORACLE,
     doc="fourth stream->graph-analytics serve leg (after q245 reach, "
     "q250 weighted PageRank, q267 shortest paths — this one proves "
     "the DEGENERACY family rides the same tier): lineitem "
@@ -3605,24 +3352,9 @@ def _stage_copurchase_observations(
 def q269_coreness_stream_serve(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-
-    from striot_spark.functions.graph import coreness
-    from striot_spark.streaming import runtime as RT
-
     src = _stage_copurchase_observations(spark, sf_dir)
-    sdf = RT.file_stream(spark, src, max_files_per_trigger=1)
-    snap = RT.drain_snapshot(
-        RT.incremental_agg_sink,
-        sdf,
-        source_path=src,
-        key_cols=["k", "p"],
-        sum_cols=[],
-    ).select("k", "p")
-    pairs = same_key_pairs(snap, "k", "p", out_a="u", out_b="v")
-    edges = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    return coreness(edges, rounds=3, src="u", dst="v")
+    snap = _served_counts(spark, src, ["k", "p"])
+    return _part_coreness(snap.select("k", "p"), "k", "p")
 
 
 @register(
@@ -3651,9 +3383,7 @@ def q270_coreness_hub_capped(
         "l_orderkey", "l_partkey"
     )
     pairs = same_key_pairs(li, "l_orderkey", "l_partkey", out_a="u", out_b="v")
-    edges = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    edges = undirected(pairs)
     return coreness(edges, rounds=3, src="u", dst="v", max_degree=60)
 
 
@@ -3770,24 +3500,7 @@ def _hits_oracle(iterations: int, scale: int) -> str:
 def q277_hits_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     from striot_spark.functions.graph import hits
 
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    pairs = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                "src"
-            ),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                "dst"
-            ),
-        )
-        .distinct()
-    )
+    pairs = _trade_observations(spark, sf_dir, "src", "dst").distinct()
     return hits(pairs, iterations=2)
 
 
@@ -3904,9 +3617,7 @@ def q281_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_partkey"
     )
     pairs = same_key_pairs(li, "l_orderkey", "l_partkey", out_a="u", out_b="v")
-    both = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    both = undirected(pairs)
     deg = both.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
     )
@@ -4020,9 +3731,7 @@ def q285_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = track_persist(
         same_key_pairs(li, "l_orderkey", "l_partkey", out_a="a", out_b="b")
     )
-    both = edges.unionByName(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
+    both = undirected(edges, "a", "b")
     wedges = (
         both.groupBy(F.col("a").alias("n"))
         .agg(F.count(F.lit(1)).cast("long").alias("d"))
@@ -4099,27 +3808,8 @@ def _katz_oracle(rounds: int) -> str:
 def q287_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from striot_spark.functions.graph import katz_centrality
 
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    pairs = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                "a"
-            ),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                "b"
-            ),
-        )
-        .distinct()
-    )
-    edges = pairs.unionByName(
-        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
+    pairs = _trade_observations(spark, sf_dir).distinct()
+    edges = undirected(pairs, "a", "b")
     return katz_centrality(edges, rounds=3, src="a", dst="b")
 
 
@@ -4166,9 +3856,7 @@ def q291_avg_neighbor_degree(
         "l_orderkey", "l_partkey"
     )
     pairs = same_key_pairs(li, "l_orderkey", "l_partkey", out_a="u", out_b="v")
-    both = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    both = undirected(pairs)
     deg = both.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
     )

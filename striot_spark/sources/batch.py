@@ -137,7 +137,6 @@ def _set_session_confs(spark: SparkSession) -> None:
 #: schema: the reader trusts the memoized schema, so a column the new
 #: files no longer carry (renamed or dropped) reads back as silent
 #: NULLs, not an error.
-#: ``STRIOT_NO_SCHEMA_MEMO`` disables it (A/B hook).
 _SCHEMA_MEMO: dict[tuple[str, str], "object"] = {}
 
 
@@ -151,15 +150,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _ensure_package_shipped(spark)
     _set_session_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.environ.get("STRIOT_NO_SCHEMA_MEMO"):
-        df = spark.read.parquet(path)
-    else:
-        key = (os.path.abspath(sf_dir), name)
-        schema = _SCHEMA_MEMO.get(key)
-        if schema is None:
-            schema = spark.read.parquet(path).schema
-            _SCHEMA_MEMO[key] = schema
-        df = spark.read.schema(schema).parquet(path)
+    key = (os.path.abspath(sf_dir), name)
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        _SCHEMA_MEMO[key] = schema
+    df = spark.read.schema(schema).parquet(path)
     for col in _NANO_TS_COLS.get(name, ()):
         field = df.schema[col]
         if field.dataType.simpleString() == "bigint":

@@ -12,9 +12,14 @@ watermarks + late-data policy. The reference lets late events land in
 whichever window is still open; here lateness is explicit and bounded.
 
 The same Stream operators lower as follows in streaming mode:
-- filter/map/expand/merge: identical DataFrame ops (unbounded input);
-- chopTime/session windows: native ``window()`` / ``session_window()``
-  with watermark;
+- filter/map/expand/merge: identical DataFrame ops (unbounded input),
+  so a ``Stream`` over a streaming frame runs them unchanged;
+- chopTime: ``Stream.window_agg`` is the one method that dispatches on
+  ``isStreaming`` — a ``ChopTime`` maker over a streaming frame lowers
+  through ``window_agg_stream`` (native ``window()``, its default
+  watermark). Every other ``Stream`` method has only the batch
+  lowering; the stream forms below are called directly;
+- session windows: native ``session_window()`` with watermark;
 - scan/filterAcc (general), count-based windows (chop n / sliding n)
   and the positional zip join: one per-key body each, run by one
   driver, ``_keyed_stream`` (``applyInPandasWithState``). State lives
@@ -109,6 +114,31 @@ def stage_ordered_files(
         shutil.copyfile(src, dst)
         os.utime(dst, (t0 + 10 * i, t0 + 10 * i))
         shutil.rmtree(tmp)
+
+
+def split_thirds(df: DataFrame, order_cols: Sequence[str]) -> list[DataFrame]:
+    """Cut ``df`` into three contiguous ranges of its ``order_cols``
+    order — the first ``n // 3`` rows, the next ``n // 3``, the rest —
+    for ``stage_ordered_files``: a replay staged this way cuts its
+    micro-batch boundaries at known rows (through a key's duplicate
+    observations, or in an out-of-order file sequence).
+
+    TEST-STAGING ONLY: the global single-partition ``row_number()``
+    below (a ``Window.orderBy`` with no partition key) is a deliberate
+    O(n) single-partition sort that exists to cut adversarial
+    micro-batch boundaries for the replay queries and tests at sf0.01.
+    It is fixture machinery, never a production path, and must not be
+    copied into an operator."""
+    from pyspark.sql import Window
+
+    third = df.count() // 3
+    rn = F.col("__rn")
+    r = df.withColumn("__rn", F.row_number().over(Window.orderBy(*order_cols)))
+    return [
+        r.filter(rn <= third).drop("__rn"),
+        r.filter((rn > third) & (rn <= 2 * third)).drop("__rn"),
+        r.filter(rn > 2 * third).drop("__rn"),
+    ]
 
 
 def kafka_reader_options(
@@ -1799,10 +1829,10 @@ def fingerprint_dedup_stream(
 ) -> DataFrame:
     """Streaming near-exact dedup: keep the FIRST document per 60-bit
     SimHash fingerprint within the watermark horizon. The fingerprint
-    is the batch ``functions/dedup.py:simhash`` projection verbatim
-    (declarative token-hash bit votes — no Python, no shuffle), so the
-    only streaming state is the watermark-bounded fingerprint key set
-    of ``dedup_stream``.
+    is the batch one (``functions/dedup.py:simhash_bits`` over
+    ``token_hashes``: declarative token-hash bit votes — no Python, no
+    shuffle), so the only streaming state is the watermark-bounded
+    fingerprint key set of ``dedup_stream``.
 
     Granularity is fingerprint EQUALITY: exact duplicates and
     whitespace/token-order-insensitive near-exact ones collapse;
@@ -1812,36 +1842,12 @@ def fingerprint_dedup_stream(
     Docs with zero tokens have no fingerprint and pass through
     unconditionally (they cannot be near-dups of anything).
     """
-    hs = F.expr(
-        """
-        transform(
-          filter(split({text}, ' '), t -> t <> ''),
-          t -> CAST(conv(substring(md5(encode(t, 'UTF-8')), 1, 15),
-                         16, 10) AS BIGINT))
-        """.format(text=text_col)
-    )
-    fingerprint = F.expr(
-        """
-        aggregate(
-          zip_with(
-            aggregate(
-              __hs,
-              array_repeat(CAST(0 AS BIGINT), 60),
-              (acc, h) -> zip_with(
-                  acc, sequence(0, 59),
-                  (a, b) -> a + CASE WHEN (h >> b) & 1 = 1
-                                 THEN CAST(1 AS BIGINT)
-                                 ELSE CAST(-1 AS BIGINT) END)),
-            sequence(0, 59),
-            (v, b) -> CASE WHEN v > 0 THEN CAST(1 AS BIGINT) << b
-                           ELSE CAST(0 AS BIGINT) END),
-          CAST(0 AS BIGINT), (acc, x) -> acc + x)
-        """
-    )
+    from striot_spark.functions.dedup import simhash_bits, token_hashes
+
     with_fp = (
-        sdf.withColumn("__hs", hs)
+        sdf.withColumn("__hs", token_hashes(text_col))
         .withColumn(
-            "__fp", F.when(F.size("__hs") > 0, fingerprint)
+            "__fp", F.when(F.size("__hs") > 0, simhash_bits("__hs"))
         )
         .drop("__hs")
     )

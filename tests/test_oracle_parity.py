@@ -30,3 +30,18 @@ def test_no_rows_only_entries_remain():
     rows-only registration must be a deliberate, documented decision
     (update this test alongside)."""
     assert ROWS_ONLY == []
+
+
+def test_twins_share_one_oracle_string():
+    """A stream twin registers its batch twin's oracle constant instead
+    of a second copy of the SQL: any two entries whose
+    whitespace-normalised oracle SQL is equal hold the same string
+    object, so the two copies cannot drift."""
+    owner: dict[str, str] = {}
+    copies = []
+    for name in ORACLE_QUERIES:
+        sql = REGISTRY[name].oracle
+        first = owner.setdefault(" ".join(sql.split()), name)
+        if REGISTRY[first].oracle is not sql:
+            copies.append(f"{name} repeats the oracle of {first}")
+    assert copies == []

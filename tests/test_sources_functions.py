@@ -300,20 +300,19 @@ def test_jsonl_round_trip_with_schema(spark, sf_dir, tmp_path):
 def test_load_table_schema_memo_matches_inference(spark, sf_dir):
     """The r17 schema memo is METADATA-only: the memoized-path frame
     must carry the identical schema (incl. the nanos->timestamp
-    rebuild) and identical rows as a fresh-inference read, and the
-    memo must be keyed per (dir, table) — never rows or plans."""
+    rebuild) and identical rows as a load that infers the schema again
+    (made after the memo is cleared), and the memo must be keyed per
+    (dir, table) — never rows or plans."""
     import os
 
     from striot_spark.sources import batch as B
 
     B._SCHEMA_MEMO.clear()
+    B.load_table(spark, sf_dir, "events")
     memo_df = B.load_table(spark, sf_dir, "events")
     assert (os.path.abspath(sf_dir), "events") in B._SCHEMA_MEMO
-    os.environ["STRIOT_NO_SCHEMA_MEMO"] = "1"
-    try:
-        fresh_df = B.load_table(spark, sf_dir, "events")
-    finally:
-        os.environ.pop("STRIOT_NO_SCHEMA_MEMO", None)
+    B._SCHEMA_MEMO.clear()
+    fresh_df = B.load_table(spark, sf_dir, "events")
     assert memo_df.schema == fresh_df.schema
     a = memo_df.orderBy("event_id").limit(5).collect()
     b = fresh_df.orderBy("event_id").limit(5).collect()

@@ -5,8 +5,9 @@
 
 Times each named query with the noop sink inside the bench session,
 interleaving queries across reps (A B A B ...) so box drift hits every
-arm equally; prints per-rep and min/median per query. clearCache()
-between runs; session, warm-up and calib from bench.py.
+arm equally; prints per-rep and min/median per query. Session,
+warm-up, the timed run (clearCache, then the noop write) and calib
+come from bench.py.
 """
 
 from __future__ import annotations
@@ -14,7 +15,6 @@ from __future__ import annotations
 import argparse
 import statistics
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -35,7 +35,7 @@ def main() -> int:
     args = ap.parse_args()
 
     import __spark_entry__ as e
-    from bench import calib_sec, open_session
+    from bench import calib_sec, open_session, timed_run
 
     extra = dict(kv.split("=", 1) for kv in args.conf)
     spark = open_session(args.sf, "qtime", extra or None)
@@ -53,11 +53,8 @@ def main() -> int:
                 else:
                     spark.conf.set(k, v)
         for n in args.names:
-            spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"{n} rep{rep} arm{arm}")
-            t0 = time.perf_counter()
-            qs[n](spark, args.sf).write.mode("overwrite").format("noop").save()
-            dt = time.perf_counter() - t0
+            dt = timed_run(spark, qs[n], args.sf)
             rows.setdefault((n, arm), []).append(dt)
             print(f"rep{rep}[{arm}] {n}: {dt:.3f}s", flush=True)
     if ab:
