@@ -111,13 +111,16 @@ def dedup_groups(
     its lineage each round; k-means sidesteps the same trap by inlining
     centroids as literals, but labels here are data-sized.
 
-    Size gate (same philosophy as broadcast planning and the numbering
-    gate): a near-dup pair graph is usually minute next to its corpus —
-    up to ``driver_edge_threshold`` PAIRS (16 bytes each; 1M default ≈
-    16 MB) the one-directional pair list is collected and union-find
-    runs on the driver in milliseconds, replacing ~2 cluster jobs per
-    round with one collect. The distributed propagation path handles
-    anything larger and is what the threshold=0 tests pin.
+    Two paths, chosen by the pair count (same philosophy as broadcast
+    planning and the numbering gate): a near-dup pair graph is usually
+    minute next to its corpus — up to ``driver_edge_threshold`` PAIRS
+    (16 bytes each; 1M default ≈ 16 MB) the one-directional pair list
+    is collected and union-find runs on the driver in milliseconds,
+    replacing ~2 cluster jobs per round with one collect. The
+    distributed min-label propagation handles anything larger and is
+    what the threshold=0 tests pin. It stays rather than deferring to
+    ``dedup_groups_logrounds``: on q74's near-dup graph the star
+    contraction measured 1.75x slower (PERF.md §50).
     """
     # one-directional pair list materializes once; union-find needs no
     # reversed edges, so the driver path collects HALF the rows and the
@@ -558,6 +561,53 @@ def scrub_duplicated_spans(
     )
 
 
+def _hash_table(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int, with_sets: bool
+) -> DataFrame:
+    """The one persisted MinHash work table: ``(id, [sset,] __mh_base)``
+    — the doc's distinct shingle set (only ``with_sets``, for the
+    exact-Jaccard verify) and its md5 base-hash array, restricted to
+    docs that have shingles (under ``shingle_n`` tokens there is no
+    signature and nothing to pair).
+
+    The persist is a materialization barrier: Catalyst's
+    CollapseProject would otherwise inline the base array into every
+    signature expression, re-running the md5 pass k times (measured 6x
+    cost at k=6); behind it md5 runs once and the k cheap ``array_min``
+    transforms read the cached array. The shingle expression evaluates
+    twice per row (cheap ``zip_with``); the dominant md5 transform runs
+    once. The size filter sits ABOVE the barrier so its predicate reads
+    the cached array instead of being pushed into (and duplicating) the
+    md5 projection."""
+    sh = shingles(F.col(text_col), shingle_n)
+    cols = [F.col(id_col)]
+    if with_sets:
+        cols.append(F.array_distinct(sh).alias("sset"))
+    cols.append(
+        F.transform(sh, lambda s: md5_hash64(s) % MERSENNE_P).alias("__mh_base")
+    )
+    return track_persist(scatter(df).select(*cols)).filter(
+        F.size("__mh_base") > 0
+    )
+
+
+def _signatures(work: DataFrame, id_col: str, num_hashes: int) -> DataFrame:
+    """``(id, mh0..mh{k-1})``: each signature is ``array_min`` of one
+    affine map of ``MINHASH_COEFFS`` over the work table's base array."""
+    return work.select(
+        F.col(id_col),
+        *[
+            F.array_min(
+                F.transform(
+                    F.col("__mh_base"),
+                    lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE_P,
+                )
+            ).alias(f"mh{i}")
+            for i, (a, b) in enumerate(MINHASH_COEFFS[:num_hashes])
+        ],
+    )
+
+
 def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str, num_hashes: int = 4, shingle_n: int = 2
 ) -> DataFrame:
@@ -567,35 +617,11 @@ def minhash_signatures(
     signature is ``array_min(transform(...))`` over it — base hash
     (md5-derived, engine-reproducible) then the affine family. A 100 TB
     signature pass is one parquet scan with ZERO shuffles (the earlier
-    explode+groupBy form shuffled every shingle).
+    explode+groupBy form shuffled every shingle). The persisted table
+    carries the base array only.
     """
-    coeffs = MINHASH_COEFFS[:num_hashes]
-    base = F.transform(
-        shingles(F.col(text_col), shingle_n),
-        lambda s: md5_hash64(s) % MERSENNE_P,
-    )
-    # Persist the base-hash array: Catalyst's CollapseProject would
-    # otherwise inline it into every signature expression, re-running
-    # the md5 pass k times (measured 6x cost at k=6). The cache is a
-    # materialization barrier, so md5 runs once and the k cheap
-    # array_min transforms read the cached array.
-    # docs with no shingles (under shingle_n tokens) have no signature;
-    # the filter sits ABOVE the persist barrier so its predicate reads
-    # the cached array instead of being pushed into (and duplicating)
-    # the md5 projection
-    work = track_persist(
-        scatter(df).select(F.col(id_col), base.alias("__mh_base"))
-    ).filter(F.size("__mh_base") > 0)
-    sig_cols = [
-        F.array_min(
-            F.transform(
-                F.col("__mh_base"),
-                lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE_P,
-            )
-        ).alias(f"mh{i}")
-        for i, (a, b) in enumerate(coeffs)
-    ]
-    return work.select(F.col(id_col), *sig_cols)
+    work = _hash_table(df, id_col, text_col, shingle_n, with_sets=False)
+    return _signatures(work, id_col, num_hashes)
 
 
 def _banding_rows_per_band(num_hashes: int, bands: int) -> int:
@@ -618,6 +644,109 @@ def _banding_rows_per_band(num_hashes: int, bands: int) -> int:
     return num_hashes // bands
 
 
+def _band_rows(
+    sigs: DataFrame, id_col: str, num_hashes: int, bands: int,
+    keep_mh: bool = False,
+) -> DataFrame:
+    """``(id, [mh0..,] band, sig)``: one row per (doc, band), ``sig`` the
+    band's minhashes joined by ``_``. ``keep_mh`` carries the signature
+    columns along for the agreement prefilter of ``_band_pairs``."""
+    rows_per_band = _banding_rows_per_band(num_hashes, bands)
+    mh_names = [f"mh{i}" for i in range(num_hashes)] if keep_mh else []
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.concat_ws(
+                "_",
+                *[
+                    F.col(f"mh{b * rows_per_band + r}").cast("string")
+                    for r in range(rows_per_band)
+                ],
+            ).alias("sig"),
+        )
+        for b in range(bands)
+    ]
+    return sigs.select(
+        F.col(id_col), *mh_names, F.explode(F.array(*band_cols)).alias("bs")
+    ).select(id_col, *mh_names, "bs.band", "bs.sig")
+
+
+def _band_pairs(
+    a: DataFrame, b: DataFrame, id_col: str, num_hashes: int,
+    min_sig_agreement: float, ids: tuple[str, str], ordered: bool,
+) -> DataFrame:
+    """Candidate pairs of two ``keep_mh`` band tables: docs sharing a
+    (band, sig) bucket — an equi-join, never all-pairs — whose minhash
+    Jaccard *estimate* (the fraction of agreeing signature components,
+    an unbiased estimator) reaches ``min_sig_agreement``. Banding with
+    short bands is recall-friendly but false-positive-heavy; this
+    prefilter prunes most FPs with column compares on longs before the
+    expensive shingle-set verify. ``ordered`` keeps only a.id < b.id
+    (a self-join's unordered pairs, each once). Output ``ids``,
+    distinct."""
+    a, b = a.alias("a"), b.alias("b")
+    on = (F.col("a.band") == F.col("b.band")) & (F.col("a.sig") == F.col("b.sig"))
+    if ordered:
+        on = on & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    agree = sum(
+        (F.col(f"a.mh{i}") == F.col(f"b.mh{i}")).cast("int")
+        for i in range(num_hashes)
+    ) / F.lit(float(num_hashes))
+    return (
+        a.join(b, on)
+        .filter(agree >= F.lit(min_sig_agreement))
+        .select(
+            F.col(f"a.{id_col}").alias(ids[0]),
+            F.col(f"b.{id_col}").alias(ids[1]),
+        )
+        .distinct()
+    )
+
+
+def _jaccard_verify(
+    cands: DataFrame, a: DataFrame, b: DataFrame, id_col: str,
+    ids: tuple[str, str], threshold: float, broadcast_b: bool = False,
+) -> DataFrame:
+    """Exact shingle-set Jaccard of candidate pairs ``ids`` against the
+    ``(id_col, sset)`` tables ``a`` and ``b``; keeps ``>= threshold``.
+    Only candidates are scored — the sets join by doc id, bodies never
+    move. The candidate side is scattered: AQE coalesces the small
+    distinct shuffle to one partition, which would serialize the
+    set-intersect work."""
+    id_a, id_b = ids
+    sets_b = b.select(F.col(id_col).alias(id_b), F.col("sset").alias("set_b"))
+    if broadcast_b:
+        sets_b = F.broadcast(sets_b)
+    return (
+        scatter(cands)
+        .join(a.select(F.col(id_col).alias(id_a), F.col("sset").alias("set_a")), id_a)
+        .join(sets_b, id_b)
+        .withColumn(
+            "jaccard",
+            F.size(F.array_intersect("set_a", "set_b"))
+            / F.size(F.array_union("set_a", "set_b")),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select(id_a, id_b, "jaccard")
+    )
+
+
+def _lsh_self_pairs(
+    work: DataFrame, id_col: str, num_hashes: int, bands: int,
+    min_sig_agreement: float,
+) -> DataFrame:
+    """The candidate stage over one work table: its band rows
+    self-joined into ``(id_a, id_b)``, id_a < id_b."""
+    banded = _band_rows(
+        _signatures(work, id_col, num_hashes), id_col, num_hashes, bands,
+        keep_mh=True,
+    )
+    return _band_pairs(
+        banded, banded, id_col, num_hashes, min_sig_agreement,
+        ("id_a", "id_b"), ordered=True,
+    )
+
+
 def lsh_candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -629,58 +758,14 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """LSH banding: docs sharing any band signature become candidate
     pairs. Join key = (band_id, concatenated in-band minhashes); output
-    (id_a, id_b) with id_a < id_b, distinct.
-
-    Candidates are pre-filtered by the minhash Jaccard *estimate* (the
-    fraction of agreeing signature components — an unbiased estimator)
-    before any exact verification: banding with short bands is
-    recall-friendly but false-positive-heavy, and this refinement prunes
-    most FPs with pure column comparisons on longs, long before the
-    expensive shingle-set intersection runs.
+    (id_a, id_b) with id_a < id_b, distinct, pre-filtered by the
+    signature-agreement estimate (``_band_pairs``). The md5 base table
+    is persisted once: a self-join recomputes its lineage on BOTH
+    sides, and at 100 TB it would be written to storage before
+    candidate generation — persist is the in-session analogue.
     """
-    rows_per_band = _banding_rows_per_band(num_hashes, bands)
-    # Signatures are tiny (id + k longs) but expensive to derive (md5
-    # per shingle); a self-join recomputes its lineage on BOTH sides, so
-    # materialize once. At 100 TB the signature table would be written
-    # to storage before candidate generation — persist is the in-session
-    # analogue.
-    sigs = track_persist(
-        minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    )
-    band_cols = []
-    for b in range(bands):
-        members = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws("_", *[m.cast("string") for m in members]).alias("sig"),
-            )
-        )
-    mh_names = [f"mh{i}" for i in range(num_hashes)]
-    exploded = sigs.select(
-        F.col(id_col), *mh_names, F.explode(F.array(*band_cols)).alias("bs")
-    ).select(id_col, *mh_names, "bs.band", "bs.sig")
-    left = exploded.alias("a")
-    right = exploded.alias("b")
-    agree = sum(
-        (F.col(f"a.{m}") == F.col(f"b.{m}")).cast("int") for m in mh_names
-    ) / F.lit(float(num_hashes))
-    return (
-        left.join(
-            right,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            agree.alias("est_jaccard"),
-        )
-        .filter(F.col("est_jaccard") >= min_sig_agreement)
-        .drop("est_jaccard")
-        .distinct()
-    )
+    work = _hash_table(df, id_col, text_col, shingle_n, with_sets=False)
+    return _lsh_self_pairs(work, id_col, num_hashes, bands, min_sig_agreement)
 
 
 def lsh_bands(
@@ -692,30 +777,13 @@ def lsh_bands(
     shingle_n: int = 2,
 ) -> DataFrame:
     """Band-membership table (id, band, sig): each document's LSH band
-    signatures as rows — the shared candidate-generation key of the
-    banding family (``lsh_candidate_pairs`` inlines the same
-    construction to keep its per-signature agreement columns). One
+    signatures as rows — the same band construction as the pair
+    family's candidate stage, without its agreement columns. One
     signature scan (zero-shuffle projection, md5 base persisted once
     inside ``minhash_signatures``) + an in-row band explode; docs too
     short to shingle emit no rows."""
-    rows_per_band = _banding_rows_per_band(num_hashes, bands)
     sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    band_cols = []
-    for b in range(bands):
-        members = [
-            F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)
-        ]
-        band_cols.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "_", *[m.cast("string") for m in members]
-                ).alias("sig"),
-            )
-        )
-    return sigs.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bs")
-    ).select(id_col, "bs.band", "bs.sig")
+    return _band_rows(sigs, id_col, num_hashes, bands)
 
 
 def near_dup_filter(
@@ -882,30 +950,16 @@ def ngram_jaccard_pairs(
     """Verify LSH candidates with exact shingle-set Jaccard. Only
     candidate pairs are scored — the shingle arrays join by doc id."""
     # computed once, joined twice (id_a and id_b sides) → materialize;
-    # scatter() both sides: the set build is CPU-heavy per row, and AQE
-    # coalesces the small candidate shuffle to one partition, which
-    # would serialize the intersect/union work
+    # scattered: the set build is CPU-heavy per row
     sets_ = track_persist(
         scatter(df).select(
-            F.col(id_col).alias("sid"),
-            F.array_distinct(shingles(F.col(text_col), shingle_n)).alias(
-                "sset"
-            ),
+            F.col(id_col),
+            F.array_distinct(shingles(F.col(text_col), shingle_n)).alias("sset"),
         )
     )
-    candidates = scatter(candidates)
-    out = (
-        candidates.join(sets_.withColumnRenamed("sid", "id_a").withColumnRenamed("sset", "set_a"), "id_a")
-        .join(sets_.withColumnRenamed("sid", "id_b").withColumnRenamed("sset", "set_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("set_a", "set_b"))
-            / F.size(F.array_union("set_a", "set_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _jaccard_verify(
+        candidates, sets_, sets_, id_col, ("id_a", "id_b"), threshold
     )
-    return out
 
 
 def _auto_shingle_n(
@@ -1212,89 +1266,18 @@ def lsh_near_dup_pairs(
 ) -> DataFrame:
     """Fused MinHash-LSH near-dup pipeline: candidates + exact verify.
 
-    Same semantics as ``ngram_jaccard_pairs(lsh_candidate_pairs(...))``
-    but the document corpus is scanned ONCE: a single persisted work
-    table carries both the md5 base-hash array (for signatures) and the
-    distinct shingle set (for the exact-Jaccard verify). The separate
-    functions each scan + shingle + md5 the corpus independently — at
-    100 TB that's the difference between one and two full passes over
-    the document bodies. Downstream joins move only (id, longs) /
-    (id, shingle set) — never the bodies.
+    The candidate stage of ``lsh_candidate_pairs`` followed by the
+    verify stage of ``ngram_jaccard_pairs``, but over ONE persisted
+    work table carrying both the md5 base-hash array (for signatures)
+    and the distinct shingle set (for the verify), so the document
+    corpus is scanned once. The separate functions each scan + shingle
+    the corpus — at 100 TB that's the difference between one and two
+    full passes over the document bodies. Downstream joins move only
+    (id, longs) / (id, shingle set) — never the bodies.
     """
-    coeffs = MINHASH_COEFFS[:num_hashes]
-    rows_per_band = _banding_rows_per_band(num_hashes, bands)
-    sh = shingles(F.col(text_col), shingle_n)
-    # one pass: shingle expr evaluates twice per row (cheap zip_with)
-    # but the dominant md5 transform runs exactly once; persist is the
-    # CollapseProject barrier so the k array_min signature projections
-    # read the cached base array instead of inlining the md5 pass.
-    work = track_persist(
-        scatter(df).select(
-            F.col(id_col),
-            F.array_distinct(sh).alias("sset"),
-            F.transform(sh, lambda s: md5_hash64(s) % MERSENNE_P).alias(
-                "__mh_base"
-            ),
-        )
-        # above the barrier: shingle-less docs can't pair (and the
-        # predicate must not be pushed into the md5 projection)
-    ).filter(F.size("__mh_base") > 0)
-    sig_cols = [
-        F.array_min(
-            F.transform(
-                F.col("__mh_base"),
-                lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE_P,
-            )
-        ).alias(f"mh{i}")
-        for i, (a, b) in enumerate(coeffs)
-    ]
-    sigs = work.select(F.col(id_col), *sig_cols)
-    band_cols = []
-    for b in range(bands):
-        members = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws("_", *[m.cast("string") for m in members]).alias("sig"),
-            )
-        )
-    mh_names = [f"mh{i}" for i in range(num_hashes)]
-    exploded = sigs.select(
-        F.col(id_col), *mh_names, F.explode(F.array(*band_cols)).alias("bs")
-    ).select(id_col, *mh_names, "bs.band", "bs.sig")
-    agree = sum(
-        (F.col(f"a.{m}") == F.col(f"b.{m}")).cast("int") for m in mh_names
-    ) / F.lit(float(num_hashes))
-    cands = (
-        exploded.alias("a")
-        .join(
-            exploded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .filter(agree >= F.lit(min_sig_agreement))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-    sets_ = work.select(F.col(id_col).alias("sid"), "sset")
-    # scatter the candidate side: AQE coalesces the tiny distinct
-    # shuffle to 1 partition, which would serialize the set-intersect
-    return (
-        scatter(cands)
-        .join(sets_.withColumnRenamed("sid", "id_a").withColumnRenamed("sset", "set_a"), "id_a")
-        .join(sets_.withColumnRenamed("sid", "id_b").withColumnRenamed("sset", "set_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("set_a", "set_b"))
-            / F.size(F.array_union("set_a", "set_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    work = _hash_table(df, id_col, text_col, shingle_n, with_sets=True)
+    cands = _lsh_self_pairs(work, id_col, num_hashes, bands, min_sig_agreement)
+    return _jaccard_verify(cands, work, work, id_col, ("id_a", "id_b"), threshold)
 
 
 def cross_corpus_near_dup_pairs(
@@ -1316,7 +1299,7 @@ def cross_corpus_near_dup_pairs(
     near-dup train/eval overlap is the other published decontamination
     criterion alongside exact n-gram collision).
 
-    Same LSH geometry as ``lsh_near_dup_pairs`` (minhash signatures →
+    The stages of ``lsh_near_dup_pairs`` (minhash signatures →
     band-bucket equi-join → signature-agreement prefilter → exact
     shingle-Jaccard verify), but the band join runs BETWEEN the corpora,
     never within one: no train-train or eval-eval pair is ever
@@ -1333,51 +1316,18 @@ def cross_corpus_near_dup_pairs(
 
     Returns (train_id, eval_id, jaccard) with jaccard >= ``threshold``.
     """
-    coeffs = MINHASH_COEFFS[:num_hashes]
-    rows_per_band = _banding_rows_per_band(num_hashes, bands)
-    mh_names = [f"mh{i}" for i in range(num_hashes)]
-
-    def work_table(df: DataFrame) -> DataFrame:
-        sh = shingles(F.col(text_col), shingle_n)
-        return track_persist(
-            scatter(df).select(
-                F.col(id_col),
-                F.array_distinct(sh).alias("sset"),
-                F.transform(sh, lambda s: md5_hash64(s) % MERSENNE_P).alias(
-                    "__mh_base"
-                ),
-            )
-        ).filter(F.size("__mh_base") > 0)
-
-    def banded(work: DataFrame) -> DataFrame:
-        sig_cols = [
-            F.array_min(
-                F.transform(
-                    F.col("__mh_base"),
-                    lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE_P,
-                )
-            ).alias(f"mh{i}")
-            for i, (a, b) in enumerate(coeffs)
-        ]
-        sigs = work.select(F.col(id_col), *sig_cols)
-        band_cols = []
-        for b in range(bands):
-            members = [
-                F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)
-            ]
-            band_cols.append(
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.concat_ws(
-                        "_", *[m.cast("string") for m in members]
-                    ).alias("sig"),
-                )
-            )
-        return sigs.select(
-            F.col(id_col), *mh_names, F.explode(F.array(*band_cols)).alias("bs")
-        ).select(id_col, *mh_names, "bs.band", "bs.sig")
-
-    tw, ew = work_table(train), work_table(eval_df)
+    ids = ("train_id", "eval_id")
+    tw, ew = (
+        _hash_table(d, id_col, text_col, shingle_n, with_sets=True)
+        for d in (train, eval_df)
+    )
+    tb, eb = (
+        _band_rows(
+            _signatures(w, id_col, num_hashes), id_col, num_hashes, bands,
+            keep_mh=True,
+        )
+        for w in (tw, ew)
+    )
     # materialize both caches before the joins consume them twice
     # (band probe + verify): without the force, concurrent subtree
     # execution inside the one action could shingle+md5 a side twice
@@ -1385,45 +1335,13 @@ def cross_corpus_near_dup_pairs(
     # prefix_filter_jaccard_pairs buys with its count()
     tw.count()
     ew.count()
-    eb = banded(ew)
-    e_sets = ew.select(
-        F.col(id_col).alias("eval_id"), F.col("sset").alias("set_b")
-    )
     if broadcast_eval:
         eb = F.broadcast(eb)
-        e_sets = F.broadcast(e_sets)
-    tb = banded(tw).alias("a")
-    eb = eb.alias("b")
-    agree = sum(
-        (F.col(f"a.{m}") == F.col(f"b.{m}")).cast("int") for m in mh_names
-    ) / F.lit(float(num_hashes))
-    cands = (
-        tb.join(
-            eb,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig")),
-        )
-        .filter(agree >= F.lit(min_sig_agreement))
-        .select(
-            F.col(f"a.{id_col}").alias("train_id"),
-            F.col(f"b.{id_col}").alias("eval_id"),
-        )
-        .distinct()
+    cands = _band_pairs(
+        tb, eb, id_col, num_hashes, min_sig_agreement, ids, ordered=False
     )
-    t_sets = tw.select(
-        F.col(id_col).alias("train_id"), F.col("sset").alias("set_a")
-    )
-    return (
-        scatter(cands)
-        .join(t_sets, "train_id")
-        .join(e_sets, "eval_id")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("set_a", "set_b"))
-            / F.size(F.array_union("set_a", "set_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("train_id", "eval_id", "jaccard")
+    return _jaccard_verify(
+        cands, tw, ew, id_col, ids, threshold, broadcast_b=broadcast_eval
     )
 
 

@@ -116,20 +116,31 @@ def q24_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.doc_fingerprint(docs, "doc_id", "text")
 
 
-def _minhash_sql(num_hashes: int = 4) -> str:
-    base = f"{H64.format(x='shingle')} % 2147483647"
-    mins = ", ".join(
-        f"min(({a} * ({base}) + {b}) % 2147483647) AS mh{i}"
-        for i, (a, b) in enumerate(D.MINHASH_COEFFS[:num_hashes])
-    )
-    return f"""
+_SHINGLE_CTES = """
     WITH toks AS (
         SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
         FROM documents),
     idx AS (
         SELECT doc_id, tk, unnest(range(1, len(tk))) AS i FROM toks),
     sh AS (
-        SELECT doc_id, tk[i] || ' ' || tk[i + 1] AS shingle FROM idx)
+        SELECT doc_id, tk[i] || ' ' || tk[i + 1] AS shingle FROM idx)"""
+
+
+_MH_BASE = f"{H64.format(x='shingle')} % {D.MERSENNE_P}"
+
+
+def _minhash_mins(h: str, num_hashes: int) -> str:
+    """The MinHash signature aggregates over base-hash expression ``h``
+    (``functions/dedup.py:_signatures``)."""
+    return ", ".join(
+        f"min(({a} * {h} + {b}) % {D.MERSENNE_P}) AS mh{i}"
+        for i, (a, b) in enumerate(D.MINHASH_COEFFS[:num_hashes])
+    )
+
+
+def _minhash_sql(num_hashes: int = 4) -> str:
+    mins = _minhash_mins(f"({_MH_BASE})", num_hashes)
+    return f"""{_SHINGLE_CTES}
     SELECT doc_id, {mins} FROM sh GROUP BY doc_id
     """
 
@@ -568,58 +579,51 @@ def q77_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_near_dup_sql() -> str:
-    """DuckDB oracle for the full MinHash-LSH near-dup pipeline:
-    bigram shingles → 6 md5-derived minhashes → 3 bands of 2 →
-    band-bucket join → signature-agreement prefilter (>= 0.5) →
-    exact shingle-set Jaccard verify (>= 0.7). Mirrors
-    functions/dedup.py:lsh_candidate_pairs + ngram_jaccard_pairs."""
-    from striot_spark.functions.dedup import MERSENNE_P, MINHASH_COEFFS
-
-    p = MERSENNE_P
-    mins = ", ".join(
-        f"min(({a} * h + {b}) % {p}) AS mh{i}"
-        for i, (a, b) in enumerate(MINHASH_COEFFS)
-    )
+def _lsh_near_dup_sql(split_mod: int | None = None) -> str:
+    """DuckDB oracle for the MinHash-LSH near-dup pipeline: bigram
+    shingles → 6 md5-derived minhashes → 3 bands of 2 → band-bucket
+    join → signature-agreement prefilter (>= 0.5) → exact shingle-set
+    Jaccard verify (>= 0.7). Mirrors functions/dedup.py:
+    lsh_near_dup_pairs. With ``split_mod`` it is the cross-corpus form
+    (``cross_corpus_near_dup_pairs``): candidates pair a train doc
+    (``doc_id % split_mod <> 0``) with an eval doc (``= 0``), never two
+    docs of the same side, and no id order is imposed."""
+    if split_mod is None:
+        id_a, id_b, on, where = "id_a", "id_b", " AND a.doc_id < b.doc_id", ""
+    else:
+        id_a, id_b, on = "train_id", "eval_id", ""
+        where = f"a.doc_id % {split_mod} <> 0 AND b.doc_id % {split_mod} = 0 AND "
     band_case = (
         "CASE band WHEN 0 THEN mh0::VARCHAR || '_' || mh1::VARCHAR "
         "WHEN 1 THEN mh2::VARCHAR || '_' || mh3::VARCHAR "
         "ELSE mh4::VARCHAR || '_' || mh5::VARCHAR END"
     )
     agree = " + ".join(f"(a.mh{i} = b.mh{i})::INT" for i in range(6))
-    return f"""
-    WITH toks AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-        FROM documents),
-    idx AS (
-        SELECT doc_id, tk, unnest(range(1, len(tk))) AS i FROM toks),
-    sh AS (
-        SELECT doc_id, tk[i] || ' ' || tk[i + 1] AS shingle FROM idx),
+    return f"""{_SHINGLE_CTES},
     hb AS (
-        SELECT doc_id, shingle,
-               ('0x' || substr(md5(shingle), 1, 15))::BIGINT % {p} AS h
+        SELECT doc_id, shingle, {_MH_BASE} AS h
         FROM sh),
     sigs AS (
-        SELECT doc_id, {mins} FROM hb GROUP BY doc_id),
+        SELECT doc_id, {_minhash_mins("h", 6)} FROM hb GROUP BY doc_id),
     banded AS (
         SELECT doc_id, mh0, mh1, mh2, mh3, mh4, mh5, band,
                {band_case} AS sig
         FROM sigs, range(0, 3) r(band)),
     cands AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        SELECT DISTINCT a.doc_id AS {id_a}, b.doc_id AS {id_b}
         FROM banded a JOIN banded b
-          ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-        WHERE ({agree}) / 6.0 >= 0.5),
+          ON a.band = b.band AND a.sig = b.sig{on}
+        WHERE {where}({agree}) / 6.0 >= 0.5),
     sets_ AS (
         SELECT doc_id, list_distinct(list(shingle)) AS sset
         FROM sh GROUP BY doc_id)
-    SELECT id_a, id_b, jaccard FROM (
-        SELECT c.id_a, c.id_b,
+    SELECT {id_a}, {id_b}, jaccard FROM (
+        SELECT c.{id_a}, c.{id_b},
                len(list_intersect(sa.sset, sb.sset))
                / len(list_distinct(list_concat(sa.sset, sb.sset))) AS jaccard
         FROM cands c
-        JOIN sets_ sa ON sa.doc_id = c.id_a
-        JOIN sets_ sb ON sb.doc_id = c.id_b) t
+        JOIN sets_ sa ON sa.doc_id = c.{id_a}
+        JOIN sets_ sb ON sb.doc_id = c.{id_b}) t
     WHERE jaccard >= 0.7
     """
 
@@ -703,67 +707,9 @@ def q69_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.contamination_check(train, eval_df, "doc_id", "text", ngram_n=5)
 
 
-def _cross_corpus_near_dup_sql(split_mod: int = 20) -> str:
-    """DuckDB oracle for the cross-corpus MinHash-LSH near-dup join:
-    identical hash machinery to ``_lsh_near_dup_sql`` (bigram shingles →
-    6 md5-derived minhashes → 3 bands of 2 → agreement >= 0.5 → exact
-    Jaccard >= 0.7), but candidates pair a train doc
-    (``doc_id % {split_mod} <> 0``) with an eval doc (``= 0``), never
-    two docs of the same side."""
-    from striot_spark.functions.dedup import MERSENNE_P, MINHASH_COEFFS
-
-    p = MERSENNE_P
-    mins = ", ".join(
-        f"min(({a} * h + {b}) % {p}) AS mh{i}"
-        for i, (a, b) in enumerate(MINHASH_COEFFS)
-    )
-    band_case = (
-        "CASE band WHEN 0 THEN mh0::VARCHAR || '_' || mh1::VARCHAR "
-        "WHEN 1 THEN mh2::VARCHAR || '_' || mh3::VARCHAR "
-        "ELSE mh4::VARCHAR || '_' || mh5::VARCHAR END"
-    )
-    agree = " + ".join(f"(a.mh{i} = b.mh{i})::INT" for i in range(6))
-    return f"""
-    WITH toks AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
-        FROM documents),
-    idx AS (
-        SELECT doc_id, tk, unnest(range(1, len(tk))) AS i FROM toks),
-    sh AS (
-        SELECT doc_id, tk[i] || ' ' || tk[i + 1] AS shingle FROM idx),
-    hb AS (
-        SELECT doc_id, shingle,
-               ('0x' || substr(md5(shingle), 1, 15))::BIGINT % {p} AS h
-        FROM sh),
-    sigs AS (
-        SELECT doc_id, {mins} FROM hb GROUP BY doc_id),
-    banded AS (
-        SELECT doc_id, mh0, mh1, mh2, mh3, mh4, mh5, band,
-               {band_case} AS sig
-        FROM sigs, range(0, 3) r(band)),
-    cands AS (
-        SELECT DISTINCT a.doc_id AS train_id, b.doc_id AS eval_id
-        FROM banded a JOIN banded b
-          ON a.band = b.band AND a.sig = b.sig
-        WHERE a.doc_id % {split_mod} <> 0 AND b.doc_id % {split_mod} = 0
-          AND ({agree}) / 6.0 >= 0.5),
-    sets_ AS (
-        SELECT doc_id, list_distinct(list(shingle)) AS sset
-        FROM sh GROUP BY doc_id)
-    SELECT train_id, eval_id, jaccard FROM (
-        SELECT c.train_id, c.eval_id,
-               len(list_intersect(sa.sset, sb.sset))
-               / len(list_distinct(list_concat(sa.sset, sb.sset))) AS jaccard
-        FROM cands c
-        JOIN sets_ sa ON sa.doc_id = c.train_id
-        JOIN sets_ sb ON sb.doc_id = c.eval_id) t
-    WHERE jaccard >= 0.7
-    """
-
-
 @register(
     "q94_cross_corpus_near_dups",
-    _cross_corpus_near_dup_sql(),
+    _lsh_near_dup_sql(split_mod=20),
     doc="cross-corpus near-dup decontamination at pair granularity: "
     "MinHash-LSH band join BETWEEN the train split (doc_id % 20 != 0) "
     "and the eval split (== 0) — the eval side is broadcast, the train "

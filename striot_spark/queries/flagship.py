@@ -2137,40 +2137,6 @@ def q229_stream_quantile_bins(
     )
 
 
-def _stage_pair_events(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the co-purchase pair OBSERVATIONS (one row per same-order
-    partkey pair occurrence, NO pre-aggregation) as three mtime-ordered
-    files. Ordered by (u, v), a pair's duplicate observations are
-    contiguous, so the third-splits deliberately cut THROUGH pairs —
-    the same edge's multiplicity accumulates across micro-batch
-    boundaries, which is exactly what the additive ingest sink must
-    get right.
-    Test staging only (``split_thirds``).
-    """
-    from striot_spark.streaming.runtime import split_thirds, stage_ordered_files
-
-    def write(out: str):
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
-        )
-        a = li.alias("a")
-        b = li.alias("b")
-        pe = a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        ).select(
-            F.col("a.l_partkey").alias("u"),
-            F.col("b.l_partkey").alias("v"),
-        )
-        stage_ordered_files(
-            split_thirds(pe, ["u", "v"]), out, order_cols=["u", "v"]
-        )
-        return pe.schema
-
-    return staged(sf_dir, "striot_fr_stream_pairs_", write)
-
-
 def _q239_oracle(rounds: int) -> str:
     """Unrolled WEIGHTED label propagation over the multiplicity
     co-purchase graph (mirrors ``label_propagation(weight=...)``
@@ -2225,9 +2191,11 @@ def q239_lpa_stream_weighted(
 ) -> DataFrame:
 
     from striot_spark.functions.graph import label_propagation, undirected
+    from striot_spark.queries.tpch import stage_pair_observations
     from striot_spark.streaming import runtime as RT
 
-    src = _stage_pair_events(spark, sf_dir)
+    lines = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    src = stage_pair_observations(sf_dir, "striot_fr_stream_pairs_", lines)
     sdf = RT.file_stream(spark, src, max_files_per_trigger=1)
     snap = RT.drain_snapshot(
         RT.incremental_agg_sink,

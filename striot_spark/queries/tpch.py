@@ -1956,19 +1956,21 @@ def _khop_hll(pairs: DataFrame) -> DataFrame:
     return khop_reach_hll(undirected(pairs), hops=2, src="u", dst="v")
 
 
-def _stage_quarter_pair_events(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the QUARTER-window co-purchase pair observations (one row
-    per same-order partkey pair occurrence, duplicates kept) as three
-    mtime-ordered files, ordered by (u, v) so the third-splits cut
-    through pairs — same adversarial discipline as q239's stager, on
-    q241/q243's one-quarter graph. Test staging only (``split_thirds``).
+def stage_pair_observations(sf_dir: str, prefix: str, lines: DataFrame) -> str:
+    """Stage the co-purchase pair OBSERVATIONS of the
+    ``(l_orderkey, l_partkey)`` frame ``lines``: one row per same-order
+    partkey pair occurrence, duplicates kept, no pre-aggregation, as
+    three mtime-ordered files. Ordered by (u, v), a pair's duplicate
+    observations are contiguous, so the third-splits deliberately cut
+    THROUGH pairs — the same edge's multiplicity accumulates across
+    micro-batch boundaries, which is exactly what the additive ingest
+    sink must get right. Test staging only (``split_thirds``); the
+    q239 (all lines) and q245 (one quarter) replays.
     """
     from striot_spark.streaming.runtime import split_thirds, stage_ordered_files
 
     def write(out: str):
-        li = _quarter_lines(spark, sf_dir)
-        a = li.alias("a")
-        b = li.alias("b")
+        a, b = lines.alias("a"), lines.alias("b")
         pe = a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -1982,7 +1984,7 @@ def _stage_quarter_pair_events(spark: SparkSession, sf_dir: str) -> str:
         )
         return pe.schema
 
-    return staged(sf_dir, "striot_q245_pairs_", write)
+    return staged(sf_dir, prefix, write)
 
 
 @register(
@@ -2004,7 +2006,9 @@ def _stage_quarter_pair_events(spark: SparkSession, sf_dir: str) -> str:
 def q245_khop_hll_stream_serve(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    src = _stage_quarter_pair_events(spark, sf_dir)
+    src = stage_pair_observations(
+        sf_dir, "striot_q245_pairs_", _quarter_lines(spark, sf_dir)
+    )
     snap = _served_counts(spark, src, ["u", "v"], gc_grace_batches=1)
     return _khop_hll(snap.select("u", "v"))
 

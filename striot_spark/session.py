@@ -27,7 +27,9 @@ DEFAULT_APP_NAME = "striot-spark"
 
 
 def local_cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
 def get_spark(
@@ -35,7 +37,22 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the session used by queries, tests and bench."""
+    """Build (or fetch) the session used by queries, tests and bench.
+
+    A session that is already running is returned as it is, with only
+    the runtime confs this call names set on it (``shuffle_partitions``,
+    ``extra_conf``): ``getOrCreate`` would re-apply every default below
+    and so re-width the caller's session. Once its context is stopped,
+    the next call builds a fresh session with all of them."""
+    running = SparkSession._instantiatedSession
+    if running is not None and running._sc._jsc is not None:
+        asked = dict(extra_conf or {})
+        if shuffle_partitions:
+            asked.setdefault("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        for k, v in asked.items():
+            if running.conf.isModifiable(k):
+                running.conf.set(k, v)
+        return running
     cpus = local_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

@@ -52,17 +52,7 @@ def test_main_reports_a_raising_query_and_ends_with_the_summary(
     monkeypatch.setattr(
         registry, "all_queries", lambda: {"q_boom": boom, "q_trivial": trivial}
     )
-    # open_session's getOrCreate re-applies the bench confs to this
-    # shared session; put the test session's values back afterwards
-    confs = dict(spark.conf.getAll)
-    try:
-        bench.main()
-    finally:
-        for k, v in dict(spark.conf.getAll).items():
-            if k not in confs:
-                spark.conf.unset(k)
-            elif v != confs[k]:
-                spark.conf.set(k, confs[k])
+    bench.main()
 
     lines = [json.loads(x) for x in capsys.readouterr().out.splitlines()]
     by_metric = {line["metric"]: line for line in lines}

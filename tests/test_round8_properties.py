@@ -16,21 +16,34 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 P = 2_147_483_647
-COEFFS = [(2, 1), (3, 7), (5, 13), (7, 31)]
+COEFFS = [(2, 1), (3, 7), (5, 13), (7, 31), (11, 61), (13, 127)]
 
 
 def _h64(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % P
 
 
-def _bands_of(text: str):
+def _shingles_of(text: str) -> list[str]:
     toks = [t for t in text.split(" ") if t]
-    sh = [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-    if not sh:
+    return [f"{a} {b}" for a, b in zip(toks, toks[1:])]
+
+
+def _minhashes_of(text: str, num_hashes: int) -> list[int]:
+    hs = [_h64(s) for s in _shingles_of(text)]
+    if not hs:
         return []
-    hs = [_h64(s) for s in sh]
-    mh = [min((a * h + b) % P for h in hs) for a, b in COEFFS]
-    return [(0, f"{mh[0]}_{mh[1]}"), (1, f"{mh[2]}_{mh[3]}")]
+    return [min((a * h + b) % P for h in hs) for a, b in COEFFS[:num_hashes]]
+
+
+def _bands_of(text: str, num_hashes: int = 4, bands: int = 2):
+    mh = _minhashes_of(text, num_hashes)
+    if not mh:
+        return []
+    r = num_hashes // bands
+    return [
+        (b, "_".join(str(m) for m in mh[b * r : (b + 1) * r]))
+        for b in range(bands)
+    ]
 
 
 _texts = st.lists(
@@ -75,6 +88,91 @@ def test_near_dup_filter_matches_python_reference(spark):
     implementation of the full minhash/band pipeline, over random
     small-vocab corpora (collision-rich by construction)."""
     _near_dup_prop(spark)
+
+
+def _lsh_pairs_ref(left, right, num_hashes, bands, threshold, ordered):
+    """Brute-force MinHash-LSH pairs: every (i, j) that shares a band,
+    agrees on at least half its minhashes and whose exact shingle
+    Jaccard reaches ``threshold`` -> that Jaccard."""
+    out = {}
+    for i, s in left:
+        for j, t in right:
+            if ordered and not i < j:
+                continue
+            ms, mt = _minhashes_of(s, num_hashes), _minhashes_of(t, num_hashes)
+            if not ms or not mt:
+                continue
+            shared = set(_bands_of(s, num_hashes, bands)) & set(
+                _bands_of(t, num_hashes, bands)
+            )
+            agree = sum(x == y for x, y in zip(ms, mt)) / num_hashes
+            a, b = set(_shingles_of(s)), set(_shingles_of(t))
+            jac = len(a & b) / len(a | b)
+            if shared and agree >= 0.5 and jac >= threshold:
+                out[(i, j)] = jac
+    return out
+
+
+_geometries = st.sampled_from([(6, 3), (4, 2), (6, 2), (4, 4), (2, 1)])
+_BASES = ["row scan hash key fast", "scan hash key fast x", "x fast row scan"]
+# copies of three base docs with short random tails: exact dups, near
+# dups on both sides of the Jaccard threshold, and band-sharing pairs
+# the agreement prefilter drops (random small-vocab texts rarely pair)
+_near_texts = st.lists(
+    st.tuples(
+        st.integers(0, len(_BASES) - 1),
+        st.lists(st.sampled_from(["row", "scan", "hash", "key", "x"]), max_size=3),
+    ),
+    min_size=2,
+    max_size=8,
+).map(lambda picks: [" ".join([*_BASES[i].split(), *tail]) for i, tail in picks])
+
+
+@settings(
+    max_examples=8, deadline=None, suppress_health_check=list(HealthCheck)
+)
+@given(
+    texts=_near_texts,
+    others=_near_texts,
+    geometry=_geometries,
+    threshold=st.sampled_from([0.3, 0.7]),
+)
+def _lsh_pairs_prop(spark, texts, others, geometry, threshold):
+    from striot_spark.functions.dedup import (
+        cross_corpus_near_dup_pairs,
+        lsh_near_dup_pairs,
+    )
+
+    num_hashes, bands = geometry
+    kw = dict(num_hashes=num_hashes, bands=bands, threshold=threshold)
+    rows, other_rows = list(enumerate(texts)), list(enumerate(others))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    odf = spark.createDataFrame(other_rows, "doc_id long, text string")
+    got = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in lsh_near_dup_pairs(df, "doc_id", "text", **kw).collect()
+    }
+    assert got == pytest.approx(
+        _lsh_pairs_ref(rows, rows, num_hashes, bands, threshold, True)
+    )
+    got = {
+        (r["train_id"], r["eval_id"]): r["jaccard"]
+        for r in cross_corpus_near_dup_pairs(
+            df, odf, "doc_id", "text", **kw
+        ).collect()
+    }
+    assert got == pytest.approx(
+        _lsh_pairs_ref(rows, other_rows, num_hashes, bands, threshold, False)
+    )
+
+
+def test_lsh_pair_pipelines_match_python_reference(spark):
+    """The fused near-dup pipeline and its cross-corpus form against a
+    brute-force python compare over every pair, across banding
+    geometries and thresholds: a pair is found iff it shares a band,
+    agrees on at least half its minhashes and its exact shingle
+    Jaccard reaches the threshold."""
+    _lsh_pairs_prop(spark)
 
 
 @settings(
