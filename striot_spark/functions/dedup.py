@@ -645,12 +645,13 @@ def _banding_rows_per_band(num_hashes: int, bands: int) -> int:
 
 
 def _band_rows(
-    sigs: DataFrame, id_col: str, num_hashes: int, bands: int,
+    work: DataFrame, id_col: str, num_hashes: int, bands: int,
     keep_mh: bool = False,
 ) -> DataFrame:
-    """``(id, [mh0..,] band, sig)``: one row per (doc, band), ``sig`` the
-    band's minhashes joined by ``_``. ``keep_mh`` carries the signature
-    columns along for the agreement prefilter of ``_band_pairs``."""
+    """``(id, [mh0..,] band, sig)`` of a work table's signatures: one row
+    per (doc, band), ``sig`` the band's minhashes joined by ``_``.
+    ``keep_mh`` carries the signature columns along for the agreement
+    prefilter of ``_band_pairs``."""
     rows_per_band = _banding_rows_per_band(num_hashes, bands)
     mh_names = [f"mh{i}" for i in range(num_hashes)] if keep_mh else []
     band_cols = [
@@ -666,7 +667,7 @@ def _band_rows(
         )
         for b in range(bands)
     ]
-    return sigs.select(
+    return _signatures(work, id_col, num_hashes).select(
         F.col(id_col), *mh_names, F.explode(F.array(*band_cols)).alias("bs")
     ).select(id_col, *mh_names, "bs.band", "bs.sig")
 
@@ -737,10 +738,7 @@ def _lsh_self_pairs(
 ) -> DataFrame:
     """The candidate stage over one work table: its band rows
     self-joined into ``(id_a, id_b)``, id_a < id_b."""
-    banded = _band_rows(
-        _signatures(work, id_col, num_hashes), id_col, num_hashes, bands,
-        keep_mh=True,
-    )
+    banded = _band_rows(work, id_col, num_hashes, bands, keep_mh=True)
     return _band_pairs(
         banded, banded, id_col, num_hashes, min_sig_agreement,
         ("id_a", "id_b"), ordered=True,
@@ -780,10 +778,10 @@ def lsh_bands(
     signatures as rows — the same band construction as the pair
     family's candidate stage, without its agreement columns. One
     signature scan (zero-shuffle projection, md5 base persisted once
-    inside ``minhash_signatures``) + an in-row band explode; docs too
+    in ``_hash_table``) + an in-row band explode; docs too
     short to shingle emit no rows."""
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    return _band_rows(sigs, id_col, num_hashes, bands)
+    work = _hash_table(df, id_col, text_col, shingle_n, with_sets=False)
+    return _band_rows(work, id_col, num_hashes, bands)
 
 
 def near_dup_filter(
@@ -1322,11 +1320,7 @@ def cross_corpus_near_dup_pairs(
         for d in (train, eval_df)
     )
     tb, eb = (
-        _band_rows(
-            _signatures(w, id_col, num_hashes), id_col, num_hashes, bands,
-            keep_mh=True,
-        )
-        for w in (tw, ew)
+        _band_rows(w, id_col, num_hashes, bands, keep_mh=True) for w in (tw, ew)
     )
     # materialize both caches before the joins consume them twice
     # (band probe + verify): without the force, concurrent subtree
